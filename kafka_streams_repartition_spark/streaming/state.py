@@ -4,28 +4,29 @@
 (``ProductStatsV2.merge``, ``ProductStatsV2.java:48-59``), write back,
 emit the merged value.
 
-Spark-first: ``applyInPandasWithState`` — keyed value state holding the
-V2 aggregate, Arrow-batched. The per-store map is carried as exploded
-(store_id, qty) JSON in state (maps don't round-trip through the state
-schema cleanly); orders/quantity/order_ids merge additively.
+Spark-first: ``migrate_v1_stream`` is a JVM streaming aggregate keyed
+by sku. orders/quantity merge as sums; the per-store maps and order-id
+arrays are collected in state and merged by key / unioned on output,
+all in Catalyst expressions, so no Python worker sits in the restore
+loop. ``migrate_v1_stream_tws`` is the remaining imperative form of the
+same fold (``transformWithStateInPandas`` over ``_merge_one``).
 
-This is the one operator in the repo that genuinely needs imperative
-keyed state — everything else is declarative. At 100 TB the state is
-partitioned by sku across executors by the implicit shuffle of
-``groupBy``; RocksDB (session.py) handles state > memory.
+At 100 TB the state is partitioned by sku across executors by the
+implicit shuffle of ``groupBy``; RocksDB (session.py) handles
+state > memory. The state's partitioning is fixed by its checkpoint, so
+a restart under a different ``shuffle.partitions`` restores it as is.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # Input: exploded V1 snapshot records (one row per sku+store entry,
 # topline repeated) — the shape a changelog replay naturally has.
@@ -78,50 +79,40 @@ def _merge_one(
 
 def migrate_v1_stream(replayed_v1: DataFrame) -> DataFrame:
     """Fold a (streaming) DataFrame of V1 stats records into keyed V2
-    state; emits the merged aggregate per key per micro-batch."""
+    state; emits the merged aggregate per key per micro-batch.
 
-    def fold(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        current = state.get if state.exists else None
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                current = _merge_one(
-                    current,
-                    int(row.orders),
-                    float(row.quantity),
-                    json.loads(row.store_entries_json),
-                    json.loads(row.order_ids_json),
-                )
-        if current is not None:
-            state.update(current)
-            yield pd.DataFrame(
-                {
-                    "sku": [key[0]],
-                    "orders": [current[0]],
-                    "quantity": [current[1]],
-                    "store_entries_json": [current[2]],
-                    "order_ids_json": [current[3]],
-                }
-            )
-
-    return replayed_v1.groupBy("sku").applyInPandasWithState(
-        fold,
-        outputStructType=MERGED_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    A declarative streaming aggregate: per sku, the state store keeps
+    the running sums and the collected store maps / order-id arrays;
+    each emission merges the maps by key (``map_zip_with``) and unions
+    the ids — ``ProductStatsV2.merge`` in Catalyst expressions.  The
+    collected lists grow by one entry per replayed record of a sku (one
+    per V1 snapshot replayed), not per order."""
+    stores_t = "map<string,double>"
+    merged_stores = F.aggregate(
+        F.collect_list(F.from_json("store_entries_json", stores_t)),
+        F.create_map().cast(stores_t),
+        lambda acc, m: F.map_zip_with(
+            acc, m, lambda _, a, b: F.coalesce(a, F.lit(0.0)) + F.coalesce(b, F.lit(0.0))
+        ),
+    )
+    order_ids = F.array_sort(F.array_distinct(F.flatten(
+        F.collect_list(F.from_json("order_ids_json", "array<string>"))
+    )))
+    return replayed_v1.groupBy("sku").agg(
+        F.sum("orders").alias("orders"),
+        F.sum("quantity").alias("quantity"),
+        F.to_json(F.map_from_entries(F.array_sort(F.map_entries(merged_stores))))
+        .alias("store_entries_json"),
+        F.to_json(order_ids).alias("order_ids_json"),
     )
 
 
 def migrate_v1_stream_tws(replayed_v1: DataFrame) -> DataFrame:
     """The same P1 fold on Spark 4's ``transformWithStateInPandas`` —
     the successor API (typed per-key ValueState on the RocksDB
-    provider, which session.py already configures). Kept alongside the
-    ``applyInPandasWithState`` form so both stateful surfaces are
-    covered; the runtime requires ``protobuf`` (the state-server wire
+    provider, which session.py already configures). Kept as the
+    imperative form beside the declarative ``migrate_v1_stream``; the
+    runtime requires ``protobuf`` (the state-server wire
     format), so the equivalence test skips where that isn't installed.
     """
     from pyspark.sql.streaming.stateful_processor import (
@@ -170,8 +161,6 @@ def migrate_v1_stream_tws(replayed_v1: DataFrame) -> DataFrame:
 def v1_typed_to_records(v1_typed: DataFrame) -> DataFrame:
     """Adapter: typed V1 stats (array<struct> per-store) → the flat
     JSON-carrying record shape the migration stream consumes."""
-    from pyspark.sql import functions as F
-
     return v1_typed.select(
         F.col("sku").cast("string").alias("sku"),
         F.col("orders").cast("long").alias("orders"),

@@ -139,6 +139,93 @@ def test_migrate_v1_stream_merges_state(spark, tmp_path):
     assert state == want
 
 
+def test_migrate_v1_stream_restarts_across_partition_counts(spark, tmp_path):
+    """The reference's 4→8 story on P1's own state: drain one V1 replay
+    at 8 shuffle partitions, restart the same checkpoint at 4 with a
+    second replay appended.  The keyed state comes back from the
+    checkpoint (its partitioning is the checkpoint's, not the
+    session's), so the final per-sku state is the V1 stats over both
+    halves, one state row per sku."""
+    ref = generate_reference_tables(spark, n_orders=120, seed=13)
+    li = orders_as_lineitems(ref["purchase_orders"], ref["products"])
+    halves = [
+        li.filter(F.col("l_orderkey") < "AA-5"),
+        li.filter(~(F.col("l_orderkey") < "AA-5")),
+    ]
+    src, ckpt = str(tmp_path / "v1records"), str(tmp_path / "ckpt")
+    emitted = []
+
+    def collect(batch_df, batch_id):
+        emitted.extend(batch_df.collect())
+
+    def drain(half, partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        rec = v1_typed_to_records(product_stats_v1_typed(half))
+        rec.coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(rec.schema).parquet(src)
+        q = (
+            migrate_v1_stream(stream).writeStream.foreachBatch(collect)
+            .outputMode("update").option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        return q
+
+    try:
+        drain(halves[0], 8)
+        q = drain(halves[1], 4)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+    state = {
+        r["sku"]: (
+            r["orders"],
+            r["quantity"],
+            json.loads(r["store_entries_json"]),
+            json.loads(r["order_ids_json"]),
+        )
+        for r in emitted  # batch order: last emission per sku wins
+    }
+    want = {
+        r["sku"]: (
+            r["orders"],
+            float(r["quantity"]),
+            {str(e["store_id"]): e["quantity"] for e in r["quantity_by_store"]},
+            sorted(str(x) for x in r["order_ids"]),
+        )
+        for r in product_stats_v1_typed(li).collect()
+    }
+    assert state == want
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == len(want)
+
+
+def test_migrate_v1_stream_plans_jvm_state_store(spark, tmp_path):
+    """P1 is a JVM streaming aggregate: its plan saves keyed state in
+    the state store and carries no pandas/Python node, so a regression
+    to a Python fold fails here rather than only in the benchmark."""
+    from kafka_streams_repartition_spark.plans import explain_str
+    from kafka_streams_repartition_spark.streaming.state import (
+        MERGED_SCHEMA,
+        V1_RECORD_SCHEMA,
+    )
+
+    stream = spark.readStream.schema(V1_RECORD_SCHEMA).parquet(str(tmp_path))
+    merged = migrate_v1_stream(stream)
+    plan = explain_str(merged, mode="extended")
+    assert "StateStoreSave" in plan, plan
+    for node in (
+        "FlatMapGroupsInPandasWithState",
+        "TransformWithStateInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "PythonUDF",
+    ):
+        assert node not in plan, plan
+    assert [(f.name, f.dataType) for f in merged.schema] == [
+        (f.name, f.dataType) for f in MERGED_SCHEMA
+    ]
+
+
 def test_dim_refresh_lands_on_restart(spark, tmp_path):
     """KTable-refresh semantics of the stream-static join: a dimension
     update is invisible to the running plan (file listing pinned) and
@@ -308,8 +395,10 @@ def test_stream_pickup_orders_live_dims_update_lands_next_batch(
 
 
 def test_migrate_v1_stream_tws_matches_legacy_api(spark, tmp_path):
-    """Both stateful APIs (applyInPandasWithState and Spark 4's
-    transformWithStateInPandas) fold the same replay to the same state."""
+    """P1's remaining imperative form (Spark 4's
+    transformWithStateInPandas over _merge_one) folds a replay to the
+    V1 stats of the whole replay — the state the declarative
+    migrate_v1_stream is held to."""
     pytest.importorskip(
         "google.protobuf",
         reason="transformWithState needs protobuf (state-server wire format)",
