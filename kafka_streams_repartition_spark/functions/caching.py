@@ -1,9 +1,13 @@
-"""Session-lifetime memoization of persisted DataFrames.
+"""Session-lifetime memoization of shared artifacts: :class:`Memo`.
 
-Several operators memoize one ``.cache()``d derived frame per input
-frame (one grams frame per documents frame, one trained-classifier
-scored frame per documents frame) so re-entrant queries never recompute
-or leak a copy per invocation.
+Operators share derived artifacts across queries through one memo type:
+cached frames (one grams frame, one trained-classifier scored frame per
+documents frame), local-checkpoint frames (the MMR pool and pairs),
+and driver values (trained centroid rows, truth sets, BPE merges,
+corpus counts).  Every entry is keyed by the identity of its key frame
+plus ``parts``, the module constants its build reads, so a runtime
+override of a shaping constant builds afresh instead of serving a value
+built under the old one.
 
 Eviction discipline (round-9 advisor finding): the earlier
 ``WeakKeyDictionary`` dropped its ENTRY when the key frame was
@@ -16,20 +20,25 @@ builds its grams over a transient gated frame and returns a plan that
 still references the cached relation — unpersisting at key GC forced
 the downstream plan to re-derive, doubling its scans).
 
-:class:`MemoSlots` therefore bounds storage the other way round: a
-small fixed-capacity LRU whose RESIDENT keys are strongly referenced
-(an entry can never vanish while it is current, so downstream plans
-keep their ``InMemoryRelation``), and whose EVICTED frames are
-unpersisted at replacement time — total persisted storage per cache is
+:class:`Memo` therefore bounds storage the other way round: a small
+fixed-capacity LRU whose RESIDENT keys are strongly referenced (an
+entry can never vanish while it is current, so downstream plans keep
+their ``InMemoryRelation``), and whose EVICTED values are released at
+replacement time — a frame value is ``.cache()``d when stored and
+unpersisted when evicted, so total persisted storage per memo is
 ≤ capacity copies, regardless of how many distinct input frames a
-session touches.
+session touches.  Driver values hold no executor storage and release
+nothing; a memo of local-checkpoint frames passes a ``release`` that
+calls :func:`release_local_checkpoint` on them.
 """
 
 from __future__ import annotations
 
 import logging
+import weakref
 from collections import OrderedDict
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
 
@@ -40,30 +49,18 @@ _log = logging.getLogger(__name__)
 # counted unconditionally so tests can assert the failure is visible
 _release_failures = 0
 
-# process-lifetime shared-frame memo traffic (every MemoSlots instance
-# bumps these): bench.py records per-query DELTAS so a committed bench
-# artifact shows which queries rode a warm shared frame and which paid
-# the build — the mechanism behind order-dependent suite timings
-# (BENCHNOTES.md), now measured instead of inferred
-_memo_hits = 0
-_memo_misses = 0
+# every live Memo: bench.py records per-query DELTAS of the summed
+# hit/miss counters so a committed bench artifact shows which queries
+# rode a warm shared artifact and which paid the build — the mechanism
+# behind order-dependent suite timings (BENCHNOTES.md), now measured
+# instead of inferred
+_MEMOS: weakref.WeakSet[Memo] = weakref.WeakSet()
 
 
 def memo_counters() -> tuple[int, int]:
-    """(hits, misses) across every :class:`MemoSlots` in the process."""
-    return (_memo_hits, _memo_misses)
-
-
-def count_memo(hit: bool) -> None:
-    """Manual bump for the bespoke identity-keyed memos that don't go
-    through :class:`MemoSlots` (``_KCENTER_MEMO``/``_MMR_MEMO``/
-    ``_NVEC_MEMO``) so :func:`memo_counters` sees ALL shared-frame
-    traffic."""
-    global _memo_hits, _memo_misses
-    if hit:
-        _memo_hits += 1
-    else:
-        _memo_misses += 1
+    """(hits, misses) summed over every :class:`Memo` in the process."""
+    memos = list(_MEMOS)
+    return (sum(m.hits for m in memos), sum(m.misses for m in memos))
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -108,59 +105,68 @@ def release_local_checkpoint(df: DataFrame) -> None:
         _release_failures += 1
 
 
-def _unpersist_quietly(df: DataFrame) -> None:
-    # blocking=False: eviction must never stall the caller; a stopped
-    # session raises here, and its blocks are already gone with the JVM
-    try:
-        df.unpersist(blocking=False)
-    except Exception:
-        pass
+def _release_value(value: Any) -> None:
+    # only a frame holds executor storage; blocking=False: eviction must
+    # never stall the caller; a stopped session raises here, and its
+    # blocks are already gone with the JVM
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist(blocking=False)
+        except Exception:
+            pass
 
 
-class MemoSlots:
-    """Capacity-bounded identity-keyed memo of persisted frames.
+class Memo:
+    """Capacity-bounded memo keyed by ``(id(key_frame), *parts)``.
 
-    ``get_or_build(key, build)`` returns the cached frame for ``key``
-    (identity semantics — DataFrames hash by id), building and
-    ``.cache()``-ing it on first use; the least-recently-used entry is
-    unpersisted and dropped when capacity is exceeded.
+    ``get(key, parts, build)`` returns the value stored for ``key`` and
+    ``parts``, building it on first use; ``store(key, parts, value)``
+    writes without reading (a producer query that always builds fresh
+    shares its result with the consumers).  A frame value is
+    ``.cache()``d when stored.  The least-recently-used entry is
+    dropped when capacity is exceeded and its value released: by
+    ``release`` when given, else a frame is unpersisted and a driver
+    value releases nothing.  ``hits``/``misses`` count ``get`` calls.
     """
 
-    def __init__(self, capacity: int = 2) -> None:
+    def __init__(
+        self, capacity: int, release: Callable[[Any], None] = _release_value
+    ) -> None:
         self._capacity = capacity
-        # key: (id(frame), *shaping-constant parts)
-        self._slots: OrderedDict[tuple, tuple[DataFrame, DataFrame]] = (
-            OrderedDict()
-        )
+        self._release = release
+        # the stored key reference keeps the key frame alive while
+        # resident, so its id cannot be reused by a different frame
+        self._slots: OrderedDict[tuple, tuple[object, Any]] = OrderedDict()
+        self.hits = 0
+        self.misses = 0
+        _MEMOS.add(self)
 
-    def get_or_build(
-        self,
-        key: DataFrame,
-        build: Callable[[], DataFrame],
-        parts: tuple = (),
-    ) -> DataFrame:
-        """``parts``: optional plan-shaping constants (gram order,
-        band counts, caps) folded into the slot key next to the frame
-        identity, so a runtime override of a shaping constant can
-        never serve a frame built under the old value (the
-        ``_bf_truth`` key discipline, available to every MemoSlots
-        user)."""
-        global _memo_hits, _memo_misses
+    def get(self, key: object, parts: tuple, build: Callable[[], Any]) -> Any:
         k = (id(key), *parts)
-        hit = self._slots.get(k)
-        if hit is not None:
-            _memo_hits += 1
+        if k in self._slots:
+            self.hits += 1
             self._slots.move_to_end(k)
-            return hit[1]
-        _memo_misses += 1
-        val = build().cache()
-        # the stored key reference keeps `key` alive while resident, so
-        # its id cannot be reused by a different frame
-        self._slots[k] = (key, val)
+            return self._slots[k][1]
+        self.misses += 1
+        return self._put(k, key, build())
+
+    def store(self, key: object, parts: tuple, value: Any) -> None:
+        self._put((id(key), *parts), key, value)
+
+    def _put(self, k: tuple, key: object, value: Any) -> Any:
+        if isinstance(value, DataFrame):
+            value = value.cache()
+        self._slots[k] = (key, value)
+        self._slots.move_to_end(k)
         while len(self._slots) > self._capacity:
-            _, (_, old) = self._slots.popitem(last=False)
-            _unpersist_quietly(old)
-        return val
+            _, (_, evicted) = self._slots.popitem(last=False)
+            self._release(evicted)
+        return value
+
+    def clear(self) -> None:
+        while self._slots:
+            _, (_, value) = self._slots.popitem(last=False)
+            self._release(value)
 
     def __len__(self) -> int:
         return len(self._slots)

@@ -36,13 +36,12 @@ from __future__ import annotations
 
 import os
 import re
-from collections import OrderedDict
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.caching import MemoSlots, release_local_checkpoint
+from ..functions.caching import Memo, release_local_checkpoint
 from ..functions.text import word_ngrams, words
 from ..functions.vectors import dot_unrolled, norm_unrolled, to_double_array
 from ..sources.tables import fan_out
@@ -75,12 +74,12 @@ def _doc_gram_arrays(documents: DataFrame) -> DataFrame:
 # query twice; corpus_curation re-enters dedup_minhash_lsh).  The slots
 # are capacity-bounded: evicted frames unpersist at replacement, so a
 # session touching many distinct docs frames holds ≤2 cached copies.
-_GRAMS_CACHE = MemoSlots(capacity=2)
+_GRAMS_CACHE = Memo(2)
 
 
 def _doc_gram_arrays_cached(documents: DataFrame) -> DataFrame:
-    return _GRAMS_CACHE.get_or_build(
-        documents, lambda: _doc_gram_arrays(documents)
+    return _GRAMS_CACHE.get(
+        documents, (NGRAM_N,), lambda: _doc_gram_arrays(documents)
     )
 
 
@@ -1082,14 +1081,15 @@ def _hash_bucket(col: F.Column) -> F.Column:
 RNS_NGRAM = 13  # the GPT-3 appendix-C decontamination gram order
 
 # One cached distinct (doc_id, gh) 13-gram pair frame per documents
-# frame (the _GRAMS_CACHE discipline): repeated_ngram_scan references
-# the frame three times (recurrence rollup, per-doc verdict, per-doc
-# totals) and repeated_ngram_summary three more — without the cache
-# each reference re-ran the full tokenize + 13-gram + md5 transform
-# over the corpus text (measured: 6 text passes across the pair at
-# sf0.1 for one logical gram table).  The gram order rides the slot
-# key, so a runtime RNS_NGRAM override can never serve stale pairs.
-_RNS_DG_CACHE = MemoSlots(capacity=2)
+# frame: repeated_ngram_scan references the frame three times
+# (recurrence rollup, per-doc verdict, per-doc totals) and
+# repeated_ngram_summary three more — without the cache each reference
+# re-ran the full tokenize + 13-gram + md5 transform over the corpus
+# text (measured: 6 text passes across the pair at sf0.1 for one
+# logical gram table).  Capacity 1: the exploded pairs are
+# corpus-sized, unlike every other memo's value, so at most one copy
+# stays resident.
+_RNS_DG_CACHE = Memo(1)
 
 
 def _rns_dg(t: dict[str, DataFrame]) -> DataFrame:
@@ -1107,9 +1107,7 @@ def _rns_dg(t: dict[str, DataFrame]) -> DataFrame:
             "doc_id", F.explode_outer("ghs").alias("gh")
         ).filter(F.col("gh").isNotNull())
 
-    return _RNS_DG_CACHE.get_or_build(
-        t["documents"], build, parts=(RNS_NGRAM,)
-    )
+    return _RNS_DG_CACHE.get(t["documents"], (RNS_NGRAM,), build)
 
 
 def repeated_ngram_scan(t: dict[str, DataFrame]) -> DataFrame:
@@ -1578,14 +1576,15 @@ _H64_DIGITS = "md5(tok) || md5(tok || '|s2')"
 
 # one cached code table per documents frame: the 64-vote pass is the
 # expensive half of BOTH Hamming queries (index + design curve), so a
-# session running them back-to-back pays it once (the _GRAMS_CACHE
-# discipline — capacity-bounded, evicted frames unpersisted)
-_H64_CACHE = MemoSlots(capacity=2)
+# session running them back-to-back pays it once
+_H64_CACHE = Memo(2)
 
 
 def _simhash64_codes_cached(documents: DataFrame) -> DataFrame:
-    return _H64_CACHE.get_or_build(
-        documents, lambda: _simhash64_codes(fan_out(documents))
+    return _H64_CACHE.get(
+        documents,
+        (HAMMING_BITS, HAMMING_CHUNKS, HAMMING_CHUNK_BITS),
+        lambda: _simhash64_codes(fan_out(documents)),
     )
 
 
@@ -1990,90 +1989,52 @@ def _derived_planes_sql() -> str:
 # three embedding-dedup acceptance gates (dedup_embedding_recall,
 # semdedup_recall, dedup_stacked_recall): identical construction in all
 # three, each previously re-running the capped query-vs-corpus scan to
-# rebuild it.  Cached + LRU-unpersisted (the MemoSlots discipline,
-# hand-rolled because the key must carry the EFFECTIVE cap/threshold so
-# a monkeypatched EMBDUP_QUERY_CAP can never serve a stale truth set)
-# rather than a collected list: the pair count is data-dependent
-# (threshold survivors), not k-bounded.  The declared dedup_embedding
-# query itself never consults the memo — it always computes fresh.
-_EMBDUP_TRUTH_CACHE: "OrderedDict[tuple, tuple[DataFrame, DataFrame]]" = (
-    OrderedDict()
-)
+# rebuild it.  A cached frame rather than a collected list: the pair
+# count is data-dependent (threshold survivors), not k-bounded.  The
+# declared dedup_embedding query itself never consults the memo — it
+# always computes fresh.
+_EMBDUP_TRUTH_CACHE = Memo(2)
 
 
 def _embdup_truth_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    from ..functions.caching import count_memo
-
-    key = t["embeddings"]
-    k = (id(key), EMBDUP_QUERY_CAP, EMBED_COSINE_THRESHOLD)
-    hit = _EMBDUP_TRUTH_CACHE.get(k)
-    if hit is not None:
-        count_memo(True)
-        _EMBDUP_TRUTH_CACHE.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    val = (
-        dedup_embedding(t)
+    return _EMBDUP_TRUTH_CACHE.get(
+        t["embeddings"],
+        (EMBDUP_QUERY_CAP, EMBED_COSINE_THRESHOLD),
+        lambda: dedup_embedding(t)
         .select(
             F.least("query_id", "cand_id").alias("lo"),
             F.greatest("query_id", "cand_id").alias("hi"),
         )
-        .distinct()
-        .cache()
+        .distinct(),
     )
-    _EMBDUP_TRUTH_CACHE[k] = (key, val)
-    while len(_EMBDUP_TRUTH_CACHE) > 2:
-        _, (_, old) = _EMBDUP_TRUTH_CACHE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    return val
 
 
 # The two verified near-dup PAIR FAMILIES are consumed all over the
 # module (clusters/CC, quality-aware keepers, stacking, the recall
 # gates, the selection/text pipelines' loser sets) and each consumer
 # previously re-ran the full banded index build.  Shared-intermediate
-# memos (cache + LRU-unpersist, keys carry the plan-shaping knobs so a
-# monkeypatched constant can never serve a stale frame); the declared
-# dedup_minhash_lsh / dedup_embedding_lsh queries never consult them.
-_MINHASH_PAIRS_CACHE = MemoSlots(capacity=2)
+# memos; the declared dedup_minhash_lsh / dedup_embedding_lsh queries
+# never consult them.
+_MINHASH_PAIRS_CACHE = Memo(2)
 
 
 def _minhash_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    return _MINHASH_PAIRS_CACHE.get_or_build(
+    return _MINHASH_PAIRS_CACHE.get(
         t["documents"],
+        (NGRAM_N, MINHASH_SEEDS, MINHASH_BANDS, JACCARD_THRESHOLD),
         lambda: dedup_minhash_lsh(t),
-        parts=(NGRAM_N, MINHASH_SEEDS, MINHASH_BANDS, JACCARD_THRESHOLD),
     )
 
 
-_EMBLSH_PAIRS_CACHE: "OrderedDict[tuple, tuple[DataFrame, DataFrame]]" = (
-    OrderedDict()
-)
+_EMBLSH_PAIRS_CACHE = Memo(2)
 
 
 def _emblsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
-    from ..functions.caching import count_memo
-
-    key = t["embeddings"]
-    k = (id(key), derived_band_planes(_emb_n_vecs(t)), EMBDUP_BUCKET_CAP)
-    hit = _EMBLSH_PAIRS_CACHE.get(k)
-    if hit is not None:
-        count_memo(True)
-        _EMBLSH_PAIRS_CACHE.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    val = dedup_embedding_lsh(t).cache()
-    _EMBLSH_PAIRS_CACHE[k] = (key, val)
-    while len(_EMBLSH_PAIRS_CACHE) > 2:
-        _, (_, old) = _EMBLSH_PAIRS_CACHE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    return val
+    return _EMBLSH_PAIRS_CACHE.get(
+        t["embeddings"],
+        (derived_band_planes(_emb_n_vecs(t)), EMBDUP_BUCKET_CAP),
+        lambda: dedup_embedding_lsh(t),
+    )
 
 
 def _emb_n_vecs(t: dict[str, DataFrame]) -> int:

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.caching import MemoSlots
+from ..functions.caching import Memo
 from ..functions.text import word_ngrams, words
 from ..sources.tables import fan_out
 
@@ -399,15 +399,15 @@ BIAS_BUCKET = -1
 # per (session, sf_dir)): quality_logreg, quality_auc and
 # quality_calibration all read the SAME trained classifier's output, and
 # retraining the 6-round GD once per gate tripled the family's bench
-# cost for identical rows — the _GRAMS_CACHE discipline applied to the
-# model artifact.  Capacity-bounded slots: evicted frames unpersist at
-# replacement, so many distinct docs frames hold ≤2 cached copies.
-_LOGREG_CACHE = MemoSlots(capacity=2)
+# cost for identical rows.
+_LOGREG_CACHE = Memo(2)
 
 
 def _quality_scored_cached(t: dict[str, DataFrame]) -> DataFrame:
-    return _LOGREG_CACHE.get_or_build(
-        t["documents"], lambda: quality_logreg(t)
+    return _LOGREG_CACHE.get(
+        t["documents"],
+        (LOGREG_BUCKETS, LOGREG_ROUNDS, LOGREG_LR, BIAS_BUCKET),
+        lambda: quality_logreg(t),
     )
 
 
@@ -2168,10 +2168,10 @@ RHO_TOP_N = 100  # selected batch size
 # round-10 body localCheckpoint()ed this frame per INVOCATION and never
 # released it, so repeated calls in one session (test suites, multi-sf
 # benches) accumulated pinned executor storage — exactly the retention
-# pattern MemoSlots exists to bound (r10 advisor finding).  cache()
-# gives the same compute-once sharing across the four consumers below;
+# pattern Memo exists to bound (r10 advisor finding).  cache() gives
+# the same compute-once sharing across the four consumers below;
 # eviction unpersists at replacement, so ≤2 copies survive a session.
-_RHO_TF_CACHE = MemoSlots(capacity=2)
+_RHO_TF_CACHE = Memo(2)
 
 
 def rho_loss_select(t: dict[str, DataFrame]) -> DataFrame:
@@ -2223,7 +2223,7 @@ def rho_loss_select(t: dict[str, DataFrame]) -> DataFrame:
             )
         )
 
-    tf = _RHO_TF_CACHE.get_or_build(docs, _build_tf)
+    tf = _RHO_TF_CACHE.get(docs, (RHO_HOLDOUT_MOD,), _build_tf)
     vocab = tf.select("term").distinct().agg(F.count(F.lit(1)).alias("v"))
     ct_tr = (
         tf.filter(~F.col("holdout"))

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.caching import count_memo, release_local_checkpoint
+from ..functions.caching import Memo, release_local_checkpoint
 from ..functions.hashing import hex_sign
 # hot scan paths use ONLY the unrolled forms: the HOF dot/norm evaluate
 # interpreted per row (per-row array allocation), the flat sums compile
@@ -103,28 +103,13 @@ def _ann_qcap_sql() -> str:
     )
 
 
-# identity-keyed memo of the raw embeddings frame's row count (the
-# MemoSlots discipline, scalar-valued): the cap derivation needs ONE
-# count of the raw table per distinct frame — the stored key reference
-# keeps the frame alive while resident so its id cannot be reused
-from collections import OrderedDict as _OrderedDict
-
-_NVEC_MEMO: "_OrderedDict[int, tuple[DataFrame, int]]" = _OrderedDict()
+# the raw embeddings frame's row count: the cap derivation needs ONE
+# count of the raw table per distinct frame
+_NVEC_MEMO = Memo(8)
 
 
 def _n_vecs(emb_raw: DataFrame) -> int:
-    k = id(emb_raw)
-    hit = _NVEC_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _NVEC_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    n = emb_raw.count()
-    _NVEC_MEMO[k] = (emb_raw, n)
-    while len(_NVEC_MEMO) > 8:
-        _NVEC_MEMO.popitem(last=False)
-    return n
+    return _NVEC_MEMO.get(emb_raw, (), emb_raw.count)
 
 
 def _ann_qcap(t: dict[str, DataFrame]) -> int:
@@ -132,7 +117,7 @@ def _ann_qcap(t: dict[str, DataFrame]) -> int:
     return derived_ann_query_cap(_n_vecs(t["embeddings"]))
 
 
-_QSUBSET_MEMO: "_OrderedDict[int, tuple[DataFrame, int]]" = _OrderedDict()
+_QSUBSET_MEMO = Memo(8)
 
 
 def _qsubset_n(emb_raw: DataFrame) -> int:
@@ -143,18 +128,11 @@ def _qsubset_n(emb_raw: DataFrame) -> int:
     cap lowest vec_ids of the subset"), so this one tiny count is what
     lets a consumer prove its query list equals the memoized truth
     set's before sharing it (see :func:`mrl_recall_curve`)."""
-    k = id(emb_raw)
-    hit = _QSUBSET_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _QSUBSET_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    n = emb_raw.filter(F.col("vec_id") % QUERY_MOD == 0).count()
-    _QSUBSET_MEMO[k] = (emb_raw, n)
-    while len(_QSUBSET_MEMO) > 8:
-        _QSUBSET_MEMO.popitem(last=False)
-    return n
+    return _QSUBSET_MEMO.get(
+        emb_raw,
+        (QUERY_MOD,),
+        lambda: emb_raw.filter(F.col("vec_id") % QUERY_MOD == 0).count(),
+    )
 
 
 def _corpus(t: dict[str, DataFrame]) -> DataFrame:
@@ -448,14 +426,17 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
     trainer — together they close the IVF index lifecycle.
 
     As the declared PRODUCER query it always trains fresh
-    (``_kmeans_train_uncached``), never consulting ``_KMEANS_MEMO``:
-    its bench row must measure Lloyd training, not a memo lookup.
-    Consumers share the trained model via :func:`kmeans_model`.
+    (``_kmeans_train_uncached``), never reading ``_KMEANS_MEMO``: its
+    bench row must measure Lloyd training, not a memo lookup.  It
+    stores the trained model there, so the consumers sharing it via
+    :func:`kmeans_model` do not run the same Lloyd loop again.
     """
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
     schema, rows = _kmeans_train_uncached(t)
+    # shared with the consumers under _kmeans_cent_rows's key
+    _KMEANS_MEMO.store(t["embeddings"], (KMEANS_ITER, DIM), (schema, rows))
     cent = emb.sparkSession.createDataFrame(rows, schema)
     return _assign_cells(emb, cent).select("vec_id", "cell")
 
@@ -485,7 +466,7 @@ def kmeans_model(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     return assign.select("vec_id", "cell"), cent
 
 
-_KMEANS_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+_KMEANS_MEMO = Memo(4)
 
 
 def _kmeans_cent_rows(t: dict[str, DataFrame]):
@@ -493,19 +474,9 @@ def _kmeans_cent_rows(t: dict[str, DataFrame]):
     identity-keyed on the loader-memoized embeddings frame; the
     iteration budget and dimensionality ride the key so a runtime
     override can never serve a model trained under the old values."""
-    key = t["embeddings"]
-    k = (id(key), KMEANS_ITER, DIM)
-    hit = _KMEANS_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _KMEANS_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _kmeans_train_uncached(t)
-    _KMEANS_MEMO[k] = (key, out)
-    while len(_KMEANS_MEMO) > 4:
-        _KMEANS_MEMO.popitem(last=False)
-    return out
+    return _KMEANS_MEMO.get(
+        t["embeddings"], (KMEANS_ITER, DIM), lambda: _kmeans_train_uncached(t)
+    )
 
 
 def _kmeans_train_uncached(t: dict[str, DataFrame]):
@@ -872,7 +843,7 @@ def _centroids(emb_raw: DataFrame) -> DataFrame:
     )
 
 
-_LCENT_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+_LCENT_MEMO = Memo(4)
 
 
 def _label_centroids(t: dict[str, DataFrame]) -> DataFrame:
@@ -883,19 +854,12 @@ def _label_centroids(t: dict[str, DataFrame]) -> DataFrame:
     re-ran the corpus aggregation to rebuild it.  DIM rides the key
     (the seed table is per-dimension positional averages)."""
     key = t["embeddings"]
-    k = (id(key), DIM)
-    hit = _LCENT_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _LCENT_MEMO.move_to_end(k)
-        schema, rows = hit[1]
-    else:
-        count_memo(False)
+
+    def build():
         cent = _centroids(fan_out(key))
-        schema, rows = cent.schema, cent.collect()
-        _LCENT_MEMO[k] = (key, (schema, rows))
-        while len(_LCENT_MEMO) > 4:
-            _LCENT_MEMO.popitem(last=False)
+        return cent.schema, cent.collect()
+
+    schema, rows = _LCENT_MEMO.get(key, (DIM,), build)
     return key.sparkSession.createDataFrame(rows, schema)
 
 
@@ -1686,7 +1650,7 @@ WHERE rank <= {TOP_K}
 ANN_TOPK_IVFPQ_RESIDUAL_ORACLE = _ivfpq_residual_oracle(N_PROBE, RPQ_K)
 
 
-_BF_TRUTH_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+_BF_TRUTH_MEMO = Memo(4)
 
 
 def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
@@ -1703,19 +1667,12 @@ def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
     the EFFECTIVE query cap so a runtime ``ANN_QUERY_CAP`` override
     (monkeypatched or env) can never serve a stale truth set."""
     key = t["embeddings"]
-    k = (id(key), _ann_qcap(t))
-    hit = _BF_TRUTH_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _BF_TRUTH_MEMO.move_to_end(k)
-        schema, rows = hit[1]
-    else:
-        count_memo(False)
+
+    def build():
         truth = ann_topk_bruteforce(t).select("query_id", "cand_id")
-        schema, rows = truth.schema, truth.collect()
-        _BF_TRUTH_MEMO[k] = (key, (schema, rows))
-        while len(_BF_TRUTH_MEMO) > 4:
-            _BF_TRUTH_MEMO.popitem(last=False)
+        return truth.schema, truth.collect()
+
+    schema, rows = _BF_TRUTH_MEMO.get(key, (_ann_qcap(t),), build)
     return key.sparkSession.createDataFrame(rows, schema)
 
 
@@ -3847,16 +3804,14 @@ def _kc_dist_to(v_lit: list[float], nrm: float) -> F.Column:
     return F.round(F.lit(1.0) - cos, 6)
 
 
-# identity-keyed memo of the selection loop's k center rows, keyed on
-# the raw embeddings frame (the loader memoizes that per (session,
-# sf_dir), the _LOGREG_CACHE discipline): kcenter_select and
-# kcenter_coverage share the SAME k−1 driver-synchronous rounds, and
-# before this memo coverage re-ran the whole loop it had just watched
-# select run — 2×(k−1) rounds per bench sweep, 18.3 s median at sf0.1
-# with a 11.5–34.2 s spread (VERDICT r11 item 3).  The value is k
-# plain Python tuples (≤ k × DIM floats), not a frame — nothing to
-# unpersist on eviction.
-_KCENTER_MEMO: "_OrderedDict[int, tuple[DataFrame, list]]" = _OrderedDict()
+# memo of the selection loop's k center rows, keyed on the raw
+# embeddings frame (the loader memoizes that per (session, sf_dir)):
+# kcenter_select and kcenter_coverage share the SAME k−1
+# driver-synchronous rounds, and before this memo coverage re-ran the
+# whole loop it had just watched select run — 2×(k−1) rounds per bench
+# sweep, 18.3 s median at sf0.1 with a 11.5–34.2 s spread (VERDICT r11
+# item 3).  The value is k plain Python tuples (≤ k × DIM floats).
+_KCENTER_MEMO = Memo(4)
 
 
 def _kcenter_centers(
@@ -3867,19 +3822,9 @@ def _kcenter_centers(
     per selected center — k driver rows total, the bounded collect.
     Memoized per embeddings frame so the coverage histogram costs one
     corpus scan, not a second selection loop."""
-    key = t["embeddings"]
-    k = id(key)
-    hit = _KCENTER_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _KCENTER_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _kcenter_centers_uncached(t)
-    _KCENTER_MEMO[k] = (key, out)
-    while len(_KCENTER_MEMO) > 4:
-        _KCENTER_MEMO.popitem(last=False)
-    return out
+    return _KCENTER_MEMO.get(
+        t["embeddings"], (KCENTER_K, DIM), lambda: _kcenter_centers_uncached(t)
+    )
 
 
 def _kcenter_centers_uncached(
@@ -4185,12 +4130,18 @@ MMR_K = 5       # diversified picks per query
 MMR_LAMBDA = 0.7  # relevance weight; 1-λ penalizes similarity to picks
 
 
-# identity-keyed memo on the loader-memoized embeddings frame (the
-# _kcenter_centers discipline): the gate calls mmr_rerank on the same
-# corpus it builds its own pool for — without the memo the bounded
-# shortlist scan and the |Q|·POOL² pair build ran TWICE per gate
-# invocation (isolated sf0.1 median 27.9 s pre-memo)
-_MMR_MEMO: "_OrderedDict[int, tuple[DataFrame, tuple]]" = _OrderedDict()
+def _release_checkpoints(frames: tuple[DataFrame, ...]) -> None:
+    """Eviction release of an ``_MMR_MEMO`` entry: both checkpoint
+    frames' blocks go eagerly instead of waiting for JVM-side GC."""
+    for frame in frames:
+        release_local_checkpoint(frame)
+
+
+# memo on the loader-memoized embeddings frame: the gate calls
+# mmr_rerank on the same corpus it builds its own pool for — without
+# the memo the bounded shortlist scan and the |Q|·POOL² pair build ran
+# TWICE per gate invocation (isolated sf0.1 median 27.9 s pre-memo)
+_MMR_MEMO = Memo(2, _release_checkpoints)
 
 
 def _mmr_pool_pairs(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
@@ -4200,23 +4151,11 @@ def _mmr_pool_pairs(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     Both localCheckpoint so the greedy rounds' plans stay flat; the
     pair memoizes per embeddings frame so the gate's two consumers
     share one build."""
-    key = t["embeddings"]
-    k = id(key)
-    hit = _MMR_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _MMR_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = _mmr_pool_pairs_uncached(t)
-    _MMR_MEMO[k] = (key, out)
-    while len(_MMR_MEMO) > 2:
-        # release the evicted entry's checkpoint blocks eagerly (the
-        # MemoSlots discipline) instead of waiting for JVM-side GC
-        _, (_, evicted) = _MMR_MEMO.popitem(last=False)
-        for frame in evicted:
-            release_local_checkpoint(frame)
-    return out
+    return _MMR_MEMO.get(
+        t["embeddings"],
+        (_ann_qcap(t), MMR_POOL, DIM),
+        lambda: _mmr_pool_pairs_uncached(t),
+    )
 
 
 def _mmr_pool_pairs_uncached(

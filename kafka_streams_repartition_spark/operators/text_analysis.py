@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import Memo
 from ..functions.text import word_ngrams, words
 from ..sources.tables import fan_out
 
@@ -1027,37 +1028,22 @@ _BPE_C = "\x1f"
 
 
 # the collected (lhs, rhs) merge list of the trained BPE tokenizer,
-# memoized per documents frame (the frozen-model discipline of
-# similarity._kcenter_centers: K tiny driver rows): bpe_encode and
+# memoized per documents frame (K tiny driver rows): bpe_encode and
 # tokenizer_fertility each re-ran the full K-round trainer to rebuild
 # the identical table.  The declared bpe_train_merges query itself
 # never consults the memo.
-from collections import OrderedDict as _OrderedDict  # noqa: E402
-
-_BPE_MERGES_MEMO: "_OrderedDict[int, tuple[DataFrame, list]]" = _OrderedDict()
+_BPE_MERGES_MEMO = Memo(4)
 
 
 def _bpe_merges(t: dict[str, DataFrame]) -> list[tuple[str, str]]:
-    from ..functions.caching import count_memo
-
-    key = t["documents"]
-    # merge budget rides the key: a runtime BPE_MERGE_ROUNDS override
-    # can never serve a tokenizer trained under the old budget
-    k = (id(key), BPE_MERGE_ROUNDS)
-    hit = _BPE_MERGES_MEMO.get(k)
-    if hit is not None:
-        count_memo(True)
-        _BPE_MERGES_MEMO.move_to_end(k)
-        return hit[1]
-    count_memo(False)
-    out = [
-        (r["lhs"], r["rhs"])
-        for r in bpe_train_merges(t).orderBy("round").collect()
-    ]
-    _BPE_MERGES_MEMO[k] = (key, out)
-    while len(_BPE_MERGES_MEMO) > 4:
-        _BPE_MERGES_MEMO.popitem(last=False)
-    return out
+    return _BPE_MERGES_MEMO.get(
+        t["documents"],
+        (BPE_MERGE_ROUNDS,),
+        lambda: [
+            (r["lhs"], r["rhs"])
+            for r in bpe_train_merges(t).orderBy("round").collect()
+        ],
+    )
 
 
 def bpe_train_merges(t: dict[str, DataFrame]) -> DataFrame:

@@ -534,28 +534,74 @@ def test_hamming_neighbors_query_set_capped(t, monkeypatch):
     assert key(out) == key(full[full["query_id"].isin(capped_ids)])
 
 
-def test_memo_slots_bounded_and_unpersist_on_eviction(spark):
-    """The memoization helper bounds executor storage to its capacity:
+def test_memo_bounded_and_releases_on_eviction(spark):
+    """The one memo type bounds executor storage to its capacity:
     resident entries stay cached (and their keys strongly referenced —
     a downstream plan built over a transient key must keep its
     InMemoryRelation, the pretrain_pipeline regression), and the
     least-recently-used frame is UNPERSISTED when capacity is exceeded
     (the round-9 advisor's storage-leak finding — the old
     WeakKeyDictionary left evicted entries' blocks pinned for the
-    session)."""
-    from kafka_streams_repartition_spark.functions.caching import MemoSlots
+    session).  Driver values release nothing, and memo_counters() is
+    the sum of every memo's own hits and misses."""
+    from kafka_streams_repartition_spark.functions.caching import (
+        Memo,
+        memo_counters,
+    )
 
-    slots = MemoSlots(capacity=2)
+    h0, m0 = memo_counters()
+    frames = Memo(2)
     k1, k2, k3 = (spark.range(n + 3) for n in range(3))
-    b1 = slots.get_or_build(k1, lambda: k1.selectExpr("id * 2 AS x"))
+    b1 = frames.get(k1, (), lambda: k1.selectExpr("id * 2 AS x"))
     assert b1.is_cached
-    assert slots.get_or_build(k1, lambda: 1 / 0) is b1  # memo hit
-    b2 = slots.get_or_build(k2, lambda: k2.selectExpr("id * 3 AS x"))
+    assert frames.get(k1, (), lambda: 1 / 0) is b1  # memo hit
+    b2 = frames.get(k2, (), lambda: k2.selectExpr("id * 3 AS x"))
     assert b1.is_cached and b2.is_cached  # both resident at capacity 2
-    b3 = slots.get_or_build(k3, lambda: k3.selectExpr("id * 4 AS x"))
+    b3 = frames.get(k3, (), lambda: k3.selectExpr("id * 4 AS x"))
     assert not b1.is_cached  # LRU evicted AND unpersisted
     assert b2.is_cached and b3.is_cached
-    assert len(slots) == 2
+    assert len(frames) == 2
+    assert (frames.hits, frames.misses) == (1, 3)
+
+    # a driver value holding a cached frame's rows: eviction leaves the
+    # frame alone, and store() counts as neither a hit nor a miss
+    rows = Memo(1)
+    held = spark.range(4).cache()
+    rows.store(k1, (), (held.schema, held.collect()))
+    assert rows.get(k1, (), lambda: 1 / 0)[1] == held.collect()
+    assert rows.get(k2, (1,), lambda: 7) == 7  # evicts the k1 entry
+    assert len(rows) == 1 and held.is_cached
+    assert (rows.hits, rows.misses) == (1, 1)
+    held.unpersist()
+
+    h1, m1 = memo_counters()
+    assert (h1 - h0, m1 - m0) == (
+        frames.hits + rows.hits,
+        frames.misses + rows.misses,
+    )
+
+
+def test_package_has_one_memo_type():
+    """Every session memo is a caching.Memo: no module keeps a
+    module-level OrderedDict LRU of its own, and the retired helpers
+    are gone from caching."""
+    import importlib
+    import pkgutil
+    from collections import OrderedDict
+
+    import kafka_streams_repartition_spark as pkg
+    from kafka_streams_repartition_spark.functions import caching
+
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        own = [
+            name
+            for name, v in vars(mod).items()
+            if isinstance(v, OrderedDict)
+        ]
+        assert not own, f"{info.name} keeps its own LRU: {own}"
+    assert not hasattr(caching, "count_memo")
+    assert not hasattr(caching, "MemoSlots")
 
 
 def test_dedup_embedding_query_set_capped(t, monkeypatch):
@@ -1887,15 +1933,17 @@ def test_repeated_ngram_summary_consistent_with_scan(t):
 
 def test_mmr_memo_eviction_releases_checkpoints(spark, monkeypatch):
     """Round-13 advisor guard: _MMR_MEMO eviction releases BOTH of the
-    evicted entry's localCheckpoint frames eagerly (the MemoSlots
-    discipline) instead of leaving the blocks to JVM-side GC."""
+    evicted entry's localCheckpoint frames eagerly (through
+    similarity.release_local_checkpoint) instead of leaving the blocks
+    to JVM-side GC."""
+    from kafka_streams_repartition_spark.functions.caching import Memo
     from kafka_streams_repartition_spark.operators import similarity as sim
 
     released = []
     monkeypatch.setattr(
         sim, "release_local_checkpoint", lambda df: released.append(df)
     )
-    monkeypatch.setattr(sim, "_MMR_MEMO", type(sim._MMR_MEMO)())
+    monkeypatch.setattr(sim, "_MMR_MEMO", Memo(2, sim._release_checkpoints))
 
     def frames(seed):
         return {

@@ -32,14 +32,20 @@ def _rows(df, cols=None):
 
 
 def test_kmeans_cells_producer_never_consults_memo(t):
-    """The declared producer trains fresh: running kmeans_cells with a
-    cold memo leaves the memo cold (its bench row measures Lloyd
-    training, never a lookup), and its output equals the memoized
-    model's assignment."""
+    """The declared producer trains fresh: running kmeans_cells never
+    reads the model memo (its bench row measures Lloyd training, never
+    a lookup), but stores what it trained, so the first consumer is a
+    memo hit instead of a second Lloyd loop, and its rows equal the
+    producer's."""
     sim._KMEANS_MEMO.clear()
+    hits, misses = sim._KMEANS_MEMO.hits, sim._KMEANS_MEMO.misses
     fresh = _rows(sim.kmeans_cells(t))
-    assert len(sim._KMEANS_MEMO) == 0, "producer touched the model memo"
-    assert fresh == _rows(sim.kmeans_model(t)[0])
+    assert sim._KMEANS_MEMO.hits == hits, "producer read the model memo"
+    assert len(sim._KMEANS_MEMO) == 1, "producer did not store its model"
+    model = _rows(sim.kmeans_model(t)[0])
+    assert sim._KMEANS_MEMO.hits == hits + 1
+    assert sim._KMEANS_MEMO.misses == misses
+    assert fresh == model
 
 
 def test_mrl_curve_shared_truth_equals_fresh_truth(t):
@@ -85,16 +91,30 @@ def test_mrl_curve_shared_truth_equals_fresh_truth(t):
     assert _rows(sim.mrl_recall_curve(t)) == _rows(want)
 
 
-def test_rns_cache_key_carries_gram_order(t, monkeypatch):
-    """_rns_dg's slot key carries RNS_NGRAM: overriding the gram order
-    builds a fresh pair frame instead of serving the 13-gram one."""
-    dd._RNS_DG_CACHE._slots.clear()
-    g13 = dd._rns_dg(t)
-    monkeypatch.setattr(dd, "RNS_NGRAM", 5)
-    g5 = dd._rns_dg(t)
-    assert g5 is not g13, "override served the stale gram frame"
-    # 5-grams are strictly more plentiful than 13-grams on this corpus
-    assert g5.count() > g13.count()
+@pytest.mark.parametrize(
+    "mod, const, value, memo, build, measure",
+    [
+        # 5-grams are strictly more plentiful than 13-grams
+        (dd, "RNS_NGRAM", 5, "_RNS_DG_CACHE", dd._rns_dg, lambda g: g.count()),
+        (sim, "QUERY_MOD", 7, "_QSUBSET_MEMO",
+         lambda t: sim._qsubset_n(t["embeddings"]), lambda n: n),
+        (sim, "KCENTER_K", 2, "_KCENTER_MEMO", sim._kcenter_centers, len),
+        (sim, "ANN_QUERY_CAP", 2, "_MMR_MEMO", sim._mmr_pool_pairs,
+         lambda pp: pp[0].select("query_id").distinct().count()),
+    ],
+    ids=["RNS_NGRAM", "QUERY_MOD", "KCENTER_K", "ANN_QUERY_CAP"],
+)
+def test_memo_key_carries_shaping_constant(
+    t, monkeypatch, mod, const, value, memo, build, measure
+):
+    """A memo's key carries the module constants its build reads:
+    overriding one rebuilds instead of serving the value built under
+    the old setting."""
+    getattr(mod, memo).clear()
+    before = measure(build(t))
+    monkeypatch.setattr(mod, const, value)
+    after = measure(build(t))
+    assert after != before, f"{const} override served the stale value"
 
 
 def test_repeated_ngram_scan_fused_agg_matches_join_shape(t):
