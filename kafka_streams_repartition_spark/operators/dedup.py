@@ -1999,7 +1999,7 @@ _EMBDUP_TRUTH_CACHE = Memo(2)
 def _embdup_truth_pairs(t: dict[str, DataFrame]) -> DataFrame:
     return _EMBDUP_TRUTH_CACHE.get(
         t["embeddings"],
-        (EMBDUP_QUERY_CAP, EMBED_COSINE_THRESHOLD),
+        (EMBDUP_QUERY_CAP, EMBED_COSINE_THRESHOLD, QUERY_MOD, EMBED_DIM),
         lambda: dedup_embedding(t)
         .select(
             F.least("query_id", "cand_id").alias("lo"),
@@ -2827,9 +2827,9 @@ def semdedup(
     stacks both blockers (union of verdicts) when either recall alone
     is too low at the target threshold.
 
-    Scale shape: cluster assignment is :func:`similarity.kmeans_cells`
-    (zero-shuffle map assignment per Lloyd's round); centroids and
-    per-member centroid-cosines are one aggregation + a broadcast
+    Scale shape: cluster assignment is :func:`similarity.kmeans_model`
+    (the memoized quantizer's zero-shuffle map assignment); centroids
+    and per-member centroid-cosines are one aggregation + a broadcast
     join; the within-cell pairwise check runs per cell TILE inside one
     Arrow task emitting only per-member verdicts — pair-grained data
     never leaves a task.  The in-cell matmul is row-BLOCKED
@@ -2858,7 +2858,7 @@ def semdedup(
     import numpy as np
     import pandas as pd
 
-    from .similarity import DIM, kmeans_cells
+    from .similarity import DIM, kmeans_model
 
     cap = cell_cap or SEMDEDUP_CELL_CAP
     emb = fan_out(t["embeddings"]).select(
@@ -2868,7 +2868,7 @@ def semdedup(
     # the centroid aggregation AND the sizes pass all read it, and the
     # frame is narrow (12 B/row) — cheaper than re-running the final
     # argmin map per consumer
-    assign = kmeans_cells(t).localCheckpoint(eager=False)
+    assign = kmeans_model(t)[0].localCheckpoint(eager=False)
     m = emb.join(assign, "vec_id")
     cent = m.groupBy("cell").agg(
         F.array(
@@ -2887,9 +2887,8 @@ def semdedup(
         ).alias("cent_cos"),
     )
     # Cell sizes for the cap: ≤ n_cells rows, always broadcast.  Reusing
-    # the `assign` lineage re-runs only the final (checkpointed-centroid
-    # × embeddings) assignment map — kmeans_cells localCheckpoints every
-    # iteration's centroids, so Lloyd's never re-trains here.
+    # the `assign` lineage re-runs only the final (memoized-centroid
+    # × embeddings) assignment map, so Lloyd's never re-trains here.
     sizes = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("bn"))
     tiled = (
         with_c.join(F.broadcast(sizes), "cell")
@@ -3181,10 +3180,10 @@ def semdedup_recall(t: dict[str, DataFrame]) -> DataFrame:
     keyed joins against the quantizer assignment (itself a zero-
     shuffle map pass); the output is one row.
     """
-    from .similarity import kmeans_cells
+    from .similarity import kmeans_model
 
     truth = _embdup_truth_pairs(t)
-    cells = kmeans_cells(t).localCheckpoint(eager=False)
+    cells = kmeans_model(t)[0].localCheckpoint(eager=False)
     co = (
         truth.join(
             cells.select(F.col("vec_id").alias("lo"), F.col("cell").alias("ca")),
@@ -3381,7 +3380,7 @@ def dedup_stacked_recall(t: dict[str, DataFrame]) -> DataFrame:
     union/distinct is over truth-sized pair frames.  Output is one
     row.
     """
-    from .similarity import kmeans_cells
+    from .similarity import kmeans_model
 
     truth = _embdup_truth_pairs(t)
     lsh_hit = truth.join(
@@ -3391,7 +3390,7 @@ def dedup_stacked_recall(t: dict[str, DataFrame]) -> DataFrame:
         ["lo", "hi"],
         "left_semi",
     ).localCheckpoint(eager=False)
-    cells = kmeans_cells(t).localCheckpoint(eager=False)
+    cells = kmeans_model(t)[0].localCheckpoint(eager=False)
     cell_hit = (
         truth.join(
             cells.select(F.col("vec_id").alias("lo"), F.col("cell").alias("ca")),

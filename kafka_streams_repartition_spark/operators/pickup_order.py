@@ -20,8 +20,10 @@ function ``forall``.
 
 Scale notes (100 TB): users/products joins are shuffle-hash joins on
 uniformly distributed keys; stores is broadcast; the only wide state is
-the per-order re-nest whose groups are tiny (1-3 items). No operator
-here holds unbounded state.
+the per-order re-nest whose groups are tiny (1-3 items). In the batch
+plan no operator holds unbounded state; run as a streaming aggregation
+(``streaming.pipelines.stream_pickup_orders``) the re-nest keeps one
+state row per order id forever.
 """
 
 from __future__ import annotations

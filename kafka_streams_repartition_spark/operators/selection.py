@@ -834,21 +834,21 @@ def cluster_sample(t: dict[str, DataFrame]) -> DataFrame:
     representative, balanced subset here; the cluster-balanced sampling
     of DoReMi/D4-style curation).
 
-    Scale shape: cell assignment is the zero-shuffle map pass of
-    ``kmeans_cells``; the quota is rank-≤-K over (cell, priority),
-    which Spark's WindowGroupLimit rewrite executes as a per-partition
-    top-K (each task keeps K rows per cell before the exchange) — no
-    cell ever materializes fully in memory, no global sort.  Output is
-    ≤ K·cells rows.
+    Scale shape: cell assignment is the zero-shuffle map pass of the
+    memoized quantizer (``similarity.kmeans_model``); the quota is
+    rank-≤-K over (cell, priority), which Spark's WindowGroupLimit
+    rewrite executes as a per-partition top-K (each task keeps K rows
+    per cell before the exchange) — no cell ever materializes fully in
+    memory, no global sort.  Output is ≤ K·cells rows.
     """
     from pyspark.sql import Window
 
-    from .similarity import kmeans_cells
+    from .similarity import kmeans_model
 
     pri = _md5_long(F.col("vec_id").cast("string"))
     w = Window.partitionBy("cell").orderBy("priority", "vec_id")
     return (
-        kmeans_cells(t)
+        kmeans_model(t)[0]
         .select("vec_id", "cell", pri.alias("priority"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= CLUSTER_SAMPLE_K)

@@ -415,21 +415,20 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
     one aggregation, no posexplode — and (2) broadcast re-assignment.
 
     Lineage control: each iteration's centroid table (k tiny rows) is
-    ``localCheckpoint``ed, so iteration i's plan reads (embeddings scan
-    × materialized centroids) instead of embedding iteration i−1's
-    whole assignment subtree — without this the composed plan grows
-    exponentially with the iteration budget (Spark ML's KMeans
-    truncates the same loop the same way). On a real cluster prefer a
-    reliable ``checkpoint`` (localCheckpoint dies with an executor).
+    collected to the driver (``_kmeans_train_uncached``), so iteration
+    i's plan reads (embeddings scan × materialized centroids) instead
+    of embedding iteration i−1's whole assignment subtree — without
+    this the composed plan grows exponentially with the iteration
+    budget (Spark ML's KMeans truncates the same loop the same way).
 
     ``ann_topk_ivf`` consumes a pretrained quantizer; this is its
     trainer — together they close the IVF index lifecycle.
 
-    As the declared PRODUCER query it always trains fresh
-    (``_kmeans_train_uncached``), never reading ``_KMEANS_MEMO``: its
-    bench row must measure Lloyd training, not a memo lookup.  It
-    stores the trained model there, so the consumers sharing it via
-    :func:`kmeans_model` do not run the same Lloyd loop again.
+    This is the registry's PRODUCER query and nothing in the package
+    calls it: it always trains fresh (``_kmeans_train_uncached``),
+    never reading ``_KMEANS_MEMO``, so its bench row measures Lloyd
+    training, not a memo lookup.  It stores the trained model there;
+    every consumer reads the quantizer through :func:`kmeans_model`.
     """
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
@@ -442,22 +441,25 @@ def kmeans_cells(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def kmeans_model(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
-    """(assignment, trained centroids) — :func:`kmeans_cells` plus the
-    final Lloyd centroid table, so a consumer can FREEZE the quantizer
-    (e.g. ``streaming.stream_semdedup`` assigns streamed vectors with
-    exactly the centroids the batch trainer converged to).
+    """(assignment, trained centroids) of the coarse quantizer: the
+    ``vec_id, cell`` frame :func:`kmeans_cells` returns plus the final
+    Lloyd centroid table, so a consumer can also FREEZE the quantizer
+    (``dedup.semdedup_quantizer`` ships the centroids to the streaming
+    ingest tier).
 
-    The TRAINED centroid table memoizes per embeddings frame as plain
-    collected rows (the ``_kcenter_centers`` discipline — k × DIM
-    doubles, kilobytes at any corpus size, no checkpoint blocks to
-    release): ~10 registry queries consume the same quantizer
-    (purity/silhouette/balance diagnostics, semdedup and its gates,
-    D4, cluster_sample), and retraining the identical Lloyd loop per
-    consumer was 2 full corpus passes each that the frozen-model
-    artifact makes one map-side assignment instead.  Assignment is
-    recomputed from the memoized centroids on every call — a
-    deterministic zero-shuffle map pass — so the output is
-    bit-identical to training in-line."""
+    The one way a consumer reads the quantizer: :func:`cluster_purity`,
+    :func:`silhouette_simplified`, :func:`ivf_cell_balance`,
+    ``selection.cluster_sample``, ``dedup.semdedup``,
+    ``dedup.semdedup_recall``, ``dedup.dedup_stacked_recall`` and
+    ``dedup.semdedup_quantizer``.  The TRAINED centroid table memoizes
+    per embeddings frame as plain collected rows (the
+    ``_kcenter_centers`` discipline — k × DIM doubles, kilobytes at
+    any corpus size, no checkpoint blocks to release), so Lloyd runs
+    once per session for the whole family (or not at all after the
+    producer stored its model) instead of 2 corpus passes per
+    consumer call.  Assignment is recomputed from the memoized
+    centroids on every call — a deterministic zero-shuffle map pass —
+    so the output is bit-identical to training in-line."""
     emb_raw = fan_out(t["embeddings"])
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
     schema, rows = _kmeans_cent_rows(t)
@@ -578,12 +580,12 @@ def cluster_purity(t: dict[str, DataFrame]) -> DataFrame:
     Integer-exact by construction: every output is a ratio of counts
     (no logs, no distance sums), so both engines agree bit-for-bit.
 
-    Scale shape: the trainer's assignment (one broadcast-centroid map
-    pass per Lloyd round) plus ONE (cell, label) aggregation —
+    Scale shape: the memoized quantizer's assignment (one
+    broadcast-centroid map pass) plus ONE (cell, label) aggregation —
     |cells| × |labels| rows into the final rollup, constant-size
     output at any corpus size.
     """
-    cells = kmeans_cells(t)
+    cells = kmeans_model(t)[0]
     lab = fan_out(t["embeddings"]).select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
@@ -1664,7 +1666,8 @@ def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
     full Q·N brute scan to rebuild the identical artifact.  The
     declared ``ann_topk_bruteforce`` query itself never consults the
     memo — it always computes fresh from the scan.  The key carries
-    the EFFECTIVE query cap so a runtime ``ANN_QUERY_CAP`` override
+    the EFFECTIVE query cap and the other constants the scan reads
+    (``TOP_K``, ``QUERY_MOD``, ``DIM``), so a runtime override
     (monkeypatched or env) can never serve a stale truth set."""
     key = t["embeddings"]
 
@@ -1672,7 +1675,9 @@ def _bf_truth(t: dict[str, DataFrame]) -> DataFrame:
         truth = ann_topk_bruteforce(t).select("query_id", "cand_id")
         return truth.schema, truth.collect()
 
-    schema, rows = _BF_TRUTH_MEMO.get(key, (_ann_qcap(t),), build)
+    schema, rows = _BF_TRUTH_MEMO.get(
+        key, (_ann_qcap(t), TOP_K, QUERY_MOD, DIM), build
+    )
     return key.sparkSession.createDataFrame(rows, schema)
 
 
@@ -3203,13 +3208,13 @@ def ivf_cell_balance(t: dict[str, DataFrame]) -> DataFrame:
     table measures rather than assumes — FAISS's imbalance_factor, as
     an oracle-gated query.
 
-    Per trained cell (:func:`kmeans_cells` — the production trainer,
-    never a reimplementation): occupancy, corpus share, and the load
-    factor n·k/N (1.0 = perfectly balanced).  Composition keeps the
-    frame cell-sized (k rows) after one trainer pass; the 1-row totals
-    broadcast.
+    Per trained cell (:func:`kmeans_model` — the production trainer's
+    memoized model, never a reimplementation): occupancy, corpus
+    share, and the load factor n·k/N (1.0 = perfectly balanced).
+    Composition keeps the frame cell-sized (k rows) after one
+    assignment pass; the 1-row totals broadcast.
     """
-    assign = kmeans_cells(t).select("vec_id", "cell")
+    assign = kmeans_model(t)[0]
     tot = assign.agg(
         F.count(F.lit(1)).alias("n_total"),
         F.countDistinct("cell").alias("k"),

@@ -99,6 +99,14 @@ def stream_pickup_orders(
     table format whose snapshot resolves per batch (e.g. Delta) or a
     ``foreachBatch`` join against a re-read dim.
     Use complete/update output mode: A1 is a streaming aggregation.
+
+    State grows without bound: A1 keeps one RocksDB row per
+    ``order_id`` and, with no watermark, never evicts it — the state
+    row count is the number of distinct orders ever seen (draining two
+    2,500-order files takes ``numRowsTotal`` from 2,500 to 5,000).  An
+    order arrives as one record carrying all its items, so no later
+    batch updates that row; :func:`stream_pickup_orders_live_dims`
+    runs the same topology per micro-batch and keeps no state at all.
     """
     from ..operators.pickup_order import enrich_pickup_orders
 

@@ -604,6 +604,34 @@ def test_package_has_one_memo_type():
     assert not hasattr(caching, "MemoSlots")
 
 
+def test_kmeans_producer_has_no_package_callers():
+    """``similarity.kmeans_cells`` is the registry's producer query: it
+    always trains fresh, so a package caller would re-run Lloyd per
+    call instead of reading the memoized model through
+    ``kmeans_model``.  No package module names it in code (imports,
+    calls, attribute reads) except at its own definition."""
+    import ast
+    import pathlib
+
+    import kafka_streams_repartition_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    refs = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name
+            else:
+                continue
+            if name == "kmeans_cells":
+                refs.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not refs, f"package code calls the producer: {refs}"
+
+
 def test_dedup_embedding_query_set_capped(t, monkeypatch):
     """dedup_embedding's broadcast query subset is bounded by
     EMBDUP_QUERY_CAP: with a tiny cap only the cap lowest-id queries

@@ -48,6 +48,26 @@ def test_kmeans_cells_producer_never_consults_memo(t):
     assert fresh == model
 
 
+def test_kmeans_consumers_read_the_memoized_model(t):
+    """Every consumer of the trained quantizer reads the memoized model:
+    after one training, building and collecting each of them is a memo
+    hit and never a second Lloyd loop."""
+    sim._KMEANS_MEMO.clear()
+    sim.kmeans_model(t)
+    hits, misses = sim._KMEANS_MEMO.hits, sim._KMEANS_MEMO.misses
+    for consumer in (
+        sim.cluster_purity,
+        sim.ivf_cell_balance,
+        sl.cluster_sample,
+        dd.semdedup,
+        dd.semdedup_recall,
+        dd.dedup_stacked_recall,
+    ):
+        consumer(t).collect()
+    assert sim._KMEANS_MEMO.misses == misses, "a consumer retrained"
+    assert sim._KMEANS_MEMO.hits >= hits + 6, "a consumer skipped the memo"
+
+
 def test_mrl_curve_shared_truth_equals_fresh_truth(t):
     """mrl_recall_curve's memoized-truth fast path (d = DIM leg served
     from _bf_truth) is bit-identical to building the truth leg fresh
@@ -101,8 +121,15 @@ def test_mrl_curve_shared_truth_equals_fresh_truth(t):
         (sim, "KCENTER_K", 2, "_KCENTER_MEMO", sim._kcenter_centers, len),
         (sim, "ANN_QUERY_CAP", 2, "_MMR_MEMO", sim._mmr_pool_pairs,
          lambda pp: pp[0].select("query_id").distinct().count()),
+        # the truth set holds TOP_K candidates per query
+        (sim, "TOP_K", 2, "_BF_TRUTH_MEMO", sim._bf_truth,
+         lambda f: f.count()),
+        # at QUERY_MOD 1 every vector is a query, so more pairs pass
+        (dd, "QUERY_MOD", 1, "_EMBDUP_TRUTH_CACHE", dd._embdup_truth_pairs,
+         lambda f: f.count()),
     ],
-    ids=["RNS_NGRAM", "QUERY_MOD", "KCENTER_K", "ANN_QUERY_CAP"],
+    ids=["RNS_NGRAM", "QUERY_MOD", "KCENTER_K", "ANN_QUERY_CAP",
+         "BF_TRUTH_TOP_K", "EMBDUP_TRUTH_QUERY_MOD"],
 )
 def test_memo_key_carries_shaping_constant(
     t, monkeypatch, mod, const, value, memo, build, measure
