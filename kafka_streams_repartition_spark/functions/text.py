@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 def words(text: Column | str) -> Column:
     """Lowercased whitespace tokens, empties removed."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(c), " "), lambda w: w != F.lit(""))
+    # split never yields null elements, so dropping "" is the whole
+    # filter — and array_remove runs compiled, not as an interpreted lambda
+    return F.array_remove(F.split(F.lower(c), " "), "")
 
 
 def word_ngrams(tokens: Column, n: int) -> Column:

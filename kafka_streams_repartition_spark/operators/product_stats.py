@@ -144,9 +144,7 @@ def stores_map_to_string(quantity_by_store: Column) -> Column:
 
 
 def order_ids_to_string(order_ids: Column) -> Column:
-    return F.array_join(
-        F.transform(F.array_sort(order_ids), lambda x: x.cast("string")), ","
-    )
+    return F.array_join(F.array_sort(order_ids).cast("array<string>"), ",")
 
 
 def product_stats_v1(t: dict[str, DataFrame]) -> DataFrame:

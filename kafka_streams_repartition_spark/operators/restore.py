@@ -50,14 +50,9 @@ def merge_v1_into_v2(v1: DataFrame, v2: DataFrame) -> DataFrame:
         F.col("orders").alias("v1_orders"),
         F.col("quantity").alias("v1_quantity"),
         F.col("order_ids").alias("v1_order_ids"),
-        F.map_from_entries(
-            F.transform(
-                "quantity_by_store",
-                lambda e: F.struct(
-                    e["store_id"].cast("string").alias("key"),
-                    e["quantity"].alias("value"),
-                ),
-            )
+        F.map_from_arrays(
+            F.col("quantity_by_store.store_id").cast("array<string>"),
+            F.col("quantity_by_store.quantity"),
         ).alias("v1_stores"),
     )
     v2_side = v2.select(

@@ -7,8 +7,7 @@ one you would also set on a 1000-executor cluster:
   fixed 4/8 partition counts (``BuildSystem.java:39-40``): partition counts
   become a runtime decision, which is the whole v1→v2 migration pain the
   reference demonstrates, solved by the engine.
-- Arrow on for the few pandas-UDF paths (multimodal decode, the imperative
-  ``transformWithStateInPandas`` merge).
+- Arrow on for the few pandas-UDF paths (multimodal decode).
 - RocksDB state store provider for streaming state (the reference's state
   is RocksDB too, ``streams/build.gradle``).
 - Broadcast threshold left at default; operators use explicit

@@ -32,6 +32,13 @@ only its (band, sig, vec_id) rows and the vectors of actual collision
 partners — it is never scanned pairwise.  Index storage is append-only
 parquet per batch (``batch=<id>/sigs|vecs``); on a lakehouse the same
 loop targets a Delta/Iceberg table and only the file layout changes.
+
+Every face in this module is a ``step(batch_df, batch_id) -> {sub:
+frame}`` handed to the one commit loop, ``snapshot._fold_committed``:
+it owns the run-identity guard and replay skip, the ``batch=<id>/<sub>``
+writes, the ``_CURRENT`` commit, the prune of superseded cumulative
+tables, the ``on_batch`` hook and the ``availableNow`` drain, and
+``snapshot._read_committed`` reads the committed tables back.
 """
 
 from __future__ import annotations
@@ -47,116 +54,18 @@ from ..operators.dedup import (
     EMBED_DIM,
     _embdup_band_structs,
 )
-from .snapshot import _POINTER, _RUN, _checkpoint_query_id
+from .snapshot import (  # noqa: F401  (_prune_superseded is imported from here)
+    _committed_dirs,
+    _fold_committed,
+    _latest_committed_dir,
+    _prune_superseded,
+    _read_committed,
+)
 
 _SIG_SCHEMA = "vec_id long, band int, sig string"
 _VEC_SCHEMA = "vec_id long, v array<double>"
 _EMB_PAIR_SCHEMA = "doc_a long, doc_b long, cosine double"
 _MH_PAIR_SCHEMA = "doc_a long, doc_b long, jaccard double"
-
-
-def _index_version(root: str) -> int | None:
-    try:
-        with open(os.path.join(root, _POINTER)) as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def _committed_dirs(root: str, sub: str) -> list[str]:
-    """Paths of every committed batch's ``sub`` table (≤ _CURRENT):
-    orphan dirs past the pointer (crash between write and commit) are
-    excluded and will be overwritten by the replayed batch."""
-    cur = _index_version(root)
-    if cur is None:
-        return []
-    out = []
-    for d in os.listdir(root):
-        if d.startswith("batch="):
-            bid = int(d.split("=", 1)[1])
-            if bid <= cur:
-                out.append(os.path.join(root, d, sub))
-    return sorted(out)
-
-
-def _begin_batch(
-    root: str, checkpoint_dir: str, batch_id: int, what: str
-) -> bool:
-    """Run-identity guard + replay skip (shared by every incremental
-    index): False = replayed batch already committed; raises when the
-    checkpoint lineage does not match the index's recorded identity."""
-    qid = _checkpoint_query_id(checkpoint_dir)
-    run_path = os.path.join(root, _RUN)
-    stored = None
-    try:
-        with open(run_path) as fh:
-            stored = fh.read().strip() or None
-    except FileNotFoundError:
-        pass
-    current = _index_version(root)
-    if current is not None and stored is not None and qid != stored:
-        raise RuntimeError(
-            f"{what} at {root} was built by streaming query {stored} but "
-            f"this checkpoint ({checkpoint_dir}) is query {qid}: its batch "
-            "ids do not line up with the committed batches. checkpoint_dir "
-            "and index root must live and die as a pair."
-        )
-    if (stored is None or current is None) and qid is not None:
-        tmp = os.path.join(root, f".{_RUN}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(qid)
-        os.rename(tmp, run_path)
-    return not (current is not None and current >= batch_id)
-
-
-def _latest_committed_dir(root: str, sub: str) -> str | None:
-    """The highest-numbered committed batch's ``sub`` table (numeric
-    order — lexicographic sorting would put batch=10 before batch=2),
-    for state kept as a cumulative rollup rather than per-batch
-    contributions.  The batch id is parsed from each entry's own
-    directory NAME, never by splitting the full path on "batch=" —
-    a root path that itself contains a "batch=" substring must not
-    silently select a stale rollup."""
-    cur = _index_version(root)
-    if cur is None:
-        return None
-    best = None
-    for d in os.listdir(root):
-        if d.startswith("batch="):
-            bid = int(d.split("=", 1)[1])
-            if bid <= cur and (best is None or bid > best):
-                best = bid
-    if best is None:
-        return None
-    return os.path.join(root, f"batch={best}", sub)
-
-
-def _prune_superseded(root: str, sub: str) -> None:
-    """Delete every committed batch's ``sub`` table BELOW the current
-    pointer — for state kept as a CUMULATIVE rollup (each batch
-    persists the full fold and only the latest committed copy is ever
-    read), where retaining history would grow disk as
-    O(n_batches × state).  Idempotent and crash-safe: the pointer's own
-    batch is never touched, so :func:`_latest_committed_dir` always
-    resolves; a crash mid-prune just leaves superseded dirs the next
-    batch's prune removes."""
-    import shutil
-
-    cur = _index_version(root)
-    if cur is None:
-        return
-    for d in os.listdir(root):
-        if d.startswith("batch=") and int(d.split("=", 1)[1]) < cur:
-            p = os.path.join(root, d, sub)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-
-
-def _commit_batch(root: str, batch_id: int) -> None:
-    tmp = os.path.join(root, f".{_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(batch_id))
-    os.rename(tmp, os.path.join(root, _POINTER))  # atomic commit
 
 
 _PLANES_FILE = "_PLANES"
@@ -178,6 +87,7 @@ def _index_planes(root: str, requested: int | None = None) -> int:
     rule's answer for the drained corpus (test corpora: both MIN)."""
     from ..operators.dedup import EMBDUP_PLANE_MIN, _EMBDUP_PLANES_ENV
 
+    os.makedirs(root, exist_ok=True)
     path = os.path.join(root, _PLANES_FILE)
     try:
         with open(path) as fh:
@@ -215,6 +125,63 @@ def _sigs_for(vecs: DataFrame, planes: int) -> DataFrame:
         "v",
         F.col("bs.band").alias("band"),
         F.col("bs.sig").alias("sig"),
+    )
+
+
+def _rows_hook(spark: SparkSession, root: str, sub: str, schema: str, on_batch):
+    """``on_batch(batch_id, rows)`` fed with the batch's committed
+    ``sub`` table, or None without a hook."""
+    if on_batch is None:
+        return None
+    return lambda batch_id: on_batch(
+        batch_id,
+        spark.read.schema(schema)
+        .parquet(os.path.join(root, f"batch={batch_id}", sub))
+        .collect(),
+    )
+
+
+def _releasing(held: list[DataFrame], on_batch):
+    """The post-commit hook of a face whose step records its per-batch
+    checkpoints in ``held``: every consumer has written by then, so
+    release them (else a long stream pins one copy per batch), then
+    call ``on_batch(batch_id)``."""
+    from ..functions.caching import release_local_checkpoint
+
+    def hook(batch_id: int) -> None:
+        for df in held:
+            release_local_checkpoint(df)
+        if on_batch is not None:
+            on_batch(batch_id)
+
+    return hook
+
+
+def _with_batch(df: DataFrame, batch_id: int) -> DataFrame:
+    """``df`` tagged with the batch id that wrote it: per-batch
+    snapshots and latest-wins changelogs key their read-back on it."""
+    return df.withColumn("batch", F.lit(batch_id).cast("long"))
+
+
+def _latest_snapshot(
+    spark: SparkSession, root: str, sub: str, schema: str
+) -> DataFrame:
+    """The highest committed batch's rows of the per-batch ``sub``
+    snapshot, without its ``batch`` column."""
+    allr = _read_committed(spark, root, sub, schema)
+    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
+    return allr.filter(F.col("batch") == last).drop("batch")
+
+
+def _latest_per_doc(spark: SparkSession, root: str, schema: str) -> DataFrame:
+    """The committed ``docs`` changelog folded latest-wins: each
+    doc_id's row from the highest batch that wrote it."""
+    w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
+    return (
+        _read_committed(spark, root, "docs", schema)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn", "batch")
     )
 
 
@@ -327,47 +294,26 @@ def stream_embedding_index_frame(
     """Sink-backed form of :func:`stream_embedding_index`: returns the
     committed (doc_a, doc_b, cosine) pair TABLE.  ``planes`` pins the
     banding width at index creation (see :func:`_index_planes`)."""
-    os.makedirs(root, exist_ok=True)
     n_planes = _index_planes(root, planes)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "embedding index"):
-            return  # replayed batch: sigs/vecs AND pairs already committed
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         new_vecs = batch_df.select(
             "vec_id", to_double_array("embedding").alias("v")
         )
         pairs, new_sigs = _embedding_batch_pairs(
             spark, new_vecs, root, n_planes
         )
+        return {
+            "pairs": pairs,
+            "sigs": new_sigs.select("vec_id", "band", "sig"),
+            "vecs": new_vecs,
+        }
 
-        out = os.path.join(root, f"batch={batch_id}")
-        pairs.write.mode("overwrite").parquet(os.path.join(out, "pairs"))
-        new_sigs.select("vec_id", "band", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "sigs"))
-        new_vecs.write.mode("overwrite").parquet(os.path.join(out, "vecs"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(
-                batch_id,
-                spark.read.schema(_EMB_PAIR_SCHEMA)
-                .parquet(os.path.join(out, "pairs"))
-                .collect(),
-            )
-
-    q = (
-        vec_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        vec_stream, root, checkpoint_dir, "embedding index", step,
+        on_batch=_rows_hook(spark, root, "pairs", _EMB_PAIR_SCHEMA, on_batch),
     )
-    q.awaitTermination()
-    pair_dirs = _committed_dirs(root, "pairs")
-    if not pair_dirs:
-        return spark.createDataFrame([], _EMB_PAIR_SCHEMA)
-    return spark.read.schema(_EMB_PAIR_SCHEMA).parquet(*pair_dirs)
+    return _read_committed(spark, root, "pairs", _EMB_PAIR_SCHEMA)
 
 
 _BAND_SCHEMA = "doc_id long, band_id int, sig string"
@@ -494,41 +440,20 @@ def stream_minhash_index_frame(
 ) -> DataFrame:
     """Sink-backed form of :func:`stream_minhash_index`: returns the
     committed (doc_a, doc_b, jaccard) pair TABLE."""
-    os.makedirs(root, exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "minhash index"):
-            return  # replayed batch: bands/grams AND pairs already committed
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         pairs, bands, arr = _minhash_batch_pairs(spark, batch_df, root)
+        return {
+            "pairs": pairs,
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+        }
 
-        out = os.path.join(root, f"batch={batch_id}")
-        pairs.write.mode("overwrite").parquet(os.path.join(out, "pairs"))
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(
-                batch_id,
-                spark.read.schema(_MH_PAIR_SCHEMA)
-                .parquet(os.path.join(out, "pairs"))
-                .collect(),
-            )
-
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "minhash index", step,
+        on_batch=_rows_hook(spark, root, "pairs", _MH_PAIR_SCHEMA, on_batch),
     )
-    q.awaitTermination()
-    pair_dirs = _committed_dirs(root, "pairs")
-    if not pair_dirs:
-        return spark.createDataFrame([], _MH_PAIR_SCHEMA)
-    return spark.read.schema(_MH_PAIR_SCHEMA).parquet(*pair_dirs)
+    return _read_committed(spark, root, "pairs", _MH_PAIR_SCHEMA)
 
 
 _HASH_SCHEMA = "h string"
@@ -580,11 +505,7 @@ def stream_corpus_curation(
     )
     from ..operators.text_analysis import QUALITY_THRESHOLD, text_stats
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "curation index"):
-            return  # replayed batch: accepted rows already committed
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         batch_df = batch_df.localCheckpoint(eager=False)
 
         # gate 1: per-doc quality (batch-invariant expressions)
@@ -671,33 +592,18 @@ def stream_corpus_curation(
             F.broadcast(losers), "doc_id", "left_anti"
         ).select("doc_id", "n_tokens", "quality_score")
 
-        out = os.path.join(root, f"batch={batch_id}")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out, "accepted")
-        )
-        keepers.select("h").write.mode("overwrite").parquet(
-            os.path.join(out, "hashes")
-        )
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "accepted": accepted,
+            "hashes": keepers.select("h"),
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "curation index", step,
+        on_batch=on_batch,
     )
-    q.awaitTermination()
-    acc_dirs = _committed_dirs(root, "accepted")
-    if not acc_dirs:
-        return spark.createDataFrame([], _ACC_SCHEMA)
-    return spark.read.schema(_ACC_SCHEMA).parquet(*acc_dirs)
+    return _read_committed(spark, root, "accepted", _ACC_SCHEMA)
 
 
 _DIGEST_SCHEMA = "h long"
@@ -773,7 +679,6 @@ def stream_semdedup(
 
     cap = cell_cap or SEMDEDUP_CELL_CAP
 
-    os.makedirs(root, exist_ok=True)
     assign_cent = spark.createDataFrame(
         quantizer["assign"], "cell int, cv array<double>"
     ).localCheckpoint()
@@ -781,10 +686,7 @@ def stream_semdedup(
         quantizer["score"], "cell int, cv array<double>"
     ).localCheckpoint()
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "semdedup index"):
-            return  # replayed batch: vecs AND verdicts already committed
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         new = _assign_cells(
             batch_df.select(
                 "vec_id", to_double_array("embedding").alias("v")
@@ -886,36 +788,16 @@ def stream_semdedup(
             )
             batch_verdicts = batch_verdicts.unionByName(flips)
 
-        out = os.path.join(root, f"batch={batch_id}")
-        batch_verdicts.write.mode("overwrite").parquet(
-            os.path.join(out, "verdicts")
-        )
-        new.write.mode("overwrite").parquet(os.path.join(out, "vecs"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(
-                batch_id,
-                spark.read.schema(_SD_VERDICT_SCHEMA)
-                .parquet(os.path.join(out, "verdicts"))
-                .collect(),
-            )
+        return {"verdicts": batch_verdicts, "vecs": new}
 
-    q = (
-        vec_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        vec_stream, root, checkpoint_dir, "semdedup index", step,
+        on_batch=_rows_hook(
+            spark, root, "verdicts", _SD_VERDICT_SCHEMA, on_batch
+        ),
     )
-    q.awaitTermination()
-    v_dirs = _committed_dirs(root, "verdicts")
-    if not v_dirs:
-        return spark.createDataFrame(
-            [], _SD_VERDICT_SCHEMA + ", kept boolean"
-        )
     return (
-        spark.read.schema(_SD_VERDICT_SCHEMA)
-        .parquet(*v_dirs)
+        _read_committed(spark, root, "verdicts", _SD_VERDICT_SCHEMA)
         .groupBy("vec_id", "cell", "cent_cos")
         .agg(F.max("removed").alias("removed"))
         .select(
@@ -955,11 +837,7 @@ def stream_novelty_scoring(
     """
     from ..operators.dedup import _doc_gram_arrays
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "novelty index"):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         arr = _doc_gram_arrays(batch_df)
         ex = arr.select(
             "doc_id",
@@ -1008,27 +886,13 @@ def stream_novelty_scoring(
                 .alias("novelty"),
             )
         )
-        out = os.path.join(root, f"batch={batch_id}")
-        scores.write.mode("overwrite").parquet(os.path.join(out, "scores"))
-        fresh_first.select("h").write.mode("overwrite").parquet(
-            os.path.join(out, "digests")
-        )
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"scores": scores, "digests": fresh_first.select("h")}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "novelty index", step,
+        on_batch=on_batch,
     )
-    q.awaitTermination()
-    score_dirs = _committed_dirs(root, "scores")
-    if not score_dirs:
-        return spark.createDataFrame([], _NOV_SCHEMA)
-    return spark.read.schema(_NOV_SCHEMA).parquet(*score_dirs)
+    return _read_committed(spark, root, "scores", _NOV_SCHEMA)
 
 
 # --- streaming boilerplate line-dedup ----------------------------------------
@@ -1077,11 +941,7 @@ def stream_line_dedup(
     """
     from ..operators.dedup import LINE_DF_MIN, _doc_lines, _line_rollup
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "line-dedup index"):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         ln = _doc_lines(batch_df).localCheckpoint(eager=False)
         bdf = (
             ln.groupBy("h")
@@ -1149,36 +1009,13 @@ def stream_line_dedup(
             rows = rows.unionByName(
                 _line_rollup(aff_ln.join(need_tot, "h"))
             )
-        out = os.path.join(root, f"batch={batch_id}")
-        rows.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "docs"))
-        ln.write.mode("overwrite").parquet(os.path.join(out, "lines"))
-        bdf.write.mode("overwrite").parquet(os.path.join(out, "dfs"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"docs": _with_batch(rows, batch_id), "lines": ln, "dfs": bdf}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "line-dedup index", step,
+        on_batch=on_batch,
     )
-    q.awaitTermination()
-    doc_dirs = _committed_dirs(root, "docs")
-    if not doc_dirs:
-        return spark.createDataFrame(
-            [], _LN_DOC_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_LN_DOC_SCHEMA).parquet(*doc_dirs)
-    w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
-    return (
-        allr.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "batch")
-    )
+    return _latest_per_doc(spark, root, _LN_DOC_SCHEMA)
 
 
 # --- streaming domain-KL mixture monitor --------------------------------------
@@ -1187,6 +1024,42 @@ _KL_CNT_SCHEMA = "source string, term string, c_st long"
 _KL_SNAP_SCHEMA = (
     "source string, n_terms long, n_tokens long, kl_nats double, batch long"
 )
+
+
+def _source_term_rollup(
+    spark: SparkSession, root: str, batch_df: DataFrame
+) -> DataFrame:
+    """The CUMULATIVE (source, term, c_st) token-count rollup as of
+    this batch (lazily checkpointed): the batch's own counts summed
+    into the latest committed ``counts`` copy.  Each batch persists the
+    rollup (vocabulary-sized, so rewriting it is the same O(vocab) as
+    reading it) and the next batch reads ONLY the latest committed dir
+    — per-batch work is independent of how many batches have ever run.
+    The state of :func:`stream_domain_kl` and its three siblings."""
+    from ..functions.text import words
+
+    bc = (
+        batch_df.select(
+            "source",
+            F.explode_outer(words(F.col("text"))).alias("term"),
+        )
+        .filter(F.col("term").isNotNull())
+        .groupBy("source", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
+        .localCheckpoint(eager=False)
+    )
+    latest = _latest_committed_dir(root, "counts")
+    if latest is not None:
+        cum = (
+            spark.read.schema(_KL_CNT_SCHEMA)
+            .parquet(latest)
+            .unionByName(bc)
+            .groupBy("source", "term")
+            .agg(F.sum("c_st").alias("c_st"))
+        )
+    else:
+        cum = bc
+    return cum.localCheckpoint(eager=False)
 
 
 def stream_domain_kl(
@@ -1223,70 +1096,20 @@ def stream_domain_kl(
     — at EVERY cut, not just the last.  Returns the latest committed
     snapshot.
     """
-    from ..functions.text import words
     from ..operators.selection import _kl_from_counts
 
-    os.makedirs(root, exist_ok=True)
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        cum = _source_term_rollup(spark, root, batch_df)
+        return {"kl": _with_batch(_kl_from_counts(cum), batch_id), "counts": cum}
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "domain-KL monitor"):
-            return
-        bc = (
-            batch_df.select(
-                "source",
-                F.explode_outer(words(F.col("text"))).alias("term"),
-            )
-            .filter(F.col("term").isNotNull())
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
-            .localCheckpoint(eager=False)
-        )
-        # each batch persists the CUMULATIVE rollup (vocabulary-sized,
-        # so rewriting it is the same O(vocab) as reading it), and the
-        # next batch reads ONLY the latest committed dir — per-batch
-        # work is independent of how many batches have ever run
-        latest = _latest_committed_dir(root, "counts")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_KL_CNT_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("source", "term")
-                .agg(F.sum("c_st").alias("c_st"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
-        snap = _kl_from_counts(cum)
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "kl"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        _commit_batch(root, batch_id)
-        # the rollup is cumulative: every pre-pointer copy is dead
-        # state — drop it so disk holds ONE vocab-sized table, not
-        # O(n_batches × vocab)
-        _prune_superseded(root, "counts")
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # the rollup is cumulative: every pre-pointer copy is dead state —
+    # prune it so disk holds ONE vocab-sized table, not
+    # O(n_batches × vocab)
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "domain-KL monitor", step,
+        prune=("counts",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    kl_dirs = _committed_dirs(root, "kl")
-    if not kl_dirs:
-        return spark.createDataFrame(
-            [], _KL_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_KL_SNAP_SCHEMA).parquet(*kl_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "kl", _KL_SNAP_SCHEMA)
 
 
 _DE_SNAP_SCHEMA = (
@@ -1318,65 +1141,20 @@ def stream_domain_entropy(
     one-shot ``domain_entropy`` over exactly the documents ingested so
     far — at EVERY cut.  Returns the latest committed snapshot.
     """
-    from ..functions.text import words
     from ..operators.selection import _entropy_from_counts
 
-    os.makedirs(root, exist_ok=True)
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        cum = _source_term_rollup(spark, root, batch_df)
+        return {
+            "entropy": _with_batch(_entropy_from_counts(cum), batch_id),
+            "counts": cum,
+        }
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "domain-entropy monitor"
-        ):
-            return
-        bc = (
-            batch_df.select(
-                "source",
-                F.explode_outer(words(F.col("text"))).alias("term"),
-            )
-            .filter(F.col("term").isNotNull())
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
-            .localCheckpoint(eager=False)
-        )
-        latest = _latest_committed_dir(root, "counts")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_KL_CNT_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("source", "term")
-                .agg(F.sum("c_st").alias("c_st"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
-        snap = _entropy_from_counts(cum)
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "entropy"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "domain-entropy monitor", step,
+        prune=("counts",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    e_dirs = _committed_dirs(root, "entropy")
-    if not e_dirs:
-        return spark.createDataFrame(
-            [], _DE_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_DE_SNAP_SCHEMA).parquet(*e_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "entropy", _DE_SNAP_SCHEMA)
 
 
 # --- streaming DoReMi reweighting ------------------------------------------
@@ -1414,63 +1192,18 @@ def stream_doremi_weights(
     one-shot ``doremi_weights`` over exactly the documents ingested so
     far — at EVERY cut.  Returns the latest committed snapshot.
     """
-    from ..functions.text import words
     from ..operators.selection import _doremi_from_kl, _kl_from_counts
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "DoReMi monitor"):
-            return
-        bc = (
-            batch_df.select(
-                "source",
-                F.explode_outer(words(F.col("text"))).alias("term"),
-            )
-            .filter(F.col("term").isNotNull())
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
-            .localCheckpoint(eager=False)
-        )
-        latest = _latest_committed_dir(root, "counts")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_KL_CNT_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("source", "term")
-                .agg(F.sum("c_st").alias("c_st"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        cum = _source_term_rollup(spark, root, batch_df)
         snap = _doremi_from_kl(_kl_from_counts(cum))
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "doremi"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"doremi": _with_batch(snap, batch_id), "counts": cum}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "DoReMi monitor", step,
+        prune=("counts",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    dirs = _committed_dirs(root, "doremi")
-    if not dirs:
-        return spark.createDataFrame(
-            [], _DOREMI_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_DOREMI_SNAP_SCHEMA).parquet(*dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "doremi", _DOREMI_SNAP_SCHEMA)
 
 
 # --- streaming Zipf vocabulary monitor --------------------------------------
@@ -1510,11 +1243,7 @@ def stream_zipf_fit(
     from ..functions.text import words
     from ..operators.text_analysis import _zipf_from_counts
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "Zipf monitor"):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         bc = (
             batch_df.select(
                 F.explode_outer(words(F.col("text"))).alias("term")
@@ -1537,32 +1266,13 @@ def stream_zipf_fit(
             cum = bc
         cum = cum.localCheckpoint(eager=False)
         snap = _zipf_from_counts(cum)
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "zipf"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"zipf": _with_batch(snap, batch_id), "counts": cum}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "Zipf monitor", step,
+        prune=("counts",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    dirs = _committed_dirs(root, "zipf")
-    if not dirs:
-        return spark.createDataFrame(
-            [], _ZIPF_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_ZIPF_SNAP_SCHEMA).parquet(*dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "zipf", _ZIPF_SNAP_SCHEMA)
 
 
 # --- streaming mixture-plan decision table -------------------------------------
@@ -1602,7 +1312,6 @@ def stream_mixture_plan(
     exactly the documents ingested so far.  Returns the latest
     committed snapshot.
     """
-    from ..functions.text import words
     from ..operators.selection import (
         _kl_from_counts,
         _mixture_table,
@@ -1610,65 +1319,19 @@ def stream_mixture_plan(
         _unimax_fill,
     )
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "mixture-plan monitor"
-        ):
-            return
-        bc = (
-            batch_df.select(
-                "source",
-                F.explode_outer(words(F.col("text"))).alias("term"),
-            )
-            .filter(F.col("term").isNotNull())
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
-            .localCheckpoint(eager=False)
-        )
-        latest = _latest_committed_dir(root, "counts")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_KL_CNT_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("source", "term")
-                .agg(F.sum("c_st").alias("c_st"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
+        cum = _source_term_rollup(spark, root, batch_df)
         avail = cum.groupBy("source").agg(F.sum("c_st").alias("avail"))
         snap = _mixture_table(
             _kl_from_counts(cum), _unimax_fill(avail), _temperature_fill(avail)
         )
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "plan"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")  # cumulative: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"plan": _with_batch(snap, batch_id), "counts": cum}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "mixture-plan monitor", step,
+        prune=("counts",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    plan_dirs = _committed_dirs(root, "plan")
-    if not plan_dirs:
-        return spark.createDataFrame(
-            [], _MP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_MP_SCHEMA).parquet(*plan_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "plan", _MP_SCHEMA)
 
 
 # --- streaming filter-attribution cascade monitor -----------------------------
@@ -1724,13 +1387,7 @@ def stream_filter_attribution(
     from ..operators.selection import gopher_rules
     from ..operators.text_analysis import QUALITY_THRESHOLD, text_stats
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "filter-attribution monitor"
-        ):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         batch_df = batch_df.localCheckpoint(eager=False)
         t_b = {"documents": batch_df}
 
@@ -1901,35 +1558,18 @@ def stream_filter_attribution(
         else:
             cum = bc
         cum = cum.localCheckpoint(eager=False)
+        return {
+            "counters": cum,
+            "hashes": hashed.select("h"),
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+        }
 
-        out = os.path.join(root, f"batch={batch_id}")
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counters"))
-        hashed.select("h").write.mode("overwrite").parquet(
-            os.path.join(out, "hashes")
-        )
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counters")  # cumulative: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "filter-attribution monitor", step,
+        prune=("counters",), on_batch=on_batch,  # cumulative: latest only
     )
-    q.awaitTermination()
-    latest = _latest_committed_dir(root, "counters")
-    if latest is None:
-        return spark.createDataFrame(
-            [], _FA_CNT_SCHEMA + ", survival_frac double"
-        )
-    cum = spark.read.schema(_FA_CNT_SCHEMA).parquet(latest)
+    cum = _read_committed(spark, root, "counters", _FA_CNT_SCHEMA, latest=True)
     return cum.select(
         "*",
         F.round(
@@ -1979,13 +1619,7 @@ def stream_token_budget(
     from ..functions.text import words
     from ..operators.selection import _unimax_fill
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "token-budget controller"
-        ):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         bc = (
             batch_df.select(
                 "source", F.size(words(F.col("text"))).alias("n")
@@ -2006,33 +1640,13 @@ def stream_token_budget(
         else:
             cum = bc
         cum = cum.localCheckpoint(eager=False)
-        snap = _unimax_fill(cum)
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "alloc"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "avail"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "avail")  # cumulative rollup: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {"alloc": _with_batch(_unimax_fill(cum), batch_id), "avail": cum}
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "token-budget controller", step,
+        prune=("avail",), on_batch=on_batch,
     )
-    q.awaitTermination()
-    alloc_dirs = _committed_dirs(root, "alloc")
-    if not alloc_dirs:
-        return spark.createDataFrame(
-            [], _TB_ALLOC_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_TB_ALLOC_SCHEMA).parquet(*alloc_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "alloc", _TB_ALLOC_SCHEMA)
 
 
 # --- streaming cross-modal duplicate entity resolution -------------------------
@@ -2060,12 +1674,7 @@ def _fold_labels(
     prunes superseded copies."""
     from ..operators.dedup import _connected_components
 
-    lab_dir = _latest_committed_dir(root, "labels")
-    prev = (
-        spark.read.schema(_CM_LABEL_SCHEMA).parquet(lab_dir)
-        if lab_dir is not None
-        else spark.createDataFrame([], _CM_LABEL_SCHEMA)
-    )
+    prev = _read_committed(spark, root, "labels", _CM_LABEL_SCHEMA, latest=True)
     ma = prev.select(
         F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("ca_old")
     )
@@ -2155,15 +1764,9 @@ def stream_crossmodal_clusters(
     (``streams/.../Streams.java``'s KTable aggregations); here the
     state is the union-find label table.
     """
-    os.makedirs(root, exist_ok=True)
     n_planes = _index_planes(root, planes)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "crossmodal cluster index"
-        ):
-            return
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         tp_raw, bands, arr = _minhash_batch_pairs(
             spark, batch_df.select("doc_id", "text"), root
         )
@@ -2231,42 +1834,21 @@ def stream_crossmodal_clusters(
             (F.col("has_text") & F.col("has_embed")).alias("cross_modal"),
         )
 
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "clusters"))
-        labels.write.mode("overwrite").parquet(os.path.join(out, "labels"))
-        flags.write.mode("overwrite").parquet(os.path.join(out, "flags"))
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        new_sigs.select("vec_id", "band", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "sigs"))
-        new_vecs.write.mode("overwrite").parquet(os.path.join(out, "vecs"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "labels")  # cumulative: latest only
-        _prune_superseded(root, "flags")
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "clusters": _with_batch(snap, batch_id),
+            "labels": labels,
+            "flags": flags,
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+            "sigs": new_sigs.select("vec_id", "band", "sig"),
+            "vecs": new_vecs,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "crossmodal cluster index", step,
+        prune=("labels", "flags"), on_batch=on_batch,  # cumulative: latest only
     )
-    q.awaitTermination()
-    snap_dirs = _committed_dirs(root, "clusters")
-    if not snap_dirs:
-        return spark.createDataFrame(
-            [], _CM_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_CM_SNAP_SCHEMA).parquet(*snap_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "clusters", _CM_SNAP_SCHEMA)
 
 
 # --- streaming quality-aware dedup (keep the BEST copy, continuously) ----------
@@ -2316,14 +1898,7 @@ def stream_quality_aware(
     """
     from ..operators.text_analysis import text_stats
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "quality-aware dedup index"
-        ):
-            return
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         pairs, bands, arr = _minhash_batch_pairs(spark, batch_df, root)
         new_pairs = (
             pairs.select("doc_a", "doc_b").distinct().localCheckpoint(eager=False)
@@ -2371,39 +1946,19 @@ def stream_quality_aware(
             (F.col("doc_id") == F.col("keeper_id")).alias("kept"),
         )
 
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "clusters"))
-        labels.write.mode("overwrite").parquet(os.path.join(out, "labels"))
-        batch_scores.write.mode("overwrite").parquet(
-            os.path.join(out, "scores")
-        )
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "labels")  # cumulative: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "clusters": _with_batch(snap, batch_id),
+            "labels": labels,
+            "scores": batch_scores,
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "quality-aware dedup index", step,
+        prune=("labels",), on_batch=on_batch,  # cumulative: latest only
     )
-    q.awaitTermination()
-    snap_dirs = _committed_dirs(root, "clusters")
-    if not snap_dirs:
-        return spark.createDataFrame(
-            [], _QA_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_QA_SNAP_SCHEMA).parquet(*snap_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "clusters", _QA_SNAP_SCHEMA)
 
 
 # --- streaming train/val leakage audit ----------------------------------------
@@ -2451,14 +2006,7 @@ def stream_leakage_split(
     """
     from ..operators.dedup import VAL_PCT, _hash_bucket
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "leakage-split audit"
-        ):
-            return
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         pairs, bands, arr = _minhash_batch_pairs(spark, batch_df, root)
         bc = batch_df.select(
             (_hash_bucket(F.col("doc_id")) < VAL_PCT).alias("is_val")
@@ -2481,16 +2029,13 @@ def stream_leakage_split(
             cum = bc
         cum = cum.localCheckpoint(eager=False)
 
-        out = os.path.join(root, f"batch={batch_id}")
-        pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(
-            os.path.join(out, "pairs")
-        )
-
-        # audit over ALL committed pairs (this batch's included): the
-        # split side re-derives from the id, map-side
-        pair_dirs = _committed_dirs(root, "pairs") + [
-            os.path.join(out, "pairs")
-        ]
+        # the batch's pairs land first (a write of this step's own, ahead
+        # of the returned tables), so the audit reads them back with
+        # ALL committed pairs: the split side re-derives from the id,
+        # map-side
+        own = os.path.join(root, f"batch={batch_id}", "pairs")
+        pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(own)
+        pair_dirs = _committed_dirs(root, "pairs") + [own]
         allp = spark.read.schema("doc_a long, doc_b long").parquet(
             *pair_dirs
         )
@@ -2535,35 +2080,18 @@ def stream_leakage_split(
                 .alias("straddle_frac"),
             )
         )
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "audit"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        bands.select("doc_id", "band_id", "sig").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(out, "grams"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")  # cumulative: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "audit": _with_batch(snap, batch_id),
+            "counts": cum,
+            "bands": bands.select("doc_id", "band_id", "sig"),
+            "grams": arr,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "leakage-split audit", step,
+        prune=("counts",), on_batch=on_batch,  # cumulative: latest only
     )
-    q.awaitTermination()
-    snap_dirs = _committed_dirs(root, "audit")
-    if not snap_dirs:
-        return spark.createDataFrame(
-            [], _LK_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_LK_SNAP_SCHEMA).parquet(*snap_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "audit", _LK_SNAP_SCHEMA)
 
 
 # --- streaming benchmark decontamination ---------------------------------------
@@ -2622,14 +2150,7 @@ def stream_decontaminate(
     from ..functions.text import word_ngrams, words
     from ..operators.dedup import DECON_EVAL_PCT, DECON_NGRAM, _hash_bucket
 
-    os.makedirs(root, exist_ok=True)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(
-            root, checkpoint_dir, batch_id, "decontamination scrub"
-        ):
-            return
-
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         ga = batch_df.select(
             "doc_id",
             F.array_distinct(
@@ -2711,34 +2232,18 @@ def stream_decontaminate(
                 "contaminated_frac"
             ),
         )
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "scrub"))
-        cum.write.mode("overwrite").parquet(os.path.join(out, "counts"))
-        new_eg.write.mode("overwrite").parquet(os.path.join(out, "egrams"))
-        tr.write.mode("overwrite").parquet(os.path.join(out, "tgrams"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "counts")  # cumulative: latest only
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "scrub": _with_batch(snap, batch_id),
+            "counts": cum,
+            "egrams": new_eg,
+            "tgrams": tr,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "decontamination scrub", step,
+        prune=("counts",), on_batch=on_batch,  # cumulative: latest only
     )
-    q.awaitTermination()
-    snap_dirs = _committed_dirs(root, "scrub")
-    if not snap_dirs:
-        return spark.createDataFrame(
-            [], _DC_SNAP_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_DC_SNAP_SCHEMA).parquet(*snap_dirs)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
+    return _latest_snapshot(spark, root, "scrub", _DC_SNAP_SCHEMA)
 
 
 # --- streaming exact-span dedup (first-occurrence ownership) -------------------
@@ -2790,8 +2295,6 @@ def stream_span_dedup(
     from ..functions.text import word_ngrams, words
     from ..operators.dedup import SPAN_N
 
-    os.makedirs(root, exist_ok=True)
-
     def doc_rows(inst: DataFrame, owner: DataFrame) -> DataFrame:
         stale_c = F.when(
             F.col("first_doc") < F.col("doc_id"), F.col("c")
@@ -2813,9 +2316,7 @@ def stream_span_dedup(
             )
         )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "span-dedup index"):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         sp = batch_df.select(
             "doc_id",
             F.explode_outer(
@@ -2889,36 +2390,17 @@ def stream_span_dedup(
             )
             rows = rows.unionByName(doc_rows(hist_inst, need_min))
 
-        out = os.path.join(root, f"batch={batch_id}")
-        rows.withColumn("batch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "docs"))
-        inst.write.mode("overwrite").parquet(os.path.join(out, "spans"))
-        bmin.write.mode("overwrite").parquet(os.path.join(out, "owners"))
-        _commit_batch(root, batch_id)
-        if on_batch is not None:
-            on_batch(batch_id)
+        return {
+            "docs": _with_batch(rows, batch_id),
+            "spans": inst,
+            "owners": bmin,
+        }
 
-    q = (
-        doc_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "span-dedup index", step,
+        on_batch=on_batch,
     )
-    q.awaitTermination()
-    doc_dirs = _committed_dirs(root, "docs")
-    if not doc_dirs:
-        return spark.createDataFrame(
-            [], _SP_DOC_SCHEMA.replace(", batch long", "")
-        )
-    allr = spark.read.schema(_SP_DOC_SCHEMA).parquet(*doc_dirs)
-    w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
-    return (
-        allr.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "batch")
-    )
+    return _latest_per_doc(spark, root, _SP_DOC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2975,8 +2457,6 @@ def stream_hard_negatives(
         derived_mrl_query_cap,
     )
 
-    os.makedirs(root, exist_ok=True)
-
     def score(cands: DataFrame, q: DataFrame) -> DataFrame:
         cos = F.round(
             dot_unrolled(F.col("qv"), F.col("v"), DIM)
@@ -2996,9 +2476,9 @@ def stream_hard_negatives(
             )
         )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "HN miner"):
-            return
+    held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
+
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         new = (
             batch_df.select(
                 "vec_id",
@@ -3032,11 +2512,8 @@ def stream_hard_negatives(
             )
             .localCheckpoint(eager=False)
         )
-        qids_dir = _latest_committed_dir(root, "qids")
-        prev_qids = (
-            spark.read.schema(_HN_QID_SCHEMA).parquet(qids_dir)
-            if qids_dir
-            else spark.createDataFrame([], _HN_QID_SCHEMA)
+        prev_qids = _read_committed(
+            spark, root, "qids", _HN_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
         legs = [score(new, q)]
@@ -3071,37 +2548,18 @@ def stream_hard_negatives(
                 "cosine",
             )
         )
-        out = os.path.join(root, f"batch={batch_id}")
-        snap.write.mode("overwrite").parquet(os.path.join(out, "negs"))
-        q.select("query_id").write.mode("overwrite").parquet(
-            os.path.join(out, "qids")
-        )
-        new.select("vec_id", "label", "v", "nrm").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "vecs"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "negs")
-        _prune_superseded(root, "qids")
-        # every consumer of the two per-batch checkpoints has written;
-        # release now or a long stream pins one copy per batch
-        from ..functions.caching import release_local_checkpoint
+        held[:] = [new, q]
+        return {
+            "negs": snap,
+            "qids": q.select("query_id"),
+            "vecs": new.select("vec_id", "label", "v", "nrm"),
+        }
 
-        release_local_checkpoint(new)
-        release_local_checkpoint(q)
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _fold_committed(
+        vec_stream, root, checkpoint_dir, "HN miner", step,
+        prune=("negs", "qids"), on_batch=_releasing(held, on_batch),
     )
-    negs_dir = _latest_committed_dir(root, "negs")
-    if negs_dir is None:
-        return spark.createDataFrame([], _HN_NEG_SCHEMA)
-    return spark.read.schema(_HN_NEG_SCHEMA).parquet(negs_dir)
+    return _read_committed(spark, root, "negs", _HN_NEG_SCHEMA, latest=True)
 
 
 # --- streaming Hamming/MIH radius index ---------------------------------------
@@ -3165,7 +2623,6 @@ def stream_hamming_neighbors(
         _simhash64_codes,
     )
 
-    os.makedirs(root, exist_ok=True)
     ccols = [f"c{c}" for c in range(HAMMING_CHUNKS)]
 
     def score(cands: DataFrame, qcodes: DataFrame) -> DataFrame:
@@ -3203,9 +2660,9 @@ def stream_hamming_neighbors(
             .distinct()
         )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "MIH index"):
-            return
+    held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
+
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         code_dirs = _committed_dirs(root, "codes")
         old = (
             spark.read.schema(_HM_CODE_SCHEMA).parquet(*code_dirs)
@@ -3227,11 +2684,8 @@ def stream_hamming_neighbors(
             )
             .localCheckpoint(eager=False)
         )
-        qids_dir = _latest_committed_dir(root, "qids")
-        prev_qids = (
-            spark.read.schema(_HM_QID_SCHEMA).parquet(qids_dir)
-            if qids_dir
-            else spark.createDataFrame([], _HM_QID_SCHEMA)
+        prev_qids = _read_committed(
+            spark, root, "qids", _HM_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
         legs = [score(new, q)]
@@ -3247,35 +2701,18 @@ def stream_hamming_neighbors(
         merged = legs[0]
         for leg in legs[1:]:
             merged = merged.unionByName(leg)
-        out = os.path.join(root, f"batch={batch_id}")
-        merged.distinct().write.mode("overwrite").parquet(
-            os.path.join(out, "pairs")
-        )
-        q.select("query_id").write.mode("overwrite").parquet(
-            os.path.join(out, "qids")
-        )
-        new.write.mode("overwrite").parquet(os.path.join(out, "codes"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "pairs")
-        _prune_superseded(root, "qids")
-        from ..functions.caching import release_local_checkpoint
+        held[:] = [new, q]
+        return {
+            "pairs": merged.distinct(),
+            "qids": q.select("query_id"),
+            "codes": new,
+        }
 
-        release_local_checkpoint(new)
-        release_local_checkpoint(q)
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    (
-        doc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "MIH index", step,
+        prune=("pairs", "qids"), on_batch=_releasing(held, on_batch),
     )
-    pairs_dir = _latest_committed_dir(root, "pairs")
-    if pairs_dir is None:
-        return spark.createDataFrame([], _HM_PAIR_SCHEMA)
-    return spark.read.schema(_HM_PAIR_SCHEMA).parquet(pairs_dir)
+    return _read_committed(spark, root, "pairs", _HM_PAIR_SCHEMA, latest=True)
 
 
 # --- streaming dedup-inflation accounting --------------------------------------
@@ -3320,11 +2757,9 @@ def stream_dedup_inflation(
     """
     from ..functions.text import words
 
-    os.makedirs(root, exist_ok=True)
+    held: list[DataFrame] = []  # this batch's checkpoint, released post-commit
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, "inflation fold"):
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         new = (
             batch_df.select(
                 "doc_id",
@@ -3342,6 +2777,8 @@ def stream_dedup_inflation(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").cast("long").alias("sum_tok"),
         )
+        # the batch's contributions land first (writes of this step's
+        # own), so the fold reads them back with every committed batch
         out = os.path.join(root, f"batch={batch_id}")
         contrib.write.mode("overwrite").parquet(os.path.join(out, "hstats"))
         new.select("doc_id").write.mode("overwrite").parquet(
@@ -3392,23 +2829,11 @@ def stream_dedup_inflation(
                 ),
             ).alias("inflation"),
         )
-        snap.write.mode("overwrite").parquet(os.path.join(out, "snap"))
-        _commit_batch(root, batch_id)
-        _prune_superseded(root, "snap")
-        from ..functions.caching import release_local_checkpoint
+        held[:] = [new]
+        return {"snap": snap}
 
-        release_local_checkpoint(new)
-        if on_batch is not None:
-            on_batch(batch_id)
-
-    (
-        doc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _fold_committed(
+        doc_stream, root, checkpoint_dir, "inflation fold", step,
+        prune=("snap",), on_batch=_releasing(held, on_batch),
     )
-    snap_dir = _latest_committed_dir(root, "snap")
-    if snap_dir is None:
-        return spark.createDataFrame([], _DI_SNAP_SCHEMA)
-    return spark.read.schema(_DI_SNAP_SCHEMA).parquet(snap_dir)
+    return _read_committed(spark, root, "snap", _DI_SNAP_SCHEMA, latest=True)

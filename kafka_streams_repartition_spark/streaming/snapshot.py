@@ -24,12 +24,22 @@ snapshot.  Rewriting is the plain-parquet cost of this pattern — on a
 real lakehouse the same loop targets a format with row-level merge
 (Delta/Iceberg) and only the join changes owner.  Old versions are
 retained for rollback/time-travel; prune with ``prune_versions``.
+
+The commit loop itself is :func:`_fold_committed`, shared with every
+persisted index in ``streaming/embindex.py``: run-identity guard and
+replay skip, the step's parquet writes under ``<prefix>=<batch_id>/``,
+the ``_CURRENT`` commit, the prune of superseded cumulative tables,
+the ``on_batch`` hook, and the ``foreachBatch`` → ``availableNow``
+drain.  A face supplies only ``step(batch_df, batch_id) -> {sub: frame}``
+(``maintain_snapshot``'s step returns ``{"": snapshot}``, so the
+snapshot lands in ``version=<id>/`` itself).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -85,6 +95,171 @@ def prune_versions(root: str, keep: int = 2) -> list[int]:
     return victims
 
 
+def _committed_dirs(root: str, sub: str) -> list[str]:
+    """Paths of every committed batch's ``sub`` table (≤ _CURRENT):
+    orphan dirs past the pointer (crash between write and commit) are
+    excluded and will be overwritten by the replayed batch."""
+    cur = snapshot_version(root)
+    if cur is None:
+        return []
+    out = []
+    for d in os.listdir(root):
+        if d.startswith("batch="):
+            bid = int(d.split("=", 1)[1])
+            if bid <= cur:
+                out.append(os.path.join(root, d, sub))
+    return sorted(out)
+
+
+def _latest_committed_dir(root: str, sub: str) -> str | None:
+    """The highest-numbered committed batch's ``sub`` table (numeric
+    order — lexicographic sorting would put batch=10 before batch=2),
+    for state kept as a cumulative rollup rather than per-batch
+    contributions.  The batch id is parsed from each entry's own
+    directory NAME, never by splitting the full path on "batch=" —
+    a root path that itself contains a "batch=" substring must not
+    silently select a stale rollup."""
+    cur = snapshot_version(root)
+    if cur is None:
+        return None
+    best = None
+    for d in os.listdir(root):
+        if d.startswith("batch="):
+            bid = int(d.split("=", 1)[1])
+            if bid <= cur and (best is None or bid > best):
+                best = bid
+    if best is None:
+        return None
+    return os.path.join(root, f"batch={best}", sub)
+
+
+def _read_committed(
+    spark: SparkSession, root: str, sub: str, schema: str, latest: bool = False
+) -> DataFrame:
+    """Every committed batch's ``sub`` table (only the latest one with
+    ``latest``, for cumulative rollups), else an empty frame of
+    ``schema``."""
+    if latest:
+        d = _latest_committed_dir(root, sub)
+        dirs = [] if d is None else [d]
+    else:
+        dirs = _committed_dirs(root, sub)
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
+
+
+def _prune_superseded(root: str, sub: str) -> None:
+    """Delete every committed batch's ``sub`` table BELOW the current
+    pointer — for state kept as a CUMULATIVE rollup (each batch
+    persists the full fold and only the latest committed copy is ever
+    read), where retaining history would grow disk as
+    O(n_batches × state).  Idempotent and crash-safe: the pointer's own
+    batch is never touched, so :func:`_latest_committed_dir` always
+    resolves; a crash mid-prune just leaves superseded dirs the next
+    batch's prune removes."""
+    cur = snapshot_version(root)
+    if cur is None:
+        return
+    for d in os.listdir(root):
+        if d.startswith("batch=") and int(d.split("=", 1)[1]) < cur:
+            p = os.path.join(root, d, sub)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+
+
+def _begin_batch(
+    root: str,
+    checkpoint_dir: str,
+    batch_id: int,
+    what: str,
+    pairing: str,
+) -> bool:
+    """Run-identity guard + replay skip: False = replayed batch already
+    committed; raises when the checkpoint lineage does not match the
+    recorded identity.
+
+    Replay-skip is only sound if these batch ids come from the SAME
+    checkpoint lineage the committed state was built from: a
+    lost/recreated checkpoint restarts batch ids at 0, and silently
+    skipping those would freeze the state forever.  The query id
+    recorded beside _CURRENT is that lineage; mismatch fails LOUDLY."""
+    qid = _checkpoint_query_id(checkpoint_dir)
+    run_path = os.path.join(root, _RUN)
+    stored = None
+    try:
+        with open(run_path) as fh:
+            stored = fh.read().strip() or None
+    except FileNotFoundError:
+        pass
+    current = snapshot_version(root)
+    if current is not None and stored is not None and qid != stored:
+        raise RuntimeError(
+            f"{what} at {root} was built by streaming query {stored} but "
+            f"this checkpoint ({checkpoint_dir}) is query {qid}: its batch "
+            f"ids do not line up with {pairing}"
+        )
+    if (stored is None or current is None) and qid is not None:
+        # adopt this checkpoint's identity: first fold ever, or a root
+        # with no committed batch yet (nothing to protect)
+        tmp = os.path.join(root, f".{_RUN}.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(qid)
+        os.rename(tmp, run_path)
+    return not (current is not None and current >= batch_id)
+
+
+def _commit_batch(root: str, batch_id: int) -> None:
+    tmp = os.path.join(root, f".{_POINTER}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(str(batch_id))
+    os.rename(tmp, os.path.join(root, _POINTER))  # atomic commit
+
+
+def _fold_committed(
+    stream: DataFrame,
+    root: str,
+    checkpoint_dir: str,
+    what: str,
+    step: Callable[[DataFrame, int], dict[str, DataFrame]],
+    prune: Iterable[str] = (),
+    on_batch: Callable[[int], None] | None = None,
+    prefix: str = "batch",
+    pairing: str = "the committed batches. checkpoint_dir and index root "
+    "must live and die as a pair.",
+) -> None:
+    """Drain ``stream`` with availableNow, folding each micro-batch
+    into the committed state at ``root``: guard + replay skip
+    (:func:`_begin_batch`), then ``step(batch_df, batch_id)``'s
+    ``{sub: frame}`` parquet writes under ``<prefix>=<batch_id>/`` in
+    dict order, the atomic ``_CURRENT`` commit, the prune of the
+    ``prune`` cumulative tables, and ``on_batch(batch_id)``.  See the
+    module doc for the commit/replay contract.  ``what`` and
+    ``pairing`` word the lineage-mismatch error."""
+    os.makedirs(root, exist_ok=True)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        if not _begin_batch(root, checkpoint_dir, batch_id, what, pairing):
+            return  # replayed batch: every table already committed
+        out = os.path.join(root, f"{prefix}={batch_id}")
+        for sub, frame in step(batch_df, batch_id).items():
+            frame.write.mode("overwrite").parquet(os.path.join(out, sub))
+        _commit_batch(root, batch_id)
+        for sub in prune:
+            _prune_superseded(root, sub)
+        if on_batch is not None:
+            on_batch(batch_id)
+
+    (
+        stream.writeStream.foreachBatch(fold)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def maintain_snapshot(
     spark: SparkSession,
     delta_stream: DataFrame,
@@ -96,59 +271,23 @@ def maintain_snapshot(
     availableNow, folding each micro-batch into the snapshot at
     ``root`` via :func:`apply_changelog`.  See module doc for the
     commit/replay contract."""
-    os.makedirs(root, exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # Replay-skip is only sound if these batch ids come from the SAME
-        # checkpoint lineage the snapshot was built from: a lost/recreated
-        # checkpoint restarts batch ids at 0, and silently skipping those
-        # would freeze the snapshot forever.  The query id recorded beside
-        # _CURRENT is that lineage; mismatch fails LOUDLY.
-        qid = _checkpoint_query_id(checkpoint_dir)
-        run_path = os.path.join(root, _RUN)
-        stored = None
-        try:
-            with open(run_path) as fh:
-                stored = fh.read().strip() or None
-        except FileNotFoundError:
-            pass
-        current = snapshot_version(root)
-        if current is not None and stored is not None and qid != stored:
-            raise RuntimeError(
-                f"snapshot at {root} was built by streaming query {stored} "
-                f"but this checkpoint ({checkpoint_dir}) is query {qid}: "
-                "its batch ids do not line up with the applied versions. "
-                "checkpoint_dir and snapshot root must live and die as a "
-                "pair — restore the original checkpoint, or start a fresh "
-                "snapshot root for the new checkpoint."
-            )
-        if (stored is None or current is None) and qid is not None:
-            # adopt this checkpoint's identity: first fold ever, or a
-            # root with no committed version yet (nothing to protect)
-            tmp = os.path.join(root, f".{_RUN}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(qid)
-            os.rename(tmp, run_path)
-        if current is not None and current >= batch_id:
-            return  # replayed batch already committed — skip whole
+    def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         prev = read_snapshot(spark, root)
         if prev is None:
             prev = spark.createDataFrame(
                 [], batch_df.select(key, "value").schema
             )
-        new = apply_changelog(prev, batch_df, key=key).select(key, "value")
-        out = os.path.join(root, f"version={batch_id}")
-        new.write.mode("overwrite").parquet(out)
-        tmp = os.path.join(root, f".{_POINTER}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.rename(tmp, os.path.join(root, _POINTER))  # atomic commit
+        return {"": apply_changelog(prev, batch_df, key=key).select(key, "value")}
 
-    q = (
-        delta_stream.writeStream.foreachBatch(fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_committed(
+        delta_stream,
+        root,
+        checkpoint_dir,
+        "snapshot",
+        step,
+        prefix="version",
+        pairing="the applied versions. checkpoint_dir and snapshot root "
+        "must live and die as a pair — restore the original checkpoint, "
+        "or start a fresh snapshot root for the new checkpoint.",
     )
-    q.awaitTermination()

@@ -604,6 +604,47 @@ def test_package_has_one_memo_type():
     assert not hasattr(caching, "MemoSlots")
 
 
+def test_persisted_faces_share_one_commit_loop():
+    """Every persisted streaming face folds through
+    ``snapshot._fold_committed``: no module but ``snapshot.py`` calls
+    the replay guard (``_begin_batch``) or the ``_CURRENT`` commit
+    (``_commit_batch``), and ``embindex.py`` + ``snapshot.py`` hold one
+    ``.foreachBatch(`` call between them, inside that helper, so a new
+    face cannot grow a loop of its own."""
+    import ast
+    import pathlib
+
+    import kafka_streams_repartition_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    stream_dir = root / "streaming"
+    guard_calls, loops = [], []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        owner = {}  # node -> name of the top-level function holding it
+        for top in tree.body:
+            if isinstance(top, ast.FunctionDef):
+                for node in ast.walk(top):
+                    owner[node] = top.name
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            where = f"{path.relative_to(root)}:{node.lineno}"
+            if name in ("_begin_batch", "_commit_batch") and path.name != "snapshot.py":
+                guard_calls.append(where)
+            if (
+                name == "foreachBatch"
+                and isinstance(f, ast.Attribute)
+                and path.parent == stream_dir
+                and path.name in ("embindex.py", "snapshot.py")
+            ):
+                loops.append((where, owner.get(node)))
+    assert not guard_calls, f"commit discipline outside snapshot.py: {guard_calls}"
+    assert [fn for _, fn in loops] == ["_fold_committed"], loops
+
+
 def test_kmeans_producer_has_no_package_callers():
     """``similarity.kmeans_cells`` is the registry's producer query: it
     always trains fresh, so a package caller would re-run Lloyd per

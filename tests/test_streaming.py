@@ -394,52 +394,6 @@ def test_stream_pickup_orders_live_dims_update_lands_next_batch(
     assert any(want_v1[k] != want_v2[k] for k in got1)
 
 
-def test_migrate_v1_stream_tws_matches_legacy_api(spark, tmp_path):
-    """P1's remaining imperative form (Spark 4's
-    transformWithStateInPandas over _merge_one) folds a replay to the
-    V1 stats of the whole replay — the state the declarative
-    migrate_v1_stream is held to."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs protobuf (state-server wire format)",
-    )
-    from kafka_streams_repartition_spark.streaming.state import (
-        migrate_v1_stream_tws,
-    )
-
-    ref = generate_reference_tables(spark, n_orders=80, seed=23)
-    li = orders_as_lineitems(ref["purchase_orders"], ref["products"])
-    rec = v1_typed_to_records(product_stats_v1_typed(li))
-    path = str(tmp_path / "v1rec")
-    rec.coalesce(2).write.mode("overwrite").parquet(path)
-    stream = (
-        spark.readStream.schema(rec.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    final = run_to_memory_available_now(
-        spark, migrate_v1_stream_tws(stream), mode="update"
-    )
-    got = {}
-    for r in final.collect():  # update re-emissions: fold order, last wins
-        got[r["sku"]] = (
-            r["orders"],
-            r["quantity"],
-            json.loads(r["store_entries_json"]),
-            sorted(json.loads(r["order_ids_json"])),
-        )
-    want = {
-        r["sku"]: (
-            r["orders"],
-            float(r["quantity"]),
-            {str(e["store_id"]): e["quantity"] for e in r["quantity_by_store"]},
-            sorted(str(x) for x in r["order_ids"]),
-        )
-        for r in product_stats_v1_typed(li).collect()
-    }
-    assert got == want
-
-
 def test_windowed_watermark_drops_late_data(spark, tmp_path):
     """Event-time windows with a watermark: rows arriving after their
     window passed the persisted watermark are dropped, on-time rows
@@ -1397,6 +1351,77 @@ def test_maintain_snapshot_rejects_foreign_checkpoint(spark, tmp_path):
     assert {
         (r["key"], r["value"]) for r in read_snapshot(spark, root).collect()
     } == {(1, 10.0), (2, 20.0)}
+
+
+def test_fold_committed_commits_replays_and_guards_lineage(spark, tmp_path):
+    """The one commit loop every persisted streaming face runs
+    (``snapshot._fold_committed``): each micro-batch's step tables land
+    under ``batch=<id>/`` and ``_CURRENT`` names the last id; a re-drain
+    on the same checkpoint runs the step for the new input only; a
+    fresh checkpoint on the same root fails before its step runs,
+    naming the query that built the root."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from kafka_streams_repartition_spark.streaming.snapshot import (
+        _checkpoint_query_id,
+        _fold_committed,
+        snapshot_version,
+    )
+
+    src = str(tmp_path / "src")
+    root = str(tmp_path / "idx")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "id long"
+    calls = []
+
+    def add(ids):
+        spark.createDataFrame([(i,) for i in ids], schema).coalesce(
+            1
+        ).write.mode("append").parquet(src)
+
+    def step(batch_df, batch_id):
+        calls.append(batch_id)
+        return {"rows": batch_df}
+
+    def drain(cp):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        _fold_committed(stream, root, cp, "test index", step)
+
+    def ids(batch_id):
+        path = os.path.join(root, f"batch={batch_id}", "rows")
+        return {r["id"] for r in spark.read.parquet(path).collect()}
+
+    add([1, 2])
+    add([3])
+    drain(ckpt)
+    assert calls == [0, 1]
+    assert sorted(d for d in os.listdir(root) if d.startswith("batch=")) == [
+        "batch=0",
+        "batch=1",
+    ]
+    assert snapshot_version(root) == 1
+    assert ids(0) | ids(1) == {1, 2, 3}
+
+    add([4])
+    drain(ckpt)
+    assert calls == [0, 1, 2]
+    assert snapshot_version(root) == 2
+    assert ids(2) == {4}
+
+    stored = _checkpoint_query_id(ckpt)
+    assert stored is not None
+    with pytest.raises((RuntimeError, StreamingQueryException)) as exc:
+        drain(str(tmp_path / "ckpt2"))
+    assert stored in str(exc.value)
+    assert "live and die as a pair" in str(exc.value)
+    assert calls == [0, 1, 2]
+    assert snapshot_version(root) == 2
 
 
 def test_bench_load_flag_thresholds():
