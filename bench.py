@@ -20,6 +20,12 @@ numbers it produced.
 
 Each query is fully materialized through the noop sink (forces every
 column to compute — a bare count() would let Catalyst prune the work).
+
+Environment: SPARK_GRAFT_SF_DIR (input dir), SPARK_GRAFT_BENCH_ONLY
+(comma-separated subset of queries), SPARK_GRAFT_BENCH_OUT (artifact
+path, default bench_results.json) and SPARK_GRAFT_BENCH_REPEATS.
+:func:`run_bench` runs one such bench in a fresh process; the
+protocols in tools/ call it.
 """
 
 from __future__ import annotations
@@ -28,11 +34,14 @@ import gc
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
 import __spark_entry__ as entrymod
 from kafka_streams_repartition_spark.session import get_spark
+
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 def load_flag(loadavg_1m: float, cores: int) -> str:
@@ -229,7 +238,6 @@ def main() -> None:
     entrymod.entry(spark).count()
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    verbose = os.environ.get("SPARK_GRAFT_BENCH_VERBOSE", "") == "1"
     # subset mode for scale probes: run only the named queries
     only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
     only = set(only_env.split(",")) if only_env else None
@@ -266,8 +274,7 @@ def main() -> None:
     # their Python frames die AND the JVM GCs AND ContextCleaner drains
     # — three async stages whose backlog across 200+ queries is storage
     # pressure late queries pay for.  One System.gc() per query bounds
-    # the backlog to a single query's worth.  Off-switch for A/B runs.
-    jvm_gc = os.environ.get("SPARK_GRAFT_BENCH_JVMGC", "1") == "1"
+    # the backlog to a single query's worth.
     for name, fn in entrymod.queries().items():
         if only is not None and name not in only:
             continue
@@ -317,13 +324,10 @@ def main() -> None:
             # in-region JVM GC ms per repeat (None if JMX unreadable)
             "gc_ms": rep_gc,
         }
-        if verbose:
-            print(f"# {name}: {timings[name]}s", file=sys.stderr)
-        if jvm_gc:
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
+        try:
+            spark.sparkContext._jvm.System.gc()
+        except Exception:
+            pass
         gc.collect()
 
     total = round(sum(timings.values()), 3)
@@ -388,7 +392,7 @@ def main() -> None:
         ),
         "load_flag": flag,
         "repeat_stability": "unstable" if unstable else "stable",
-        "jvm_gc_per_query": jvm_gc,
+        "jvm_gc_per_query": True,
         "meminfo_start_kb": mem_start,
         "meminfo_end_kb": _meminfo(),
     }
@@ -408,7 +412,7 @@ def main() -> None:
     # BENCH_r03 to 75/109 timings ("parsed": null).  The file is the full
     # record; stdout stays a single compact JSON line.
     results_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_results.json"
+        REPO, "bench_results.json"
     )
     with open(results_path, "w") as fh:
         json.dump(out, fh, indent=1)
@@ -424,6 +428,41 @@ def main() -> None:
         "load_flag": flag, "n_repeat_unstable": len(unstable),
         "queries_in": "bench_results.json",
     }, separators=(",", ":")))
+
+
+RUN_TIMEOUT_S = 3600
+
+
+def run_bench(sf_dir: str, queries: list[str], out_path: str) -> dict:
+    """Run ``queries`` at ``sf_dir`` in a fresh ``bench.py`` process (its
+    own JVM, cold memos; the rest of the environment, e.g.
+    ``SPARK_GRAFT_CPUS``, is inherited) and return the artifact it
+    writes to ``out_path``.  A timeout or a non-zero exit comes back as
+    an artifact whose ``errors`` names every query, so one failed leg
+    does not stop a multi-leg protocol."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_BENCH_ONLY=",".join(queries),
+        SPARK_GRAFT_BENCH_OUT=out_path,
+    )
+    try:
+        subprocess.run(
+            [sys.executable, os.path.join(REPO, "bench.py")],
+            cwd=REPO,
+            env=env,
+            check=True,
+            stdout=subprocess.DEVNULL,
+            timeout=RUN_TIMEOUT_S,
+        )
+    except subprocess.TimeoutExpired:
+        return {"queries": {},
+                "errors": {q: f"timeout>{RUN_TIMEOUT_S}s" for q in queries}}
+    except subprocess.CalledProcessError as exc:
+        return {"queries": {},
+                "errors": {q: f"exit {exc.returncode}" for q in queries}}
+    with open(out_path) as fh:
+        return json.load(fh)
 
 
 if __name__ == "__main__":

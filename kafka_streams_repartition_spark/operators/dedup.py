@@ -34,7 +34,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark import StorageLevel
@@ -263,7 +262,7 @@ LEFT JOIN dup_reps dr ON m.rep_id = dr.rep_id
 # lowest-doc_id LIMIT, and ``dedup_recall_eval`` inherits the capped
 # truth on both engines because it composes this operator and its
 # oracle verbatim.
-JACCARD_QUERY_CAP = int(os.environ.get("JACCARD_QUERY_CAP", "4096"))
+JACCARD_QUERY_CAP = 4096
 
 
 def dedup_ngram_jaccard(t: dict[str, DataFrame]) -> DataFrame:
@@ -1568,7 +1567,7 @@ HAMMING_BITS = 64
 HAMMING_CHUNKS = 4
 HAMMING_CHUNK_BITS = HAMMING_BITS // HAMMING_CHUNKS
 HAMMING_RADIUS = 3  # < HAMMING_CHUNKS, the pigeonhole-exactness bound
-HAMMING_QUERY_CAP = int(os.environ.get("HAMMING_QUERY_CAP", "4096"))
+HAMMING_QUERY_CAP = 4096
 
 # vote source for 64 bits: 64 hex digits = md5(tok) ‖ md5(tok ‖ '|s2'),
 # one vote per digit via the high-bit test the 16-bit fingerprint uses
@@ -1838,7 +1837,7 @@ FROM g
 # corpus; the cap keeps the broadcast side constant (4096 × 64 dims × 8 B
 # ≈ 2 MB).  Mirrors similarity.ANN_QUERY_CAP; the oracle LIMITs
 # identically.
-EMBDUP_QUERY_CAP = int(os.environ.get("EMBDUP_QUERY_CAP", "4096"))
+EMBDUP_QUERY_CAP = 4096
 
 
 def dedup_embedding(t: dict[str, DataFrame]) -> DataFrame:
@@ -1928,11 +1927,10 @@ EMBDUP_BANDS = 12
 # mitigation there).  ``derived_band_planes`` walks one plane per
 # corpus doubling past ``EMBDUP_PLANE_SCALE``·2^p, clamped to the
 # [MIN, MAX] range ``embdup_plane_tuning`` has actually measured, so
-# the default config survives the 100× decade probe with no manual
-# override: 500–12.8k vecs → 4 planes, 200k (the sf10 probe corpus)
-# → 8.  ``EMBDUP_BAND_PLANES`` stays honored as a manual deploy
-# override; beyond MAX=8, re-measure (extend PLANE_LAYOUTS / raise
-# bands) rather than defaulting blind — the knob stays measured.
+# the default config survives the 100× decade probe: 500–12.8k vecs
+# → 4 planes, 200k (the sf10 probe corpus) → 8.  Beyond MAX=8,
+# re-measure (extend PLANE_LAYOUTS / raise bands) rather than
+# defaulting blind.
 # Both engines derive from the SAME integer thresholds (never a
 # float log2, whose last-ulp behavior could disagree at an exact
 # power-of-two boundary), so Spark and the oracle always band
@@ -1940,7 +1938,6 @@ EMBDUP_BANDS = 12
 EMBDUP_PLANE_MIN = 4
 EMBDUP_PLANE_MAX = 8
 EMBDUP_PLANE_SCALE = 800
-_EMBDUP_PLANES_ENV = os.environ.get("EMBDUP_BAND_PLANES")
 
 
 def derived_band_planes(n_vecs: int) -> int:
@@ -1949,10 +1946,7 @@ def derived_band_planes(n_vecs: int) -> int:
     ``n_vecs ≤ EMBDUP_PLANE_SCALE · 2^p`` (one plane per corpus
     doubling — expected random collisions per band stay
     ~n·(n/SCALE·2^p) ≲ n, i.e. the verify join stays linear in the
-    corpus).  Manual ``EMBDUP_BAND_PLANES`` env override wins when
-    set; see the sizing comment above."""
-    if _EMBDUP_PLANES_ENV:
-        return int(_EMBDUP_PLANES_ENV)
+    corpus); see the sizing comment above."""
     p = EMBDUP_PLANE_MIN
     while p < EMBDUP_PLANE_MAX and n_vecs > EMBDUP_PLANE_SCALE * (1 << p):
         p += 1
@@ -1963,8 +1957,6 @@ def _derived_planes_sql() -> str:
     """DuckDB scalar mirroring :func:`derived_band_planes` over the
     ``embeddings`` view — integer-threshold CASE, bit-exact against
     the Python rule at every corpus size."""
-    if _EMBDUP_PLANES_ENV:
-        return str(int(_EMBDUP_PLANES_ENV))
     whens = " ".join(
         f"WHEN count(*) <= {EMBDUP_PLANE_SCALE * (1 << p)} THEN {p}"
         for p in range(EMBDUP_PLANE_MIN, EMBDUP_PLANE_MAX)
@@ -2253,16 +2245,12 @@ def dedup_embedding_lsh(
 def _embdup_oracle() -> str:
     from ..functions.hashing import hex_sign
 
-    # plane literals for every plane the derived rule could select
-    # (manual override: exactly the overridden count); the sigs CTE
-    # filters to the corpus-derived count at QUERY time, so one static
-    # string is correct at every corpus size
-    n_gen = (
-        int(_EMBDUP_PLANES_ENV) if _EMBDUP_PLANES_ENV else EMBDUP_PLANE_MAX
-    )
+    # plane literals for every plane the derived rule could select; the
+    # sigs CTE filters to the corpus-derived count at QUERY time, so one
+    # static string is correct at every corpus size
     rows = []
     for b in range(EMBDUP_BANDS):
-        for p in range(n_gen):
+        for p in range(EMBDUP_PLANE_MAX):
             for i in range(EMBED_DIM):
                 s = hex_sign(f"embdup:b{b}p{p}:{i}")
                 rows.append(f"({b}, {p}, {i + 1}, {s})")
@@ -2796,7 +2784,7 @@ FROM n_t CROSS JOIN n_h
 # rows of V per matmul block in the in-cell verify: pairwise working set
 # is SEMDEDUP_BLOCK·n doubles ≈ 2× the cell's own vector frame (n·DIM),
 # whatever the cell size
-SEMDEDUP_BLOCK = int(os.environ.get("SEMDEDUP_BLOCK", "128"))
+SEMDEDUP_BLOCK = 128
 
 # max rows per verify CHUNK for a k-means cell — the cell-blocking twin of
 # EMBDUP_BUCKET_CAP: k-means cells skew (near-duplicate-saturated web text
@@ -2804,9 +2792,7 @@ SEMDEDUP_BLOCK = int(os.environ.get("SEMDEDUP_BLOCK", "128"))
 # cell's whole O(n·DIM) vector frame lands in a single Arrow task.  With it,
 # an oversize cell is hash-split into chunk-pair tiles, so peak task memory
 # is ~2·cap vectors + the row-blocked matmul, however degenerate the cell.
-SEMDEDUP_CELL_CAP = int(
-    os.environ.get("SEMDEDUP_CELL_CAP", str(EMBDUP_BUCKET_CAP))
-)
+SEMDEDUP_CELL_CAP = EMBDUP_BUCKET_CAP
 
 
 def semdedup(

@@ -20,8 +20,6 @@ last-ulp float noise can't reorder results between engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,18 +61,15 @@ N_PLANES = 8
 # is what binds — behavior there is unchanged.  The driver-collected
 # forms stay bounded too: ≤ cap × DIM doubles (~2 MB worst case).
 #
-# Manual ``ANN_QUERY_CAP`` env override wins when set (the measured
-# deploy knob — production ANN serves a FIXED query list; the decade
-# probes' capped legs pin it to isolate per-query scaling).  Tests
-# monkeypatch the module attribute directly for the same effect; the
-# override reaches BOTH engines at any time because the oracle strings
-# late-bind the scalar via :func:`render_oracle` (``oracle_sql()``
-# renders on every call — nothing is frozen at import).
+# ``ANN_QUERY_CAP`` pins a FIXED query list in place of the derived cap
+# when set (``None`` by default).  Tests monkeypatch it; the pin reaches
+# BOTH engines at any time because the oracle strings late-bind the
+# scalar via :func:`render_oracle` (``oracle_sql()`` renders on every
+# call — nothing is frozen at import).
 ANN_QCAP_MIN = 64
 ANN_QCAP_MAX = 4096
 ANN_WORK_BUDGET = 12_800_000
-_ANN_QCAP_ENV = os.environ.get("ANN_QUERY_CAP")
-ANN_QUERY_CAP: int | None = int(_ANN_QCAP_ENV) if _ANN_QCAP_ENV else None
+ANN_QUERY_CAP: int | None = None
 
 
 def derived_ann_query_cap(n_vecs: int) -> int:
@@ -83,9 +78,8 @@ def derived_ann_query_cap(n_vecs: int) -> int:
     holds every query-vs-corpus op's Q·N comparison count at
     ~ANN_WORK_BUDGET once the corpus outgrows the budget (above
     12.8M/64 = 200k vectors the MIN clamp binds and work grows
-    linearly again, at the smallest usable query set).  A manual
-    ``ANN_QUERY_CAP`` (env at import, or monkeypatched module
-    attribute) wins."""
+    linearly again, at the smallest usable query set).  A set
+    ``ANN_QUERY_CAP`` module attribute wins."""
     if ANN_QUERY_CAP is not None:
         return ANN_QUERY_CAP
     return max(ANN_QCAP_MIN, min(ANN_QCAP_MAX, ANN_WORK_BUDGET // max(n_vecs, 1)))
@@ -184,9 +178,9 @@ def _qcap_ids(emb: DataFrame, qcap: int) -> DataFrame:
 # LATE-BOUND: the module-level oracle constants embed the placeholder
 # token below, and :func:`render_oracle` substitutes the current
 # ``_ann_qcap_sql()`` at ``oracle_sql()`` call time — so a runtime
-# ``ANN_QUERY_CAP`` override (env-after-import or monkeypatched module
-# attribute) reaches the ORACLE side exactly as it reaches the Spark
-# side, instead of freezing whatever the cap was at import.
+# ``ANN_QUERY_CAP`` pin (a monkeypatched module attribute) reaches the
+# ORACLE side exactly as it reaches the Spark side, instead of freezing
+# whatever the cap was at import.
 # bare identifier: an UN-rendered oracle fails fast in the binder
 # instead of silently comparing against an empty query set
 _QCAP_TOKEN = "__ANN_QCAP_SCALAR__"
@@ -3277,14 +3271,12 @@ MRL_DIMS = (8, 16, 32, 64)
 # same query list at every corpus size.  At the fixture scales
 # (≤ 2k vectors) the budget leaves the cap at MAX and the natural
 # %-subset (≤ 20 ids) is what binds — behavior there is unchanged.
-# Manual ``MRL_QUERY_CAP`` env override wins when set (the measured
-# deploy knob, same contract as ``ANN_QUERY_CAP``); recall estimated
-# over ≥ MIN = 64 queries keeps the curve statistically usable while
-# the budget keeps the default-config decade leg linear in N.
+# Recall estimated over ≥ MIN = 64 queries keeps the curve
+# statistically usable while the budget keeps the default-config
+# decade leg linear in N.
 MRL_QCAP_MIN = 64
 MRL_QCAP_MAX = 1024
 MRL_WORK_BUDGET = 12_800_000
-_MRL_QCAP_ENV = os.environ.get("MRL_QUERY_CAP")
 
 
 def derived_mrl_query_cap(n_vecs: int) -> int:
@@ -3293,9 +3285,7 @@ def derived_mrl_query_cap(n_vecs: int) -> int:
     — holds each leg's Q·N comparison count at ~MRL_WORK_BUDGET once
     the corpus outgrows the budget (above 12.8M/64 = 200k vectors the
     MIN clamp binds and work grows linearly again, at the smallest
-    usable query set).  Manual ``MRL_QUERY_CAP`` env override wins."""
-    if _MRL_QCAP_ENV:
-        return int(_MRL_QCAP_ENV)
+    usable query set)."""
     return max(MRL_QCAP_MIN, min(MRL_QCAP_MAX, MRL_WORK_BUDGET // max(n_vecs, 1)))
 
 
@@ -3303,8 +3293,6 @@ def _mrl_qcap_sql() -> str:
     """DuckDB scalar mirroring :func:`derived_mrl_query_cap` over the
     ``embeddings`` view — BIGINT floor-division, bit-exact against the
     Python rule at every corpus size."""
-    if _MRL_QCAP_ENV:
-        return str(int(_MRL_QCAP_ENV))
     return (
         f"(SELECT GREATEST({MRL_QCAP_MIN}, LEAST({MRL_QCAP_MAX}, "
         f"{MRL_WORK_BUDGET} // GREATEST(count(*), 1))) FROM embeddings)"
@@ -3412,7 +3400,7 @@ def mrl_recall_curve(t: dict[str, DataFrame]) -> DataFrame:
     # per-leg recall reductions.  Each cosine/rank expression is
     # bit-identical to `_truncated_topk(d)`'s (same element_at range,
     # fold order, rounding, tie order) — pinned by
-    # tests/test_r14_opts.py against the leg-per-scan construction.
+    # tests/test_memos.py against the leg-per-scan construction.
     red = [d for d in MRL_DIMS if d != DIM]
     emb = fan_out(t["embeddings"]).select(
         "vec_id",

@@ -231,12 +231,11 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     (measured: skipping the probe serialized shingling/hashing and cost
     3-9x on every per-row-heavy query at sf0.1).
 
-    On a real cluster the inputs arrive in many splits and the probe is
-    pure plan-build overhead — set ``SPARK_GRAFT_NO_FANOUT_PROBE=1``
-    there to make ``fan_out`` a declared no-op.
+    On a real cluster the inputs arrive in many splits, the probe sees
+    at least ``target`` partitions and ``fan_out`` returns ``df``
+    unchanged; the probe itself is one memoized plan→RDD conversion
+    per frame.
     """
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT_PROBE"):
-        return df
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     # Memoize the probe per DataFrame object: load_table hands out the

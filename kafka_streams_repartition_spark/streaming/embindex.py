@@ -79,13 +79,13 @@ def _index_planes(root: str, requested: int | None = None) -> int:
     pointer and every later batch (or restart) reads it back.  The
     batch operator derives its count from the FINAL corpus size
     (``derived_band_planes``); a streaming index sizes for the
-    EXPECTED corpus at creation — pass ``planes`` (or set the
-    ``EMBDUP_BAND_PLANES`` override) when standing up an index for a
-    corpus past ``EMBDUP_PLANE_SCALE``·2^MIN vectors, exactly as a
-    production LSH service fixes its hash family at deploy time.
+    EXPECTED corpus at creation — pass ``planes`` when standing up an
+    index for a corpus past ``EMBDUP_PLANE_SCALE``·2^MIN vectors,
+    exactly as a production LSH service fixes its hash family at
+    deploy time; unpinned, a new index starts at ``EMBDUP_PLANE_MIN``.
     Snapshot-equals-batch holds when the pinned count equals the batch
     rule's answer for the drained corpus (test corpora: both MIN)."""
-    from ..operators.dedup import EMBDUP_PLANE_MIN, _EMBDUP_PLANES_ENV
+    from ..operators.dedup import EMBDUP_PLANE_MIN
 
     os.makedirs(root, exist_ok=True)
     path = os.path.join(root, _PLANES_FILE)
@@ -102,11 +102,7 @@ def _index_planes(root: str, requested: int | None = None) -> int:
         return stored
     except FileNotFoundError:
         pass
-    p = (
-        requested
-        if requested is not None
-        else (int(_EMBDUP_PLANES_ENV) if _EMBDUP_PLANES_ENV else EMBDUP_PLANE_MIN)
-    )
+    p = requested if requested is not None else EMBDUP_PLANE_MIN
     tmp = os.path.join(root, f".{_PLANES_FILE}.tmp")
     with open(tmp, "w") as fh:
         fh.write(str(p))
@@ -161,16 +157,6 @@ def _with_batch(df: DataFrame, batch_id: int) -> DataFrame:
     """``df`` tagged with the batch id that wrote it: per-batch
     snapshots and latest-wins changelogs key their read-back on it."""
     return df.withColumn("batch", F.lit(batch_id).cast("long"))
-
-
-def _latest_snapshot(
-    spark: SparkSession, root: str, sub: str, schema: str
-) -> DataFrame:
-    """The highest committed batch's rows of the per-batch ``sub``
-    snapshot, without its ``batch`` column."""
-    allr = _read_committed(spark, root, sub, schema)
-    last = allr.agg(F.max("batch").alias("b")).collect()[0]["b"]
-    return allr.filter(F.col("batch") == last).drop("batch")
 
 
 def _latest_per_doc(spark: SparkSession, root: str, schema: str) -> DataFrame:
@@ -1109,7 +1095,9 @@ def stream_domain_kl(
         doc_stream, root, checkpoint_dir, "domain-KL monitor", step,
         prune=("counts",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "kl", _KL_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "kl", _KL_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 _DE_SNAP_SCHEMA = (
@@ -1154,7 +1142,9 @@ def stream_domain_entropy(
         doc_stream, root, checkpoint_dir, "domain-entropy monitor", step,
         prune=("counts",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "entropy", _DE_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "entropy", _DE_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming DoReMi reweighting ------------------------------------------
@@ -1203,7 +1193,9 @@ def stream_doremi_weights(
         doc_stream, root, checkpoint_dir, "DoReMi monitor", step,
         prune=("counts",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "doremi", _DOREMI_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "doremi", _DOREMI_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming Zipf vocabulary monitor --------------------------------------
@@ -1272,7 +1264,9 @@ def stream_zipf_fit(
         doc_stream, root, checkpoint_dir, "Zipf monitor", step,
         prune=("counts",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "zipf", _ZIPF_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "zipf", _ZIPF_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming mixture-plan decision table -------------------------------------
@@ -1331,7 +1325,9 @@ def stream_mixture_plan(
         doc_stream, root, checkpoint_dir, "mixture-plan monitor", step,
         prune=("counts",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "plan", _MP_SCHEMA)
+    return _read_committed(
+        spark, root, "plan", _MP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming filter-attribution cascade monitor -----------------------------
@@ -1646,7 +1642,9 @@ def stream_token_budget(
         doc_stream, root, checkpoint_dir, "token-budget controller", step,
         prune=("avail",), on_batch=on_batch,
     )
-    return _latest_snapshot(spark, root, "alloc", _TB_ALLOC_SCHEMA)
+    return _read_committed(
+        spark, root, "alloc", _TB_ALLOC_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming cross-modal duplicate entity resolution -------------------------
@@ -1848,7 +1846,9 @@ def stream_crossmodal_clusters(
         doc_stream, root, checkpoint_dir, "crossmodal cluster index", step,
         prune=("labels", "flags"), on_batch=on_batch,  # cumulative: latest only
     )
-    return _latest_snapshot(spark, root, "clusters", _CM_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "clusters", _CM_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming quality-aware dedup (keep the BEST copy, continuously) ----------
@@ -1958,7 +1958,9 @@ def stream_quality_aware(
         doc_stream, root, checkpoint_dir, "quality-aware dedup index", step,
         prune=("labels",), on_batch=on_batch,  # cumulative: latest only
     )
-    return _latest_snapshot(spark, root, "clusters", _QA_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "clusters", _QA_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming train/val leakage audit ----------------------------------------
@@ -2091,7 +2093,9 @@ def stream_leakage_split(
         doc_stream, root, checkpoint_dir, "leakage-split audit", step,
         prune=("counts",), on_batch=on_batch,  # cumulative: latest only
     )
-    return _latest_snapshot(spark, root, "audit", _LK_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "audit", _LK_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming benchmark decontamination ---------------------------------------
@@ -2243,7 +2247,9 @@ def stream_decontaminate(
         doc_stream, root, checkpoint_dir, "decontamination scrub", step,
         prune=("counts",), on_batch=on_batch,  # cumulative: latest only
     )
-    return _latest_snapshot(spark, root, "scrub", _DC_SNAP_SCHEMA)
+    return _read_committed(
+        spark, root, "scrub", _DC_SNAP_SCHEMA, latest=True
+    ).drop("batch")
 
 
 # --- streaming exact-span dedup (first-occurrence ownership) -------------------

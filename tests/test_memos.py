@@ -1,10 +1,11 @@
-"""Round-14 optimization invariants: every restructure must be
-output-invariant.
+"""Shared-intermediate memos serve exactly what their builds compute.
 
-Each test pins that an optimized path produces EXACTLY what the
-unoptimized computation produces — the optimizations move work
-(shared gram frames, single-pass aggregations, collect-per-round
-lineage truncation), never change what any query computes.
+Each test pins a memoized path against the computation it stands in
+for (the declared producer query, a fresh training, or the inline
+shape), or pins that a memo key carries the module constants its build
+reads.  Memos may change where work happens, never what any query
+computes.  The memo type itself and the one-type guard live in
+``test_invariants.py``.
 """
 
 from __future__ import annotations
@@ -12,10 +13,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_streams_repartition_spark.operators import analytics as an
 from kafka_streams_repartition_spark.operators import dedup as dd
 from kafka_streams_repartition_spark.operators import selection as sl
 from kafka_streams_repartition_spark.operators import similarity as sim
+from kafka_streams_repartition_spark.operators import text_analysis as tx
 from kafka_streams_repartition_spark.sources.tables import load_tables
 
 
@@ -26,9 +27,60 @@ def t(spark, sf_dir):
 
 def _rows(df, cols=None):
     cols = cols or sorted(df.columns)
-    return sorted(
-        tuple(r[c] for c in cols) for r in df.collect()
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_kmeans_memo_matches_fresh_training(t):
+    """kmeans_model's memoized centroid rows equal the fresh-training
+    producer (bit-exact doubles).  ALL upstream memos are cleared
+    first (r13 advisor: leaving _LCENT_MEMO warm meant the "fresh"
+    run still read memoized seed centroids, so a stale seed would
+    have escaped this test), and since r14 ``kmeans_cells`` IS the
+    always-fresh path (producer discipline), so the comparison is
+    memoized-model vs fresh-training by construction."""
+    sim._KMEANS_MEMO.clear()
+    sim._LCENT_MEMO.clear()
+    sim._NVEC_MEMO.clear()
+    a1 = sim.kmeans_model(t)[0]  # trains, populates the memo
+    a2 = sim.kmeans_model(t)[0]  # memo hit
+    fresh = sim.kmeans_cells(t)  # always-fresh producer
+    assert _rows(a1) == _rows(fresh)
+    assert _rows(a2) == _rows(fresh)
+
+
+def test_bf_truth_matches_bruteforce(t):
+    """_bf_truth serves exactly ann_topk_bruteforce's (query, cand)
+    pairs — the gates' memoized truth is the declared query's answer."""
+    sim._BF_TRUTH_MEMO.clear()
+    want = _rows(sim.ann_topk_bruteforce(t).select("query_id", "cand_id"))
+    got = _rows(sim._bf_truth(t))
+    assert got == want
+    assert _rows(sim._bf_truth(t)) == want  # memo hit
+
+
+def test_embdup_truth_matches_inline(t):
+    """_embdup_truth_pairs equals the inline lo/hi distinct pair set."""
+    dd._EMBDUP_TRUTH_CACHE.clear()
+    want = _rows(
+        dd.dedup_embedding(t)
+        .select(
+            F.least("query_id", "cand_id").alias("lo"),
+            F.greatest("query_id", "cand_id").alias("hi"),
+        )
+        .distinct()
     )
+    assert _rows(dd._embdup_truth_pairs(t)) == want
+
+
+def test_bpe_merges_memo_matches_trainer(t):
+    """_bpe_merges equals the (lhs, rhs) sequence of the declared
+    trainer query, in round order."""
+    tx._BPE_MERGES_MEMO.clear()
+    want = [
+        (r["lhs"], r["rhs"])
+        for r in tx.bpe_train_merges(t).orderBy("round").collect()
+    ]
+    assert tx._bpe_merges(t) == want
 
 
 def test_kmeans_cells_producer_never_consults_memo(t):
@@ -142,78 +194,3 @@ def test_memo_key_carries_shaping_constant(
     monkeypatch.setattr(mod, const, value)
     after = measure(build(t))
     assert after != before, f"{const} override served the stale value"
-
-
-def test_repeated_ngram_scan_fused_agg_matches_join_shape(t):
-    """The fused one-aggregation scan equals the pre-r14 two-frame
-    join shape (base ⋈ per-doc-repeated), reconstructed inline from
-    the same shared pair frame."""
-    dg = dd._rns_dg(t)
-    rep = (
-        dg.groupBy("gh")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .filter(F.col("lo") != F.col("hi"))
-        .select("gh")
-    )
-    pd_ = (
-        dg.join(rep, "gh")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_repeated"))
-    )
-    base = dg.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_grams")
-    )
-    want = base.join(pd_, "doc_id", "left").select(
-        "doc_id",
-        "n_grams",
-        F.coalesce(F.col("n_repeated"), F.lit(0))
-        .cast("long")
-        .alias("n_repeated"),
-        F.round(
-            F.coalesce(F.col("n_repeated"), F.lit(0)) / F.col("n_grams"),
-            6,
-        ).alias("repeated_frac"),
-    )
-    assert _rows(dd.repeated_ngram_scan(t)) == _rows(want)
-
-
-def test_table_profile_approx_single_pass_matches_two_pass(t):
-    """The single-aggregation approx profile equals the pre-r14
-    checkpoint + join shape, reconstructed inline from the same
-    register frame."""
-    from kafka_streams_repartition_spark.operators.sketches import (
-        _hll_estimate,
-    )
-
-    regs = an._profile_approx_regs(t).localCheckpoint(eager=False)
-    exact = regs.groupBy("column_name").agg(
-        F.sum("n_vals").alias("n_distinct_exact")
-    )
-    rel_err = F.round(
-        F.abs(F.col("hll_estimate") - F.col("n_distinct_exact"))
-        / F.col("n_distinct_exact"),
-        4,
-    )
-    want = (
-        _hll_estimate(regs, "column_name")
-        .join(exact, "column_name")
-        .select(
-            "column_name",
-            "n_distinct_exact",
-            "hll_estimate",
-            rel_err.alias("rel_err"),
-            (rel_err <= an.HLL_PROFILE_BOUND).alias("within_bound"),
-        )
-    )
-    assert _rows(an.table_profile_approx(t)) == _rows(want)
-
-
-def test_quality_logreg_deterministic_and_cache_faithful(t):
-    """Two fresh trainings of the GD loop produce bit-identical scored
-    frames (every sum is exact DECIMAL and rounds re-synchronize at 12
-    decimals, so repartitioning/order cannot drift them), and the
-    shared consumer cache serves exactly the producer's rows."""
-    a = _rows(sl.quality_logreg(t))
-    b = _rows(sl.quality_logreg(t))
-    assert a == b
-    assert _rows(sl._quality_scored_cached(t)) == a

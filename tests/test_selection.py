@@ -644,3 +644,19 @@ def test_rho_loss_select_semantics(t):
     assert key == sorted(key)
     assert (out["train_loss"] > 0).all()
     assert (out["irreducible_loss"] > 0).all()
+
+
+def _rows(df, cols=None):
+    cols = cols or sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_quality_logreg_deterministic_and_cache_faithful(t):
+    """Two fresh trainings of the GD loop produce bit-identical scored
+    frames (every sum is exact DECIMAL and rounds re-synchronize at 12
+    decimals, so repartitioning/order cannot drift them), and the
+    shared consumer cache serves exactly the producer's rows."""
+    a = _rows(sel.quality_logreg(t))
+    b = _rows(sel.quality_logreg(t))
+    assert a == b
+    assert _rows(sel._quality_scored_cached(t)) == a

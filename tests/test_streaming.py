@@ -2089,6 +2089,46 @@ def test_stream_domain_kl_every_snapshot_equals_batch(spark, tmp_path):
     assert os.path.isdir(os.path.join(root, "batch=1", "counts"))
 
 
+def test_stream_domain_kl_read_back_runs_no_job(spark, tmp_path):
+    """Returning the latest snapshot starts no Spark job: ``_CURRENT``
+    already names the latest batch, so the read-back is a lazy scan of
+    that one committed dir (scanning every snapshot to collect
+    ``max(batch)`` cost two jobs).  After a two-batch drain, a restart
+    on the same checkpoint runs no micro-batch, so the jobs started in
+    the caller's job group are the read-back's alone."""
+    from kafka_streams_repartition_spark.sources.tables import load_tables
+    from kafka_streams_repartition_spark.streaming import stream_domain_kl
+    from kafka_streams_repartition_spark.streaming.snapshot import (
+        snapshot_version,
+    )
+
+    t = load_tables(spark, "/root/testdata/sf0.001")
+    docs = t["documents"].select("doc_id", "text", "source")
+    src = str(tmp_path / "src")
+    docs.filter("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(src)
+    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
+    args = (str(tmp_path / "index"), str(tmp_path / "ckpt"))
+    stream = lambda: spark.readStream.schema(docs.schema).option(  # noqa: E731
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    first = stream_domain_kl(spark, stream(), *args)
+    assert snapshot_version(args[0]) == 1  # two batches committed
+
+    sc = spark.sparkContext
+    group = "stream-domain-kl-read-back"
+    sc.setJobGroup(group, "read-back only")
+    try:
+        again = stream_domain_kl(spark, stream(), *args)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert {tuple(r) for r in again.collect()} == {
+        tuple(r) for r in first.collect()
+    }
+
+
 def test_stream_domain_entropy_every_snapshot_equals_batch(spark, tmp_path):
     """The per-source entropy monitor's snapshot equals one-shot
     domain_entropy over exactly the documents ingested so far — at

@@ -12,7 +12,10 @@ storage / blockmgr instrumentation in bench.py now records directly.
 
     SPARK_GRAFT_SF_DIR=... python tools/bench_double.py
 
-Writes BENCH_double_r13.json (both sweeps + per-query agreement).
+Writes BENCH_double.json (both sweeps + per-query agreement; the
+committed BENCH_double_r14.json is an earlier run of this protocol).
+The two sweeps share one process by design, so this tool calls
+bench.main() directly rather than bench.run_bench.
 """
 
 from __future__ import annotations
@@ -21,15 +24,14 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 
 
 def main() -> None:
-    scratch = os.path.join(REPO, ".scale", "r13")
+    scratch = os.path.join(REPO, ".scale", "double")
     os.makedirs(scratch, exist_ok=True)
     outs = []
     for i in (1, 2):
@@ -64,10 +66,10 @@ def main() -> None:
         "n_disagree": len(disagree),
         "sweep1_queries": q1,
         "sweep2_queries": q2,
-        "sweeps_in": [".scale/r13/bench_sweep1.json",
-                      ".scale/r13/bench_sweep2.json"],
+        "sweeps_in": [".scale/double/bench_sweep1.json",
+                      ".scale/double/bench_sweep2.json"],
     }
-    with open(os.path.join(REPO, "BENCH_double_r13.json"), "w") as fh:
+    with open(os.path.join(REPO, "BENCH_double.json"), "w") as fh:
         json.dump(result, fh, indent=1)
     print(json.dumps({
         "metric": result["metric"],

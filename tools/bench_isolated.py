@@ -11,7 +11,8 @@ command line.
 
     python tools/bench_isolated.py [extra_query ...]
 
-Writes BENCH_isolated_r12.json.
+Writes BENCH_isolated.json (the committed BENCH_isolated_r12.json is an
+earlier run of this protocol).
 """
 
 from __future__ import annotations
@@ -22,13 +23,13 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from bench_r11_decade import run_bench  # noqa: E402
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import run_bench  # noqa: E402
+
 TOP_N = 20
-OUT = "BENCH_isolated_r12.json"
+OUT = "BENCH_isolated.json"
 
 
 def newest_driver_bench() -> tuple[str, dict]:
@@ -60,7 +61,7 @@ def main() -> None:
     for extra in sys.argv[1:]:
         if extra not in qs:
             qs.append(extra)
-    scratch = os.path.join(REPO, ".scale", "r12")
+    scratch = os.path.join(REPO, ".scale", "isolated")
     os.makedirs(scratch, exist_ok=True)
     out = {
         "metric": "isolated_per_query_median_sf0.1",

@@ -7,18 +7,20 @@ A ratio <= 12 (linear + fixed overhead) is the pass bar: a query whose
 time curves superlinearly at 10x the rows has a plan that will not
 survive 100 TB, whatever its sf0.1 number says.
 
-Runs bench.py twice in subprocesses (fresh JVM each, so sf0.1 timings
-are not warmed by the sf1 run or vice versa).
+Runs bench.py twice through bench.run_bench (fresh JVM each, so sf0.1
+timings are not warmed by the sf1 run or vice versa).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import run_bench  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",
@@ -49,30 +51,14 @@ HEADLINE = [
 RATIO_BAR = 12.0
 
 
-def run_bench(sf_dir: str, out_path: str) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_BENCH_ONLY=",".join(HEADLINE),
-        SPARK_GRAFT_BENCH_OUT=out_path,
-    )
-    subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        cwd=REPO,
-        env=env,
-        check=True,
-        stdout=subprocess.DEVNULL,
-    )
-    with open(out_path) as fh:
-        return json.load(fh)
-
-
 def main() -> None:
     sf1_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         REPO, ".scale", "sf1"
     )
-    small = run_bench("/root/testdata/sf0.1", "/tmp/bench_probe_sf01.json")
-    big = run_bench(sf1_dir, "/tmp/bench_probe_sf1.json")
+    small = run_bench(
+        "/root/testdata/sf0.1", HEADLINE, "/tmp/bench_probe_sf01.json"
+    )
+    big = run_bench(sf1_dir, HEADLINE, "/tmp/bench_probe_sf1.json")
     ratios = {
         q: round(big["queries"][q] / small["queries"][q], 2)
         for q in HEADLINE
