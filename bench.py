@@ -203,6 +203,20 @@ def _jvm_gc_ms(spark) -> int | None:
         return None
 
 
+def _codegen_compiles(spark) -> int | None:
+    """Cumulative Janino compiles of generated classes in this JVM — a
+    per-repeat delta names the query that paid for codegen (a warm
+    repeat whose classes are all in the session's codegen cache reads
+    about 0)."""
+    try:
+        return int(
+            spark.sparkContext._jvm.org.apache.spark.metrics.source
+            .CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+        )
+    except Exception:
+        return None
+
+
 def _meminfo() -> dict[str, int] | None:
     """MemAvailable/Cached/Dirty (kB): /tmp is where the block manager
     lives, so host page-cache pressure is the remaining suspect for
@@ -285,19 +299,21 @@ def main() -> None:
         rep_storage: list[int | None] = []
         rep_disk: list[int | None] = []
         rep_gc: list[int | None] = []
+        rep_cc: list[int | None] = []
         memo0 = memo_counters()
         try:
             # median-of-N: robust to one lucky/unlucky run in either
             # direction (best-of-N let a single outlier set the record).
             for _ in range(repeats):
-                gc0 = _jvm_gc_ms(spark)
+                gc0, cc0 = _jvm_gc_ms(spark), _codegen_compiles(spark)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
                 samples.append(time.perf_counter() - t0)
-                gc1 = _jvm_gc_ms(spark)
+                gc1, cc1 = _jvm_gc_ms(spark), _codegen_compiles(spark)
                 rep_gc.append(
                     None if None in (gc0, gc1) else gc1 - gc0
                 )
+                rep_cc.append(None if None in (cc0, cc1) else cc1 - cc0)
                 # drop THIS repeat's Python frames before the next one:
                 # without it repeats accumulate `repeats` copies of
                 # every scratch checkpoint (the r12 monotone-rise
@@ -323,6 +339,8 @@ def main() -> None:
             "memo_misses": memo1[1] - memo0[1],
             # in-region JVM GC ms per repeat (None if JMX unreadable)
             "gc_ms": rep_gc,
+            # generated classes compiled per repeat (None if unreadable)
+            "codegen_compiles": rep_cc,
         }
         try:
             spark.sparkContext._jvm.System.gc()
@@ -385,6 +403,10 @@ def main() -> None:
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "cores": cores,
+        # the SPARK_GRAFT_BENCH_ONLY subset this run was limited to
+        # (null for a full sweep): a subset artifact must not be read
+        # as a registry ranking
+        "only": None if only is None else sorted(only),
         # avg cores of NON-bench work measured over the run (None if
         # /proc was unreadable); the flag trips above max(2, cores/16)
         "external_busy_cores": (

@@ -12,6 +12,15 @@ one you would also set on a 1000-executor cluster:
   is RocksDB too, ``streams/build.gradle``).
 - Broadcast threshold left at default; operators use explicit
   ``broadcast()`` hints where the reference uses a GlobalKTable.
+- Generated-code cache of 2000 classes, so a warm query compiles
+  (almost) nothing. Spark's default of 100 is split over 4 Guava
+  segments that each evict at about 25, below the measured working
+  sets: a perfbench ``query-sweep`` run compiles 212 distinct classes
+  and an ``orders-repartition`` run 106, so every warm pass recompiled
+  its own. One ``bench.py`` registry pass at sf0.01 compiles 3,841
+  distinct classes; 2000 does not hold all of them (the pass compiles
+  125 more than with an unbounded cache, 3%), but each query's warm
+  repeats still find theirs.
 """
 
 from __future__ import annotations
@@ -58,6 +67,9 @@ def get_spark(
         # parquet-mr refuses by default; read as long and convert in the
         # loader (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Static conf: hold every generated class of a warm working set so a
+        # repeated plan is never recompiled (see the module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -743,6 +743,33 @@ def test_tools_import_without_running():
         assert callable(getattr(mod, "main", None)), path.name
 
 
+def test_bench_isolated_refuses_subset_ranking(tmp_path):
+    """bench.py rewrites bench_results.json on every run and records its
+    ``SPARK_GRAFT_BENCH_ONLY`` set as ``only``: the isolated protocol
+    ranks from a full sweep and exits, naming the file, on a subset."""
+    import importlib.util
+    import json
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "tool_bench_isolated", repo / "tools" / "bench_isolated.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    (tmp_path / "BENCH_r9.json").write_text(json.dumps({"parsed": None}))
+    (tmp_path / "BENCH_r10.json").write_text(json.dumps({"rc": 0}))
+    side = tmp_path / "bench_results.json"
+    full = {"queries": {"a": 2.0, "b": 1.0}, "only": None}
+    side.write_text(json.dumps(full))
+    assert mod.newest_driver_bench(str(tmp_path)) == ("bench_results.json", full)
+
+    side.write_text(json.dumps({"queries": {"a": 2.0}, "only": ["a"]}))
+    with pytest.raises(SystemExit) as exc:
+        mod.newest_driver_bench(str(tmp_path))
+    assert str(side) in str(exc.value.code)
+
+
 def test_dedup_embedding_query_set_capped(t, monkeypatch):
     """dedup_embedding's broadcast query subset is bounded by
     EMBDUP_QUERY_CAP: with a tiny cap only the cap lowest-id queries

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_repartition_spark.operators.product_stats import (
     product_stats_v1_typed,
+    product_stats_v2_typed,
 )
 from kafka_streams_repartition_spark.sources.fixtures import (
     generate_reference_tables,
@@ -197,6 +198,59 @@ def test_migrate_v1_stream_restarts_across_partition_counts(spark, tmp_path):
     }
     assert state == want
     assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == len(want)
+
+
+def test_stream_product_stats_restart_keeps_checkpoint_partitions(
+    spark, tmp_path
+):
+    """The reference's 4→8 catch-up on A2's own state: drain
+    ``stream_product_stats`` at 4 shuffle partitions, then restart the
+    same checkpoint at 8 with a second file appended.  The final state is
+    the V2 stats over both files, and the aggregate's state stays in the
+    checkpoint's 4 partitions: a restart does not re-partition keyed
+    state, only the ``migrate_v1_stream`` restore reaches 8."""
+    ref = generate_reference_tables(spark, n_orders=120, seed=17)
+    li = orders_as_lineitems(ref["purchase_orders"], ref["products"])
+    halves = [
+        li.filter(F.col("l_orderkey") < "AA-5"),
+        li.filter(~(F.col("l_orderkey") < "AA-5")),
+    ]
+    src, ckpt = str(tmp_path / "lineitems"), str(tmp_path / "ckpt")
+    final = []
+
+    def keep_last(batch_df, batch_id):
+        final[:] = batch_df.collect()  # complete mode: the whole table
+
+    def drain(half, partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        half.coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(li.schema).parquet(src)
+        q = (
+            stream_product_stats(stream).writeStream.foreachBatch(keep_last)
+            .outputMode("complete").option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+
+    try:
+        drain(halves[0], 4)
+        drain(halves[1], 8)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+    got = {
+        r["l_partkey"]: (r["orders"], float(r["quantity"]), sorted(r["order_ids"]))
+        for r in final
+    }
+    want = {
+        r["sku"]: (r["orders"], float(r["quantity"]), sorted(r["order_ids"]))
+        for r in product_stats_v2_typed(li).collect()
+    }
+    assert got == want
+    meta = spark.read.format("state-metadata").load(ckpt).collect()
+    assert [(r["operatorName"], r["numPartitions"]) for r in meta] == [
+        ("stateStoreSave", 4)
+    ]
 
 
 def test_migrate_v1_stream_plans_jvm_state_store(spark, tmp_path):

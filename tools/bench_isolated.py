@@ -32,23 +32,30 @@ TOP_N = 20
 OUT = "BENCH_isolated.json"
 
 
-def newest_driver_bench() -> tuple[str, dict]:
-    """Per-query medians of the newest driver bench.  The driver's
-    BENCH_r{N}.json wraps a parsed one-liner whose per-query map lives
-    in bench_results.json (written by the same run); fall back to any
-    artifact that carries a queries dict directly."""
+def newest_driver_bench(repo: str = REPO) -> tuple[str, dict]:
+    """Per-query medians of the newest driver bench under ``repo``.  The
+    driver's BENCH_r{N}.json wraps a parsed one-liner whose per-query map
+    lives in bench_results.json (written by the same run); fall back to
+    any artifact that carries a queries dict directly.  bench.py
+    rewrites bench_results.json on every run, so an artifact that
+    records a ``SPARK_GRAFT_BENCH_ONLY`` subset exits here instead of
+    becoming the ranking."""
     cands = sorted(
-        glob.glob(os.path.join(REPO, "BENCH_r*.json")),
+        glob.glob(os.path.join(repo, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
     )
     path = cands[-1]
     with open(path) as fh:
         d = json.load(fh)
     if "queries" not in d:
-        side = os.path.join(REPO, "bench_results.json")
-        with open(side) as fh:
+        path = os.path.join(repo, "bench_results.json")
+        with open(path) as fh:
             d = json.load(fh)
-        path = side
+    if d.get("only") is not None:
+        sys.exit(
+            f"{path} is a subset run ({len(d['only'])} queries); rank from "
+            "a full bench.py sweep (no SPARK_GRAFT_BENCH_ONLY)"
+        )
     return os.path.basename(path), d
 
 
