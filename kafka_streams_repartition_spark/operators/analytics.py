@@ -88,6 +88,14 @@ WHERE rank <= {TOP_K_SELLERS}
 def sales_rollup(t: dict[str, DataFrame]) -> DataFrame:
     """ROLLUP (nation → order status → grand total): the grouping-sets
     surface, with ``grouping_id`` distinguishing subtotal levels."""
+    return _nation_status_sales(t, "rollup")
+
+
+def _nation_status_sales(t: dict[str, DataFrame], grouping: str) -> DataFrame:
+    """Order count and revenue per (nation, order status) grouping set,
+    ``grouping`` being ``"rollup"`` (:func:`sales_rollup`) or ``"cube"``
+    (:func:`sales_cube`); a rolled-up key reads ``ALL`` and ``gid`` is
+    its ``grouping_id``."""
     src = (
         t["orders"]
         .select("o_custkey", "o_orderstatus", "o_totalprice")
@@ -105,7 +113,7 @@ def sales_rollup(t: dict[str, DataFrame]) -> DataFrame:
         )
     )
     return (
-        src.rollup("nation", "o_orderstatus")
+        getattr(src, grouping)("nation", "o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
@@ -890,37 +898,7 @@ def sales_cube(t: dict[str, DataFrame]) -> DataFrame:
     too).  Same scale shape: Spark expands grouping sets map-side and
     partially aggregates before the single wide shuffle.
     """
-    src = (
-        t["orders"]
-        .select("o_custkey", "o_orderstatus", "o_totalprice")
-        .join(
-            t["customer"].select("c_custkey", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-            "inner",
-        )
-        .join(
-            F.broadcast(
-                t["nation"].select("n_nationkey", F.col("n_name").alias("nation"))
-            ),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-            "inner",
-        )
-    )
-    return (
-        src.cube("nation", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.grouping_id().alias("gid"),
-        )
-        .select(
-            F.coalesce("nation", F.lit("ALL")).alias("nation"),
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.col("n_orders").cast("long").alias("n_orders"),
-            "revenue",
-            F.col("gid").cast("long").alias("gid"),
-        )
-    )
+    return _nation_status_sales(t, "cube")
 
 
 SALES_CUBE_ORACLE = """

@@ -162,28 +162,9 @@ def dedup_collapsed(t: dict[str, DataFrame]) -> DataFrame:
     )
     arr = _doc_gram_arrays(rep_docs).localCheckpoint(eager=False)
     bands = _lsh_bands(arr)
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "sig"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    pairs = (
-        cand.join(arr.alias("ga"), F.col("doc_a") == F.col("ga.doc_id"))
-        .join(arr.alias("gb"), F.col("doc_b") == F.col("gb.doc_id"))
-        .select(
-            "doc_b",
-            F.size(F.array_intersect("ga.grams", "gb.grams")).alias("inter"),
-            F.col("ga.n").alias("na"),
-            F.col("gb.n").alias("nb"),
-        )
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    pairs = _gram_overlaps(_band_pairs(bands), arr, "doc_b")
     dup_reps = (
-        pairs.filter(jac >= JACCARD_THRESHOLD)
+        pairs.filter(_overlap_jaccard() >= JACCARD_THRESHOLD)
         .select(F.col("doc_b").alias("rep_id"))
         .distinct()
         .withColumn("nd", F.lit(True))
@@ -265,14 +246,16 @@ LEFT JOIN dup_reps dr ON m.rep_id = dr.rep_id
 JACCARD_QUERY_CAP = 4096
 
 
-def dedup_ngram_jaccard(t: dict[str, DataFrame]) -> DataFrame:
-    """Near-dup candidates of a query subset against the full corpus:
-    exact word-trigram Jaccard ≥ threshold via shared-shingle join.
-    The query subset is HARD-capped at ``JACCARD_QUERY_CAP`` lowest
-    doc_ids (the bounded-query contract, mirrored in the oracle)."""
+def _query_gram_overlaps(
+    t: dict[str, DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """``(inter, sizes)``: the shared-shingle count (query_id, cand_id,
+    inter) of every capped query doc — the ``JACCARD_QUERY_CAP``
+    lowest ``% QUERY_MOD`` ids — with every other doc it shares a gram
+    with, and each doc's gram count (doc_id, n).  The pairing of
+    :func:`dedup_ngram_jaccard` and :func:`dedup_containment`."""
     arr = _doc_gram_arrays_cached(t["documents"])
     grams = arr.select("doc_id", F.explode("grams").alias("gram"))
-    sizes = arr.select("doc_id", "n")
     q_ids = (
         arr.filter(F.col("doc_id") % QUERY_MOD == 0)
         .select("doc_id")
@@ -291,6 +274,15 @@ def dedup_ngram_jaccard(t: dict[str, DataFrame]) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    return inter, arr.select("doc_id", "n")
+
+
+def dedup_ngram_jaccard(t: dict[str, DataFrame]) -> DataFrame:
+    """Near-dup candidates of a query subset against the full corpus:
+    exact word-trigram Jaccard ≥ threshold via shared-shingle join.
+    The query subset is HARD-capped at ``JACCARD_QUERY_CAP`` lowest
+    doc_ids (the bounded-query contract, mirrored in the oracle)."""
+    inter, sizes = _query_gram_overlaps(t)
     jac = F.col("inter") / (F.col("qa.n") + F.col("qb.n") - F.col("inter"))
     return (
         inter.join(sizes.alias("qa"), F.col("query_id") == F.col("qa.doc_id"))
@@ -377,8 +369,17 @@ def dedup_minhash_lsh(t: dict[str, DataFrame]) -> DataFrame:
     re-exploded gram join.
     """
     arr = _doc_gram_arrays_cached(t["documents"])
-    bands = _lsh_bands(arr)
-    cand = (
+    pairs = _gram_overlaps(_band_pairs(_lsh_bands(arr)), arr, "doc_a", "doc_b")
+    jac = _overlap_jaccard()
+    return pairs.filter(jac >= JACCARD_THRESHOLD).select(
+        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
+    )
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the distinct band-bucket
+    collisions of ``bands`` — the LSH candidates."""
+    return (
         bands.alias("a")
         .join(bands.alias("b"), ["band_id", "sig"])
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -387,21 +388,27 @@ def dedup_minhash_lsh(t: dict[str, DataFrame]) -> DataFrame:
         )
         .distinct()
     )
-    pairs = (
+
+
+def _gram_overlaps(cand: DataFrame, arr: DataFrame, *keep: str) -> DataFrame:
+    """The ``keep`` columns of each (doc_a, doc_b) candidate with its
+    gram-array intersection size and both sides' gram counts
+    (inter, na, nb) — the verification input of every MinHash query."""
+    return (
         cand.join(arr.alias("ga"), F.col("doc_a") == F.col("ga.doc_id"))
         .join(arr.alias("gb"), F.col("doc_b") == F.col("gb.doc_id"))
         .select(
-            "doc_a",
-            "doc_b",
+            *keep,
             F.size(F.array_intersect("ga.grams", "gb.grams")).alias("inter"),
             F.col("ga.n").alias("na"),
             F.col("gb.n").alias("nb"),
         )
     )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return pairs.filter(jac >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
-    )
+
+
+def _overlap_jaccard() -> F.Column:
+    """Exact Jaccard over :func:`_gram_overlaps` columns."""
+    return F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
 
 
 DEDUP_MINHASH_LSH_ORACLE = f"""
@@ -654,18 +661,9 @@ def crossmodal_clusters(t: dict[str, DataFrame]) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     labels = _connected_components(tp.unionByName(ep).distinct())
-
-    def members(pairs: DataFrame, flag: str) -> DataFrame:
-        return (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-            .withColumn(flag, F.lit(True))
-        )
-
     m = (
-        labels.join(members(tp, "text_dup"), "doc_id", "left")
-        .join(members(ep, "embed_dup"), "doc_id", "left")
+        labels.join(_pair_members(tp, "text_dup"), "doc_id", "left")
+        .join(_pair_members(ep, "embed_dup"), "doc_id", "left")
         .select(
             "doc_id",
             "cluster_id",
@@ -674,6 +672,23 @@ def crossmodal_clusters(t: dict[str, DataFrame]) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
+    return _crossmodal_table(m)
+
+
+def _pair_members(pairs: DataFrame, flag: str) -> DataFrame:
+    """(doc_id, flag=True) for every doc on either side of ``pairs``."""
+    return (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+        .withColumn(flag, F.lit(True))
+    )
+
+
+def _crossmodal_table(m: DataFrame) -> DataFrame:
+    """The decision table of :func:`crossmodal_clusters` (and of each
+    ``stream_crossmodal_clusters`` snapshot) from the labelled, flagged
+    docs (doc_id, cluster_id, text_dup, embed_dup)."""
     cstats = m.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size"),
         F.max("text_dup").alias("has_text"),
@@ -776,6 +791,13 @@ def dedup_quality_aware(t: dict[str, DataFrame]) -> DataFrame:
     clusters = dedup_clusters(t)
     stats = text_stats(t).select("doc_id", "quality_score")
     m = clusters.join(stats, "doc_id").localCheckpoint(eager=False)
+    return _quality_keepers(m)
+
+
+def _quality_keepers(m: DataFrame) -> DataFrame:
+    """The keeper verdict of :func:`dedup_quality_aware` (and of each
+    ``stream_quality_aware`` snapshot) over clustered, scored docs
+    (doc_id, cluster_id, quality_score)."""
     # lexicographic max over (quality, -id): highest quality wins,
     # ties go to the LOWEST doc_id — deterministic, oracle-replayable
     best = (
@@ -855,8 +877,7 @@ def leakage_split(t: dict[str, DataFrame]) -> DataFrame:
     over pair-sized frames.  One row out.
     """
     split = fan_out(t["documents"]).select(
-        "doc_id",
-        (_hash_bucket(F.col("doc_id")) < VAL_PCT).alias("is_val"),
+        "doc_id", _is_val(F.col("doc_id")).alias("is_val")
     )
     pairs = _minhash_pairs(t).select("doc_a", "doc_b")
     sa = split.select(F.col("doc_id").alias("doc_a"), F.col("is_val").alias("va"))
@@ -864,8 +885,17 @@ def leakage_split(t: dict[str, DataFrame]) -> DataFrame:
     tagged = pairs.join(sa, "doc_a").join(sb, "doc_b").localCheckpoint(
         eager=False
     )
-    straddle = tagged.filter(F.col("va") != F.col("vb"))
-    counts = split.agg(
+    return _leakage_audit(_split_counts(split), tagged)
+
+
+def _is_val(doc_id: F.Column) -> F.Column:
+    """The split side of a doc: a pure function of its id."""
+    return _hash_bucket(doc_id) < VAL_PCT
+
+
+def _split_counts(split: DataFrame) -> DataFrame:
+    """One row (n_train, n_val) over a frame carrying ``is_val``."""
+    return split.agg(
         F.sum(F.when(~F.col("is_val"), 1).otherwise(0))
         .cast("long")
         .alias("n_train"),
@@ -873,6 +903,14 @@ def leakage_split(t: dict[str, DataFrame]) -> DataFrame:
         .cast("long")
         .alias("n_val"),
     )
+
+
+def _leakage_audit(counts: DataFrame, tagged: DataFrame) -> DataFrame:
+    """The audit row of :func:`leakage_split` (and of
+    ``stream_leakage_split``'s snapshot) from the one-row split
+    ``counts`` and the verified pairs ``tagged`` with each side's
+    split (doc_a, doc_b, va, vb)."""
+    straddle = tagged.filter(F.col("va") != F.col("vb"))
     pair_counts = tagged.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum(F.when(F.col("va") != F.col("vb"), 1).otherwise(0))
@@ -1655,20 +1693,43 @@ def hamming_neighbors(t: dict[str, DataFrame]) -> DataFrame:
     bounds the probe side exactly as the ANN family does.
     """
     codes = _simhash64_codes_cached(t["documents"])
+    return _mih_radius_pairs(codes, _hamming_query_codes(codes))
+
+
+def _hamming_query_codes(codes: DataFrame) -> DataFrame:
+    """(query_id, q0..q3): the capped query set — the
+    ``HAMMING_QUERY_CAP`` lowest ``% QUERY_MOD`` ids — with its codes."""
     qids = (
         codes.filter(F.col("doc_id") % QUERY_MOD == 0)
         .select("doc_id")
         .orderBy("doc_id")
         .limit(HAMMING_QUERY_CAP)
     )
-    qcodes = codes.join(F.broadcast(qids), "doc_id").select(
+    return codes.join(F.broadcast(qids), "doc_id").select(
         F.col("doc_id").alias("query_id"),
         *[F.col(f"c{c}").alias(f"q{c}") for c in range(HAMMING_CHUNKS)],
     )
+
+
+def _hamming_distance() -> F.Column:
+    """Hamming distance between a row's code c0..c3 and query code
+    q0..q3: ``bit_count(xor)`` summed over the chunks."""
+    ham = None
+    for c in range(HAMMING_CHUNKS):
+        term = F.bit_count(F.col(f"c{c}").bitwiseXOR(F.col(f"q{c}")))
+        ham = term if ham is None else ham + term
+    return ham
+
+
+def _mih_radius_pairs(cands: DataFrame, qcodes: DataFrame) -> DataFrame:
+    """(query_id, cand_id, hamming) for every candidate in ``cands``
+    (doc_id, c0..c3) within ``HAMMING_RADIUS`` of a query in ``qcodes``:
+    the multi-index probe of :func:`hamming_neighbors`, shared with
+    each ``stream_hamming_neighbors`` score leg."""
     chunk = F.posexplode(
         F.array(*[F.col(f"c{c}") for c in range(HAMMING_CHUNKS)])
     ).alias("chunk", "cval")
-    corpus_long = codes.select("doc_id", "c0", "c1", "c2", "c3", chunk)
+    corpus_long = cands.select("doc_id", "c0", "c1", "c2", "c3", chunk)
     qlong = qcodes.select(
         "query_id",
         *[f"q{c}" for c in range(HAMMING_CHUNKS)],
@@ -1676,17 +1737,13 @@ def hamming_neighbors(t: dict[str, DataFrame]) -> DataFrame:
             F.array(*[F.col(f"q{c}") for c in range(HAMMING_CHUNKS)])
         ).alias("chunk", "cval"),
     )
-    ham = None
-    for c in range(HAMMING_CHUNKS):
-        term = F.bit_count(F.col(f"c{c}").bitwiseXOR(F.col(f"q{c}")))
-        ham = term if ham is None else ham + term
     return (
         corpus_long.join(F.broadcast(qlong), ["chunk", "cval"])
         .filter(F.col("doc_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("doc_id").alias("cand_id"),
-            ham.cast("long").alias("hamming"),
+            _hamming_distance().cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= HAMMING_RADIUS)
         .distinct()
@@ -1767,24 +1824,10 @@ def hamming_threshold_curve(t: dict[str, DataFrame]) -> DataFrame:
     separation audit (``cosine_sim_histogram``'s binary-code twin) at
     scan cost."""
     codes = _simhash64_codes_cached(t["documents"])
-    qids = (
-        codes.filter(F.col("doc_id") % QUERY_MOD == 0)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(HAMMING_QUERY_CAP)
-    )
-    qcodes = codes.join(F.broadcast(qids), "doc_id").select(
-        F.col("doc_id").alias("query_id"),
-        *[F.col(f"c{c}").alias(f"q{c}") for c in range(HAMMING_CHUNKS)],
-    )
-    ham = None
-    for c in range(HAMMING_CHUNKS):
-        term = F.bit_count(F.col(f"c{c}").bitwiseXOR(F.col(f"q{c}")))
-        ham = term if ham is None else ham + term
     hist = (
-        codes.crossJoin(F.broadcast(qcodes))
+        codes.crossJoin(F.broadcast(_hamming_query_codes(codes)))
         .filter(F.col("doc_id") != F.col("query_id"))
-        .select(ham.cast("long").alias("hamming"), "query_id")
+        .select(_hamming_distance().cast("long").alias("hamming"), "query_id")
         .groupBy("hamming")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -2136,6 +2179,22 @@ def _embdup_tiled_sigs(sigs: DataFrame, cap: int) -> DataFrame:
     )
 
 
+def _embdup_sigs(vecs: DataFrame, planes: int) -> DataFrame:
+    """(vec_id, v, band, sig) — one row per band per vector; the
+    signatures of :func:`dedup_embedding_lsh` and of each
+    ``stream_embedding_index`` batch."""
+    return vecs.select(
+        "vec_id",
+        "v",
+        F.explode(F.array(*_embdup_band_structs(planes))).alias("bs"),
+    ).select(
+        "vec_id",
+        "v",
+        F.col("bs.band").alias("band"),
+        F.col("bs.sig").alias("sig"),
+    )
+
+
 def dedup_embedding_lsh(
     t: dict[str, DataFrame],
     bucket_cap: int | None = None,
@@ -2181,17 +2240,7 @@ def dedup_embedding_lsh(
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
-    sigs = emb.select(
-        "vec_id",
-        "v",
-        F.explode(F.array(*_embdup_band_structs(planes))).alias("bs"),
-    ).select(
-        "vec_id",
-        "v",
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-    )
-    tiled = _embdup_tiled_sigs(sigs, cap)
+    tiled = _embdup_tiled_sigs(_embdup_sigs(emb, planes), cap)
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame({"doc_a": [], "doc_b": [], "cosine": []}).astype(
@@ -2605,19 +2654,9 @@ def dedup_incremental(t: dict[str, DataFrame]) -> DataFrame:
         )
         .distinct()
     )
-    pairs = (
-        cand.join(arr.alias("ga"), F.col("doc_a") == F.col("ga.doc_id"))
-        .join(arr.alias("gb"), F.col("doc_b") == F.col("gb.doc_id"))
-        .select(
-            "doc_a",
-            F.size(F.array_intersect("ga.grams", "gb.grams")).alias("inter"),
-            F.col("ga.n").alias("na"),
-            F.col("gb.n").alias("nb"),
-        )
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     near_ids = (
-        pairs.filter(jac >= JACCARD_THRESHOLD)
+        _gram_overlaps(cand, arr, "doc_a")
+        .filter(_overlap_jaccard() >= JACCARD_THRESHOLD)
         .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
@@ -3085,23 +3124,44 @@ def novelty_scoring(t: dict[str, DataFrame]) -> DataFrame:
     (birthday rate ~n²/2⁶¹); the DuckDB
     oracle hashes identically so the check is exact.
     """
-    arr = _doc_gram_arrays(t["documents"])
-    ex = arr.select(
-        "doc_id",
-        F.col("n").alias("n_grams"),
-        F.explode_outer("grams").alias("gram"),
-    ).withColumn(
-        "h",
-        F.when(
-            F.col("gram").isNotNull(),
-            F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long"),
-        ),
+    ex = _gram_digests(t["documents"])
+    return _novelty_scores(ex, _first_digests(ex))
+
+
+def _gram_digests(documents: DataFrame) -> DataFrame:
+    """(doc_id, n_grams, gram, h): one row per distinct shingle of each
+    document with its 60-bit md5 digest ``h`` (NULL for a gramless
+    doc's single row)."""
+    return (
+        _doc_gram_arrays(documents)
+        .select(
+            "doc_id",
+            F.col("n").alias("n_grams"),
+            F.explode_outer("grams").alias("gram"),
+        )
+        .withColumn(
+            "h",
+            F.when(
+                F.col("gram").isNotNull(),
+                F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long"),
+            ),
+        )
     )
-    first = (
+
+
+def _first_digests(ex: DataFrame) -> DataFrame:
+    """(h, first_doc): the lowest doc_id holding each digest."""
+    return (
         ex.filter(F.col("h").isNotNull())
         .groupBy("h")
         .agg(F.min("doc_id").alias("first_doc"))
     )
+
+
+def _novelty_scores(ex: DataFrame, first: DataFrame) -> DataFrame:
+    """The per-doc finish of :func:`novelty_scoring` (and of each
+    ``stream_novelty_scoring`` batch): a doc's novel shingles are the
+    digests whose ``first`` doc is itself."""
     return (
         ex.join(first, "h", "left")
         .groupBy("doc_id", "n_grams")
@@ -3845,33 +3905,15 @@ def dedup_containment(t: dict[str, DataFrame]) -> DataFrame:
     dedup (:func:`dedup_ngram_jaccard`, :func:`dedup_minhash_lsh`)
     is structurally blind to.
 
-    Scale shape: identical to :func:`dedup_ngram_jaccard` — the capped
-    query grams broadcast, the shared-shingle pairing is a map-side
-    join over the corpus gram scan (no gram shuffle), intersections
-    partial-aggregate per (query, cand).  The denominator is the
+    Scale shape: :func:`_query_gram_overlaps`, shared with
+    :func:`dedup_ngram_jaccard` — the capped query grams broadcast,
+    the shared-shingle pairing is a map-side join over the corpus gram
+    scan (no gram shuffle), intersections partial-aggregate per
+    (query, cand).  The denominator is the
     QUERY's gram count only, so the threshold prunes to candidates
     genuinely covering the query.
     """
-    arr = _doc_gram_arrays_cached(t["documents"])
-    grams = arr.select("doc_id", F.explode("grams").alias("gram"))
-    sizes = arr.select("doc_id", "n")
-    q_ids = (
-        arr.filter(F.col("doc_id") % QUERY_MOD == 0)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(JACCARD_QUERY_CAP)
-    )
-    q_grams = F.broadcast(grams.join(F.broadcast(q_ids), "doc_id"))
-    inter = (
-        q_grams.alias("a")
-        .join(grams.alias("b"), ["gram"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("query_id"),
-            F.col("b.doc_id").alias("cand_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter, sizes = _query_gram_overlaps(t)
     cont = F.col("inter") / F.col("qa.n")
     return (
         inter.join(sizes.alias("qa"), F.col("query_id") == F.col("qa.doc_id"))
@@ -3932,27 +3974,41 @@ def dedup_inflation(t: dict[str, DataFrame]) -> DataFrame:
     is hash-keyed with map-side partials into a ONE-row rollup — no
     pairwise work, no text ever leaves the scan.
     """
-    from ..functions.text import words
-
-    toks = fan_out(t["documents"]).select(
-        "doc_id",
-        F.md5("text").alias("h"),
-        F.size(words(F.col("text"))).cast("long").alias("n_tok"),
-    )
+    toks = _doc_hash_tokens(fan_out(t["documents"]))
     keep = toks.groupBy("h").agg(F.min("doc_id").alias("keeper_id"))
     j = toks.join(keep, "h").select(
         "n_tok", (F.col("doc_id") != F.col("keeper_id")).alias("is_dup")
     )
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("is_dup"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup_docs"),
-        F.sum("n_tok").cast("long").alias("tokens_total"),
-        F.sum(F.when(F.col("is_dup"), F.col("n_tok")).otherwise(0))
-        .cast("long")
-        .alias("tokens_dup"),
-    ).select(
+    return _inflation_ratios(
+        j.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.when(F.col("is_dup"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_dup_docs"),
+            F.sum("n_tok").cast("long").alias("tokens_total"),
+            F.sum(F.when(F.col("is_dup"), F.col("n_tok")).otherwise(0))
+            .cast("long")
+            .alias("tokens_dup"),
+        )
+    )
+
+
+def _doc_hash_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, h, n_tok): the content hash and whitespace token count
+    of each document — the per-doc input of :func:`dedup_inflation`
+    and its streaming face."""
+    return docs.select(
+        "doc_id",
+        F.md5("text").alias("h"),
+        F.size(words(F.col("text"))).cast("long").alias("n_tok"),
+    )
+
+
+def _inflation_ratios(counts: DataFrame) -> DataFrame:
+    """The one-row finish of :func:`dedup_inflation` (and of
+    ``stream_dedup_inflation``'s snapshot): the four counts
+    (n_docs, n_dup_docs, tokens_total, tokens_dup) plus their ratios."""
+    return counts.select(
         "n_docs",
         "n_dup_docs",
         # every ratio is NULL by contract when its denominator is not

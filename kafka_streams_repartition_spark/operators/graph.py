@@ -28,6 +28,41 @@ PR_ITER = 2
 PR_SINCE = "2001-01-01"
 
 
+def _order_parts_since(t: dict[str, DataFrame], since: str) -> DataFrame:
+    """The distinct (l_orderkey, l_partkey) of lines shipped on or
+    after ``since``."""
+    return (
+        t["lineitem"]
+        .filter(F.col("l_shipdate") >= F.lit(since))
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+
+
+def _copurchase_pairs(order_parts: DataFrame) -> DataFrame:
+    """(src, dst) for every ordered pair of parts of each order in the
+    distinct (l_orderkey, l_partkey) frame, self-pairs included — the
+    map-side pair expansion shared by :func:`pagerank_copurchase`,
+    :func:`triangle_count` and :func:`basket_rules`; fan-out is bounded
+    by each order's item count squared."""
+    per_order = order_parts.groupBy("l_orderkey").agg(
+        F.collect_set("l_partkey").alias("ps")
+    )
+    return per_order.select(
+        F.explode_outer(
+            F.flatten(
+                F.transform(
+                    "ps",
+                    lambda a: F.transform(
+                        "ps",
+                        lambda b: F.struct(a.alias("src"), b.alias("dst")),
+                    ),
+                )
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
 def pagerank_copurchase(t: dict[str, DataFrame]) -> DataFrame:
     """PageRank over the product co-purchase graph.
 
@@ -41,30 +76,8 @@ def pagerank_copurchase(t: dict[str, DataFrame]) -> DataFrame:
     map-side. Ranks are O(|nodes|) — tiny next to edges — and the
     damping/size constants ride a 1-row broadcast.
     """
-    li = (
-        t["lineitem"]
-        .filter(F.col("l_shipdate") >= F.lit(PR_SINCE))
-        .select("l_orderkey", "l_partkey")
-    )
-    per_order = li.distinct().groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    pairs = (
-        per_order.select(
-            F.explode_outer(
-                F.flatten(
-                    F.transform(
-                        "ps",
-                        lambda a: F.transform(
-                            "ps",
-                            lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .filter(F.col("src") != F.col("dst"))
+    pairs = _copurchase_pairs(_order_parts_since(t, PR_SINCE)).filter(
+        F.col("src") != F.col("dst")
     )
     edges = pairs.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("double").alias("w")
@@ -169,30 +182,8 @@ def triangle_count(t: dict[str, DataFrame]) -> DataFrame:
     bounds the wedge side before any join.  Wedges for the coefficient
     come from per-node degrees — an O(|nodes|) frame, no join.
     """
-    li = (
-        t["lineitem"]
-        .filter(F.col("l_shipdate") >= F.lit(TRI_SINCE))
-        .select("l_orderkey", "l_partkey")
-    )
-    per_order = li.distinct().groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    pairs = (
-        per_order.select(
-            F.explode_outer(
-                F.flatten(
-                    F.transform(
-                        "ps",
-                        lambda a: F.transform(
-                            "ps",
-                            lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .filter(F.col("src") < F.col("dst"))
+    pairs = _copurchase_pairs(_order_parts_since(t, TRI_SINCE)).filter(
+        F.col("src") < F.col("dst")
     )
     edges = (
         pairs.groupBy("src", "dst")
@@ -302,24 +293,8 @@ def basket_rules(t: dict[str, DataFrame]) -> DataFrame:
         F.count(F.lit(1)).alias("n")
     )
     item = d.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c_item"))
-    per_order = d.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
     pairs = (
-        per_order.select(
-            F.explode_outer(
-                F.flatten(
-                    F.transform(
-                        "ps",
-                        lambda a: F.transform(
-                            "ps",
-                            lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+        _copurchase_pairs(d)
         .filter(F.col("src") < F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("c_ab"))

@@ -266,6 +266,8 @@ def ccnet_buckets(t: dict[str, DataFrame]) -> DataFrame:
     frame; the verdict join broadcasts.  No per-language sort of
     document rows anywhere.
     """
+    from .text_analysis import _unigram_token_lp
+
     docs = t["documents"]
     toks = (
         fan_out(docs)
@@ -281,16 +283,9 @@ def ccnet_buckets(t: dict[str, DataFrame]) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint(eager=False)
     )
-    ct = tf.groupBy("term").agg(F.sum("tf").alias("c"))
-    tot = ct.agg(F.sum("c").alias("tot"))
-    lp = (
-        F.col("tf")
-        * F.log(F.col("c").cast("double") / F.col("tot").cast("double"))
-    ).cast("decimal(28,10)")
+    counted, lp = _unigram_token_lp(tf)
     scored = (
-        tf.join(ct, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id", "lang")
+        counted.groupBy("doc_id", "lang")
         .agg(
             (F.sum(lp).cast("double") / F.sum("tf")).alias("avg_lp")
         )
@@ -1342,18 +1337,23 @@ def domain_kl(t: dict[str, DataFrame]) -> DataFrame:
     contributions sum as DECIMAL(28,10) so shuffle-order double
     addition cannot diverge from the oracle's sequential sum.
     """
-    docs = t["documents"]
-    toks = (
+    return _kl_from_counts(_source_term_counts(t["documents"]))
+
+
+def _source_term_counts(docs: DataFrame) -> DataFrame:
+    """(source, term, c_st): one tokenize pass rolled up per (source,
+    term), partial-combined map-side — the input of
+    :func:`domain_kl` and :func:`domain_entropy`.  Checkpointed: it
+    feeds both the totals branch and the per-term reduction, so text
+    tokenizes once."""
+    return (
         fan_out(docs)
         .select("source", F.explode_outer(words(F.col("text"))).alias("term"))
         .filter(F.col("term").isNotNull())
-    )
-    st = (
-        toks.groupBy("source", "term")
+        .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c_st"))
         .localCheckpoint()
     )
-    return _kl_from_counts(st)
 
 
 def _kl_from_counts(st: DataFrame) -> DataFrame:
@@ -1420,28 +1420,17 @@ def domain_entropy(t: dict[str, DataFrame]) -> DataFrame:
     dashboards read the two side by side (the per-source face of
     ``corpus_token_entropy``, same c·ln(c/n) law).
 
-    Scale shape: identical to :func:`domain_kl` — one tokenize pass;
-    per-(source, term) counts partial-combine map-side before the ONE
-    corpus-sized exchange; per-source totals (≤ n_sources rows)
-    broadcast back; contributions sum as DECIMAL(28,10) so
-    shuffle-order double addition cannot diverge from the oracle's
-    sequential sum.  ``entropy_ratio`` (H/ln V) is NULL by contract
-    when a source has a single-term vocabulary (ln 1 = 0).  Final
-    state is n_sources rows at any corpus size.
+    Scale shape: :func:`_source_term_counts`, shared with
+    :func:`domain_kl` — one tokenize pass; per-(source, term) counts
+    partial-combine map-side before the ONE corpus-sized exchange;
+    per-source totals (≤ n_sources rows) broadcast back; contributions
+    sum as DECIMAL(28,10) so shuffle-order double addition cannot
+    diverge from the oracle's sequential sum.  ``entropy_ratio``
+    (H/ln V) is NULL by contract when a source has a single-term
+    vocabulary (ln 1 = 0).  Final state is n_sources rows at any
+    corpus size.
     """
-    docs = t["documents"]
-    st = (
-        fan_out(docs)
-        .select("source", F.explode_outer(words(F.col("text"))).alias("term"))
-        .filter(F.col("term").isNotNull())
-        .groupBy("source", "term")
-        .agg(F.count(F.lit(1)).alias("c_st"))
-        # vocabulary-sized; feeds BOTH the totals branch and the
-        # entropy reduction — checkpoint so text tokenizes once (the
-        # domain_kl discipline)
-        .localCheckpoint()
-    )
-    return _entropy_from_counts(st)
+    return _entropy_from_counts(_source_term_counts(t["documents"]))
 
 
 def _entropy_from_counts(st: DataFrame) -> DataFrame:
@@ -1532,13 +1521,19 @@ def token_budget(t: dict[str, DataFrame]) -> DataFrame:
     final state at any corpus scale, and the capped/uncapped test is
     all-long arithmetic, so the plan is bit-deterministic.
     """
-    avail = (
-        fan_out(t["documents"])
+    return _unimax_fill(_source_token_avail(t["documents"]))
+
+
+def _source_token_avail(docs: DataFrame) -> DataFrame:
+    """(source, avail): the corpus's whitespace-token count per source
+    — ONE partial-aggregated rollup to n_sources rows, the input of
+    :func:`token_budget` and :func:`temperature_mixture`."""
+    return (
+        fan_out(docs)
         .select("source", F.size(words(F.col("text"))).alias("n"))
         .groupBy("source")
         .agg(F.sum("n").alias("avail"))
     )
-    return _unimax_fill(avail)
 
 
 def _unimax_fill(avail: DataFrame) -> DataFrame:
@@ -1675,20 +1670,14 @@ def temperature_mixture(t: dict[str, DataFrame]) -> DataFrame:
     sampling can be asked for 10+ epochs; UniMax caps it at
     ``TB_EPOCH_CAP``).
 
-    Scale shape: identical to :func:`token_budget` — ONE
-    partial-aggregated rollup of the corpus to n_sources rows, then
-    single-task window math over those few rows; constant-size final
-    state at any corpus scale.  The normalizer sums p^alpha as
-    DECIMAL(28,12) so shuffle-order double addition cannot diverge
-    from the oracle's sequential sum.
+    Scale shape: :func:`_source_token_avail`, shared with
+    :func:`token_budget` — ONE partial-aggregated rollup of the corpus
+    to n_sources rows, then single-task window math over those few
+    rows; constant-size final state at any corpus scale.  The
+    normalizer sums p^alpha as DECIMAL(28,12) so shuffle-order double
+    addition cannot diverge from the oracle's sequential sum.
     """
-    avail = (
-        fan_out(t["documents"])
-        .select("source", F.size(words(F.col("text"))).alias("n"))
-        .groupBy("source")
-        .agg(F.sum("n").alias("avail"))
-    )
-    return _temperature_fill(avail)
+    return _temperature_fill(_source_token_avail(t["documents"]))
 
 
 def _temperature_fill(avail: DataFrame) -> DataFrame:
@@ -2357,9 +2346,33 @@ def filter_attribution(t: dict[str, DataFrame]) -> DataFrame:
     is one partial-combining groupBy(source) over boolean flags.
     Document text never crosses an exchange.
     """
-    flags = _gate_flags(t)
+    return _gate_flags(t).groupBy("source").agg(
+        *_gate_counts(),
+        F.round(
+            F.sum(F.when(F.col("n_rej") == 0, 1).otherwise(0))
+            / F.count(F.lit(1)),
+            4,
+        ).alias("survival_frac"),
+    )
+
+
+GATE_COUNTS = (
+    "n_docs",
+    "n_gopher_rejected",
+    "n_quality_rejected",
+    "n_exact_dup",
+    "n_near_dup",
+    "n_rejected_any",
+    "n_multi_rejected",
+)
+
+
+def _gate_counts() -> list[F.Column]:
+    """The per-source ``GATE_COUNTS`` aggregates over gate verdicts —
+    shared by :func:`filter_attribution` and each
+    ``stream_filter_attribution`` batch."""
     cnt = lambda c: F.sum(F.col(c).cast("int")).cast("long")  # noqa: E731
-    return flags.groupBy("source").agg(
+    return [
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         cnt("r_gopher").alias("n_gopher_rejected"),
         cnt("r_quality").alias("n_quality_rejected"),
@@ -2371,24 +2384,13 @@ def filter_attribution(t: dict[str, DataFrame]) -> DataFrame:
         F.sum(F.when(F.col("n_rej") >= 2, 1).otherwise(0))
         .cast("long")
         .alias("n_multi_rejected"),
-        F.round(
-            F.sum(F.when(F.col("n_rej") == 0, 1).otherwise(0))
-            / F.count(F.lit(1)),
-            4,
-        ).alias("survival_frac"),
-    )
+    ]
 
 
-def _gate_flags(t: dict[str, DataFrame]) -> DataFrame:
-    """Per-document verdicts of the four standing gates —
-    (doc_id, source, r_gopher, r_quality, r_exact, r_near, n_rej);
-    the shared frame behind :func:`filter_attribution` and
-    :func:`token_yield` (and the per-batch scoring of
-    ``streaming.embindex.stream_filter_attribution``)."""
-    from .dedup import _minhash_pairs
+def _row_gates(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
+    """The two per-row gates: (doc_id, r_gopher) and (doc_id, r_quality)."""
     from .text_analysis import QUALITY_THRESHOLD, text_stats
 
-    docs = t["documents"]
     g = gopher_rules(t).select(
         "doc_id", (~F.col("keep")).alias("r_gopher")
     )
@@ -2396,19 +2398,15 @@ def _gate_flags(t: dict[str, DataFrame]) -> DataFrame:
         "doc_id",
         (F.col("quality_score") < QUALITY_THRESHOLD).alias("r_quality"),
     )
-    hashed = docs.select("doc_id", "source", F.md5("text").alias("h"))
-    keeper = hashed.groupBy("h").agg(F.min("doc_id").alias("keeper_id"))
-    e = hashed.join(keeper, "h").select(
-        "doc_id",
-        "source",
-        (F.col("doc_id") != F.col("keeper_id")).alias("r_exact"),
-    )
-    near = (
-        _minhash_pairs(t)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .withColumn("r_near", F.lit(True))
-    )
+    return g, q
+
+
+def _gate_verdicts(
+    e: DataFrame, g: DataFrame, q: DataFrame, near: DataFrame
+) -> DataFrame:
+    """(doc_id, source, r_gopher, r_quality, r_exact, r_near, n_rej)
+    from the exact-dup verdicts ``e`` (doc_id, source, r_exact), the
+    row gates and the near-dup losers ``near`` (doc_id, r_near)."""
     n_rej = sum(
         F.col(c).cast("int") for c in ("r_gopher", "r_quality", "r_exact", "r_near")
     )
@@ -2416,7 +2414,7 @@ def _gate_flags(t: dict[str, DataFrame]) -> DataFrame:
     # corpora near-dup losers are a large FRACTION of all documents, so
     # the frame grows with the corpus — AQE broadcasts while it is
     # small and falls back to a shuffled join when it is not
-    flags = (
+    return (
         e.join(g, "doc_id")
         .join(q, "doc_id")
         .join(near, "doc_id", "left")
@@ -2430,7 +2428,32 @@ def _gate_flags(t: dict[str, DataFrame]) -> DataFrame:
         )
         .withColumn("n_rej", n_rej)
     )
-    return flags
+
+
+def _gate_flags(t: dict[str, DataFrame]) -> DataFrame:
+    """Per-document verdicts of the four standing gates —
+    (doc_id, source, r_gopher, r_quality, r_exact, r_near, n_rej);
+    the shared frame behind :func:`filter_attribution` and
+    :func:`token_yield` (and the per-batch scoring of
+    ``streaming.embindex.stream_filter_attribution``)."""
+    from .dedup import _minhash_pairs
+
+    docs = t["documents"]
+    g, q = _row_gates(t)
+    hashed = docs.select("doc_id", "source", F.md5("text").alias("h"))
+    keeper = hashed.groupBy("h").agg(F.min("doc_id").alias("keeper_id"))
+    e = hashed.join(keeper, "h").select(
+        "doc_id",
+        "source",
+        (F.col("doc_id") != F.col("keeper_id")).alias("r_exact"),
+    )
+    near = (
+        _minhash_pairs(t)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+        .withColumn("r_near", F.lit(True))
+    )
+    return _gate_verdicts(e, g, q, near)
 
 
 def _filter_attribution_oracle() -> str:

@@ -917,21 +917,11 @@ PQ_SUB = DIM // PQ_M  # dims per subspace
 _PQ_KEY_STRIDE = 1_000_000
 
 
-def pq_codes(t: dict[str, DataFrame]) -> DataFrame:
-    """Product-quantization codes (Jégou et al. 2011, "Product
-    quantization for nearest neighbor search"): split each vector into
-    ``PQ_M`` subspaces, assign every subvector to its nearest
-    per-subspace centroid (trained from the label groups, like the IVF
-    coarse quantizer), and emit the code word plus the reconstruction
-    error ADC distances build on.
-
-    Scale shape: the codebook (M × K subvector centroids) is tiny and
-    **broadcasts**; subspace slicing and distance sums are map-side
-    ``zip_with`` expressions; the ONLY shuffle is the final
-    groupBy(vec_id), and its conditional struct-min aggregates
-    partial-combine map-side. This is the pass that turns a petabyte of
-    float32 vectors into a 16-byte-per-vector index at 100 TB.
-    """
+def _pq_subspace_dists(t: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
+    """``(emb, scored)``: the corpus vectors (vec_id, v) and the
+    distance of every subvector to every codeword of its subspace
+    (vec_id, m, label, dist) — the shared input of :func:`pq_codes`'s
+    code assignment and :func:`ann_topk_pq`'s codes and query tables."""
     emb_raw = fan_out(t["embeddings"])
     cent = _label_centroids(t)
     sub_c = cent.select(
@@ -954,14 +944,40 @@ def pq_codes(t: dict[str, DataFrame]) -> DataFrame:
     dist = F.round(
         sqdist_unrolled(F.col("vsub"), F.col("csub"), PQ_SUB), 6
     ).alias("dist")
-    scored = sub_v.join(F.broadcast(sub_c), "m").select("vec_id", "m", "label", dist)
-    # argmin per subspace as a lexicographic struct-min (ties break on
-    # label) — an aggregate, not a window, so hot keys partial-combine.
-    picks = [
+    return emb, sub_v.join(F.broadcast(sub_c), "m").select(
+        "vec_id", "m", "label", dist
+    )
+
+
+def _pq_argmins() -> list[F.Column]:
+    """Per-subspace argmin as ``PQ_M`` conditional struct-mins ``b<m>``
+    over the ``scored`` rows: min ignores the nulls of other subspaces,
+    ties break on (dist, label) — identical to the oracle's
+    row_number ORDER BY dist, c_label — and, being an aggregate rather
+    than a window, hot keys partial-combine map-side."""
+    return [
         F.min(F.when(F.col("m") == m, F.struct("dist", "label"))).alias(f"b{m}")
         for m in range(PQ_M)
     ]
-    agg = scored.groupBy("vec_id").agg(*picks)
+
+
+def pq_codes(t: dict[str, DataFrame]) -> DataFrame:
+    """Product-quantization codes (Jégou et al. 2011, "Product
+    quantization for nearest neighbor search"): split each vector into
+    ``PQ_M`` subspaces, assign every subvector to its nearest
+    per-subspace centroid (trained from the label groups, like the IVF
+    coarse quantizer), and emit the code word plus the reconstruction
+    error ADC distances build on.
+
+    Scale shape: the codebook (M × K subvector centroids) is tiny and
+    **broadcasts**; subspace slicing and distance sums are map-side
+    ``zip_with`` expressions; the ONLY shuffle is the final
+    groupBy(vec_id), and its conditional struct-min aggregates
+    partial-combine map-side. This is the pass that turns a petabyte of
+    float32 vectors into a 16-byte-per-vector index at 100 TB.
+    """
+    scored = _pq_subspace_dists(t)[1]
+    agg = scored.groupBy("vec_id").agg(*_pq_argmins())
     recon = F.round(
         F.sqrt(sum(F.col(f"b{m}.dist") for m in range(PQ_M))), 6
     ).alias("recon_err")
@@ -1869,26 +1885,8 @@ def ivfpq_recall(t: dict[str, DataFrame]) -> DataFrame:
 
     Pure composition of two oracle-gated queries, reduced to one row.
     """
-    truth = _bf_truth(t)
-    # checkpoint: the approx pipeline is referenced twice (count + hits)
-    approx = (
-        ann_topk_ivfpq(t)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    hits = truth.join(approx, ["query_id", "cand_id"], "left_semi")
-    n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    n_approx = approx.agg(F.count(F.lit(1)).cast("long").alias("n_approx"))
-    n_hits = hits.agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return (
-        n_truth.crossJoin(F.broadcast(n_approx))
-        .crossJoin(F.broadcast(n_hits))
-        .select(
-            "n_truth",
-            "n_approx",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-        )
+    return _recall_one_row(
+        _bf_truth(t), ann_topk_ivfpq(t).select("query_id", "cand_id")
     )
 
 
@@ -2248,26 +2246,8 @@ def ann_recall_eval(t: dict[str, DataFrame]) -> DataFrame:
     which is exactly why the recall number must be known before the
     exact path is retired.
     """
-    truth = _bf_truth(t)
-    # checkpoint: the approx pipeline is referenced twice (count + hits)
-    approx = (
-        ann_topk_ivf(t)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    hits = truth.join(approx, ["query_id", "cand_id"], "left_semi")
-    n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    n_approx = approx.agg(F.count(F.lit(1)).cast("long").alias("n_approx"))
-    n_hits = hits.agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return (
-        n_truth.crossJoin(F.broadcast(n_approx))
-        .crossJoin(F.broadcast(n_hits))
-        .select(
-            "n_truth",
-            "n_approx",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-        )
+    return _recall_one_row(
+        _bf_truth(t), ann_topk_ivf(t).select("query_id", "cand_id")
     )
 
 
@@ -2428,47 +2408,14 @@ def ann_topk_pq(t: dict[str, DataFrame]) -> DataFrame:
     across engines); group sizes and scores are exact, so the result
     is bit-identical to the per-vector scan the oracle replays.
     """
-    emb_raw = fan_out(t["embeddings"])
-    cent = _label_centroids(t)
-    sub_c = cent.select(
-        "label",
-        F.posexplode(
-            F.array(*[F.slice("cv", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
-        ).alias("m", "csub"),
-    )
-    emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
-    sub_v = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("v", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
-        ).alias("m", "vsub"),
-    )
-    # unrolled subvector distance: the HOF fold evaluates interpreted
-    # per (vec, subspace, codeword) row — N·M·K of them — while the
-    # flat sum compiles into whole-stage codegen; addition order is the
-    # same left-associated index walk, so results are bit-identical
-    dist = F.round(
-        sqdist_unrolled(F.col("vsub"), F.col("csub"), PQ_SUB), 6
-    ).alias("dist")
-    scored = sub_v.join(F.broadcast(sub_c), "m").select("vec_id", "m", "label", dist)
-    # one shuffle, one row per vector: per-subspace argmin as M
-    # conditional struct-mins (min ignores the nulls of other
-    # subspaces; tie-break (dist, label) identical to the oracle's
-    # row_number ORDER BY dist, c_label)
+    emb, scored = _pq_subspace_dists(t)
     # (subspace, codeword) flattens to ONE integer map key, built once
     # per VECTOR here (never per scored pair-row): integer probes skip
     # the per-probe string build a concat key would pay N·Q·M times
     key = lambda m_col, label_col: (  # noqa: E731 — two-site key law
         m_col * F.lit(_PQ_KEY_STRIDE) + label_col
     ).cast("long")
-    codes_arr = scored.groupBy("vec_id").agg(
-        *[
-            F.min(
-                F.when(F.col("m") == m, F.struct("dist", "label"))
-            ).alias(f"b{m}")
-            for m in range(PQ_M)
-        ]
-    ).select(
+    codes_arr = scored.groupBy("vec_id").agg(*_pq_argmins()).select(
         "vec_id",
         F.array(
             *[key(F.lit(m), F.col(f"b{m}.label")) for m in range(PQ_M)]
@@ -3109,28 +3056,13 @@ def sq_recall(t: dict[str, DataFrame]) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "cand_id")
-        # checkpoint: referenced twice (count + hits)
-        .localCheckpoint(eager=False)
     )
     truth = (
         _bf_truth(t)
         .join(F.broadcast(q.select("query_id")), "query_id", "left_semi")
         .select("query_id", "cand_id")
     )
-    hits = truth.join(approx, ["query_id", "cand_id"], "left_semi")
-    n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    n_approx = approx.agg(F.count(F.lit(1)).cast("long").alias("n_approx"))
-    n_hits = hits.agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return (
-        n_truth.crossJoin(F.broadcast(n_approx))
-        .crossJoin(F.broadcast(n_hits))
-        .select(
-            "n_truth",
-            "n_approx",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-        )
-    )
+    return _recall_one_row(truth, approx)
 
 
 SQ_RECALL_ORACLE = f"""
@@ -3957,8 +3889,14 @@ def hard_negative_mining(t: dict[str, DataFrame]) -> DataFrame:
         "vec_id", "label", to_double_array("embedding").alias("v")
     )
     emb = emb.withColumn("nrm", norm_unrolled(F.col("v"), DIM))
-    qcap = derived_mrl_query_cap(_n_vecs(t["embeddings"]))
-    q = (
+    q = _hard_neg_queries(emb, derived_mrl_query_cap(_n_vecs(t["embeddings"])))
+    return _top_negatives(_hard_neg_scores(emb, q))
+
+
+def _hard_neg_queries(emb: DataFrame, qcap: int) -> DataFrame:
+    """(query_id, q_label, qv, qn): the ``qcap`` lowest ``% QUERY_MOD``
+    anchors of ``emb`` (vec_id, label, v, nrm)."""
+    return (
         emb.filter(F.col("vec_id") % QUERY_MOD == 0)
         .orderBy("vec_id")
         .limit(qcap)
@@ -3969,12 +3907,17 @@ def hard_negative_mining(t: dict[str, DataFrame]) -> DataFrame:
             F.col("nrm").alias("qn"),
         )
     )
+
+
+def _hard_neg_scores(cands: DataFrame, q: DataFrame) -> DataFrame:
+    """Cosine of every cross-label (anchor, candidate) pair: ``cands``
+    (vec_id, label, v, nrm) against the broadcast anchors ``q``."""
     cos = F.round(
         dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")),
         6,
     ).alias("cosine")
-    scored = (
-        emb.crossJoin(F.broadcast(q))
+    return (
+        cands.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("q_label"))
         .select(
             "query_id",
@@ -3984,6 +3927,12 @@ def hard_negative_mining(t: dict[str, DataFrame]) -> DataFrame:
             cos,
         )
     )
+
+
+def _top_negatives(scored: DataFrame) -> DataFrame:
+    """The ``TOP_K`` highest-cosine negatives per anchor — the finish of
+    :func:`hard_negative_mining` and of each ``stream_hard_negatives``
+    snapshot."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("cand_id")
     )

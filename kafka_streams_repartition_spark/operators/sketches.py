@@ -284,15 +284,7 @@ def cms_heavy_hitters(t: dict[str, DataFrame]) -> DataFrame:
 
     rows = ev.select(F.posexplode(buckets()).alias("d", "bucket"))
     regs = rows.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    # |users| rows, consumed twice (point-query probe + final join):
-    # checkpointed so the second consumer reads the materialization
-    # instead of re-scanning events — 2 fact scans (sketch + baseline),
-    # not 3.
-    exact = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .localCheckpoint(eager=False)
-    )
+    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_exact"))
     est = (
         exact.select("user_id", F.posexplode(buckets()).alias("d", "bucket"))
         .join(F.broadcast(regs), ["d", "bucket"])

@@ -358,6 +358,41 @@ FROM documents
 TFIDF_TOP_K = 3
 
 
+def _doc_term_tf(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf): per-document term frequencies over the
+    whitespace tokenizer, checkpointed — the index build shared by
+    :func:`tfidf_top_terms`, :func:`bm25_search` and
+    :func:`unigram_logprob`."""
+    # explode_outer + isNotNull so the inferred non-empty filter cannot
+    # sink the tokenize expression below the fan_out exchange into the
+    # serial scan task — see dedup.decontaminate.
+    toks = (
+        fan_out(docs)
+        .select("doc_id", F.explode_outer(words(F.col("text"))).alias("term"))
+        .filter(F.col("term").isNotNull())
+    )
+    return (
+        toks.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint()
+    )
+
+
+def _unigram_token_lp(tf: DataFrame) -> tuple[DataFrame, F.Column]:
+    """``(counted, lp)``: the term-frequency rows ``tf`` joined with
+    their term's corpus count ``c`` and the 1-row corpus total ``tot``,
+    and each row's unigram log-probability mass ``tf·ln(c/tot)`` as
+    DECIMAL(28,10) — shared by :func:`unigram_logprob` and
+    ``selection.ccnet_buckets``."""
+    ct = tf.groupBy("term").agg(F.sum("tf").alias("c"))
+    tot = ct.agg(F.sum("c").alias("tot"))
+    lp = (
+        F.col("tf")
+        * F.log(F.col("c").cast("double") / F.col("tot").cast("double"))
+    ).cast("decimal(28,10)")
+    return tf.join(ct, "term").crossJoin(F.broadcast(tot)), lp
+
+
 def tfidf_top_terms(t: dict[str, DataFrame]) -> DataFrame:
     """Top-k distinguishing terms per document by TF-IDF.
 
@@ -388,19 +423,7 @@ def tfidf_top_terms(t: dict[str, DataFrame]) -> DataFrame:
     from pyspark.sql import Window
 
     docs = t["documents"]
-    # explode_outer + isNotNull so the inferred non-empty filter cannot
-    # sink the tokenize expression below the fan_out exchange into the
-    # serial scan task — see dedup.decontaminate.
-    toks = (
-        fan_out(docs)
-        .select("doc_id", F.explode_outer(words(F.col("text"))).alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf = _doc_term_tf(docs)
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     score = (F.col("tf") * F.col("n_docs") / F.col("df")).alias("score")
@@ -738,16 +761,7 @@ def bm25_search(t: dict[str, DataFrame]) -> DataFrame:
     from pyspark.sql import Window
 
     docs = t["documents"]
-    toks = (
-        fan_out(docs)
-        .select("doc_id", F.explode_outer(words(F.col("text"))).alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf = _doc_term_tf(docs)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot")
@@ -885,26 +899,10 @@ def unigram_logprob(t: dict[str, DataFrame]) -> DataFrame:
     from the oracle's sequential sum.
     """
     docs = t["documents"]
-    toks = (
-        fan_out(docs)
-        .select("doc_id", F.explode_outer(words(F.col("text"))).alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
-    ct = tf.groupBy("term").agg(F.sum("tf").alias("c"))
-    tot = ct.agg(F.sum("c").alias("tot"))
-    lp = (
-        F.col("tf")
-        * F.log(F.col("c").cast("double") / F.col("tot").cast("double"))
-    ).cast("decimal(28,10)")
+    tf = _doc_term_tf(docs)
+    counted, lp = _unigram_token_lp(tf)
     per_doc = (
-        tf.join(ct, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
+        counted.groupBy("doc_id")
         .agg(
             F.sum(lp).cast("double").alias("lp_sum"),
             F.sum("tf").alias("n_tokens"),
@@ -1190,24 +1188,13 @@ vocab_{r + 1} AS MATERIALIZED (
 BPE_TRAIN_MERGES_ORACLE = _bpe_train_oracle()
 
 
-def bpe_encode(t: dict[str, DataFrame]) -> DataFrame:
-    """Tokenizer APPLICATION: run the corpus through the merge table
-    :func:`bpe_train_merges` just learned and report, per source, the
-    compression the tokenizer achieves — whitespace tokens vs BPE
-    symbols vs characters.  This is the train→apply round trip of a
-    real tokenizer pipeline (the statistic data teams watch when
-    sizing a vocab).
-
-    The merge table is K rows — it collects to the driver and applies
-    as K literal chained ``replace`` expressions over the same
-    delimiter-framed encoding the trainer used (tokens joined with a
-    space OUTSIDE the frames, so merges can never span a token
-    boundary).  Everything per-document is whole-stage-codegen string
-    work; the only aggregation is the final per-source rollup.  The
-    oracle re-learns the merges with the trainer's own CTE chain and
-    applies them identically.
-    """
-    docs = t["documents"]
+def _bpe_symbol_count(t: dict[str, DataFrame]) -> F.Column:
+    """A document's BPE symbol count under the learned merge table —
+    shared by :func:`bpe_encode` and :func:`tokenizer_fertility`, which
+    must encode identically or their counts drift.  The K merges
+    collect to the driver and apply as K literal chained ``replace``
+    expressions (whole-stage codegen) over the delimiter-framed
+    encoding the trainer used."""
     merges = _bpe_merges(t)
     enc_tok = F.array_join(
         F.transform(
@@ -1229,7 +1216,28 @@ def bpe_encode(t: dict[str, DataFrame]) -> DataFrame:
             F.lit(_BPE_O + a + _BPE_C + _BPE_O + b + _BPE_C),
             F.lit(_BPE_O + a + b + _BPE_C),
         )
-    n_bpe = F.length(s) - F.length(F.replace(s, F.lit(_BPE_O), F.lit("")))
+    return F.length(s) - F.length(F.replace(s, F.lit(_BPE_O), F.lit("")))
+
+
+def bpe_encode(t: dict[str, DataFrame]) -> DataFrame:
+    """Tokenizer APPLICATION: run the corpus through the merge table
+    :func:`bpe_train_merges` just learned and report, per source, the
+    compression the tokenizer achieves — whitespace tokens vs BPE
+    symbols vs characters.  This is the train→apply round trip of a
+    real tokenizer pipeline (the statistic data teams watch when
+    sizing a vocab).
+
+    The merge table is K rows — it collects to the driver and applies
+    as K literal chained ``replace`` expressions over the same
+    delimiter-framed encoding the trainer used (tokens joined with a
+    space OUTSIDE the frames, so merges can never span a token
+    boundary).  Everything per-document is whole-stage-codegen string
+    work; the only aggregation is the final per-source rollup.  The
+    oracle re-learns the merges with the trainer's own CTE chain and
+    applies them identically.
+    """
+    docs = t["documents"]
+    n_bpe = _bpe_symbol_count(t)
     per_doc = fan_out(docs).select(
         F.col("source"),
         F.size(words(F.col("text"))).cast("long").alias("ws"),
@@ -2270,34 +2278,13 @@ def tokenizer_fertility(t: dict[str, DataFrame]) -> DataFrame:
     application pass rolled up by SOURCE (compression view); this
     rolls up by ``lang`` and normalizes.
 
-    Scale shape: identical to :func:`bpe_encode` — K driver-side merge
+    Scale shape: :func:`_bpe_symbol_count`'s K driver-side merge
     literals applied as chained codegen ``replace`` over the
     delimiter-framed encoding, one scan, |langs|-row rollup, one
     corpus-total window over the |langs| rows.
     """
     docs = t["documents"]
-    merges = _bpe_merges(t)
-    enc_tok = F.array_join(
-        F.transform(
-            words(F.col("text")),
-            lambda tok: F.array_join(
-                F.transform(
-                    F.filter(F.split(tok, ""), lambda c: c != F.lit("")),
-                    lambda c: F.concat(F.lit(_BPE_O), c, F.lit(_BPE_C)),
-                ),
-                "",
-            ),
-        ),
-        " ",
-    )
-    s = enc_tok
-    for a, b in merges:
-        s = F.replace(
-            s,
-            F.lit(_BPE_O + a + _BPE_C + _BPE_O + b + _BPE_C),
-            F.lit(_BPE_O + a + b + _BPE_C),
-        )
-    n_bpe = F.length(s) - F.length(F.replace(s, F.lit(_BPE_O), F.lit("")))
+    n_bpe = _bpe_symbol_count(t)
     per_doc = fan_out(docs).select(
         F.col("lang"),
         F.size(words(F.col("text"))).cast("long").alias("ws"),

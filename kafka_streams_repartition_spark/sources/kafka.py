@@ -131,15 +131,8 @@ def write_stream_writer(
     )
 
 
-def write_stream(
-    df: DataFrame,
-    bootstrap: str,
-    topic: str,
-    key_col: str,
-    checkpoint_dir: str,
-    output_mode: str = "update",
-):
-    """S6: Kafka sink; update mode = changelog re-emission semantics."""
-    return write_stream_writer(
-        df, bootstrap, topic, key_col, checkpoint_dir, output_mode
-    ).start()
+def write_stream(*args, **kwargs):
+    """S6: Kafka sink; update mode = changelog re-emission semantics.
+    Takes :func:`write_stream_writer`'s arguments and starts its
+    writer."""
+    return write_stream_writer(*args, **kwargs).start()

@@ -33,6 +33,20 @@ partners — it is never scanned pairwise.  Index storage is append-only
 parquet per batch (``batch=<id>/sigs|vecs``); on a lakehouse the same
 loop targets a Delta/Iceberg table and only the file layout changes.
 
+Each face's snapshot math is its batch operator's own function, called
+on the folded state — ``stream_dedup_inflation`` finishes with
+``dedup._inflation_ratios``, ``stream_leakage_split`` with
+``dedup._leakage_audit``, ``stream_novelty_scoring`` with
+``dedup._novelty_scores``, ``stream_quality_aware`` with
+``dedup._quality_keepers``, ``stream_crossmodal_clusters`` with
+``dedup._crossmodal_table``, ``stream_hamming_neighbors`` scores with
+``dedup._mih_radius_pairs``, ``stream_hard_negatives`` with
+``similarity._hard_neg_scores`` / ``_top_negatives``,
+``stream_filter_attribution`` with ``selection._gate_verdicts`` /
+``_gate_counts``, and the domain-KL family with
+``selection._kl_from_counts`` and its siblings — so stream-equals-batch
+holds by construction, not by keeping two copies equal.
+
 Every face in this module is a ``step(batch_df, batch_id) -> {sub:
 frame}`` handed to the one commit loop, ``snapshot._fold_committed``:
 it owns the run-identity guard and replay skip, the ``batch=<id>/<sub>``
@@ -52,7 +66,7 @@ from ..functions.vectors import dot_unrolled, norm_unrolled, to_double_array
 from ..operators.dedup import (
     EMBED_COSINE_THRESHOLD,
     EMBED_DIM,
-    _embdup_band_structs,
+    _embdup_sigs,
 )
 from .snapshot import (  # noqa: F401  (_prune_superseded is imported from here)
     _committed_dirs,
@@ -108,20 +122,6 @@ def _index_planes(root: str, requested: int | None = None) -> int:
         fh.write(str(p))
     os.rename(tmp, path)
     return p
-
-
-def _sigs_for(vecs: DataFrame, planes: int) -> DataFrame:
-    """(vec_id, v, band, sig) — one row per band per vector."""
-    return vecs.select(
-        "vec_id",
-        "v",
-        F.explode(F.array(*_embdup_band_structs(planes))).alias("bs"),
-    ).select(
-        "vec_id",
-        "v",
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-    )
 
 
 def _rows_hook(spark: SparkSession, root: str, sub: str, schema: str, on_batch):
@@ -211,7 +211,7 @@ def _embedding_batch_pairs(
     the caller persists both inside its commit.  Shared by
     :func:`stream_embedding_index_frame` and
     :func:`stream_crossmodal_clusters`."""
-    new_sigs = _sigs_for(new_vecs, planes)
+    new_sigs = _embdup_sigs(new_vecs, planes)
     sig_dirs = _committed_dirs(root, "sigs")
     vec_dirs = _committed_dirs(root, "vecs")
     cand_self = (
@@ -353,68 +353,86 @@ def _minhash_batch_pairs(
     persists all three inside its commit.  Shared by
     :func:`stream_minhash_index_frame` and
     :func:`stream_crossmodal_clusters`."""
-    from ..operators.dedup import (
-        JACCARD_THRESHOLD,
-        _doc_gram_arrays,
-        _lsh_bands,
-    )
+    from ..operators.dedup import JACCARD_THRESHOLD
+
+    arr, bands, cand, all_grams = _band_candidates(spark, batch_df, root)
+    cand = cand.select(
+        F.least("later", "earlier").alias("doc_a"),
+        F.greatest("later", "earlier").alias("doc_b"),
+    ).distinct()
+    joined, jac = _jaccard_join(cand, all_grams, "doc_a", "doc_b")
+    pairs = joined.select(
+        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
+    ).filter(jac >= JACCARD_THRESHOLD)
+    return pairs, bands, arr
+
+
+def _band_candidates(
+    spark: SparkSession, batch_df: DataFrame, root: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """One micro-batch's MinHash band collisions against the committed
+    index at ``root``: batch-vs-batch pairs (``later`` the larger id)
+    ∪ batch-vs-index pairs (``later`` the batch doc) — history never
+    re-pairs.  Returns ``(arr, bands, cand, all_grams)``: the batch's
+    gram arrays and bands, the (later, earlier) candidates, and the
+    gram arrays of the batch plus the index to verify them against."""
+    from ..operators.dedup import _doc_gram_arrays, _lsh_bands
 
     arr = _doc_gram_arrays(batch_df).localCheckpoint(eager=False)
     bands = _lsh_bands(arr)
-    band_dirs = _committed_dirs(root, "bands")
-    gram_dirs = _committed_dirs(root, "grams")
-    cand_self = (
+    cand = (
         bands.alias("x")
-        .join(bands.select("band_id", "sig", "doc_id").alias("y"),
-              ["band_id", "sig"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("ia"), F.col("y.doc_id").alias("ib"))
+        .join(
+            bands.select("band_id", "sig", "doc_id").alias("y"),
+            ["band_id", "sig"],
+        )
+        .filter(F.col("y.doc_id") < F.col("x.doc_id"))
+        .select(
+            F.col("x.doc_id").alias("later"),
+            F.col("y.doc_id").alias("earlier"),
+        )
     )
-    if band_dirs:
-        idx_bands = spark.read.schema(_BAND_SCHEMA).parquet(*band_dirs)
-        cand_cross = (
-            bands.join(
-                idx_bands.select(
-                    "band_id", "sig", F.col("doc_id").alias("old_id")
-                ),
-                ["band_id", "sig"],
-            )
-            # self-edge guard: a re-ingested doc_id lands in its own
-            # committed bucket (Jaccard 1.0) — batch pairs are a != b
-            .filter(F.col("doc_id") != F.col("old_id"))
-            .select(F.col("doc_id").alias("ia"), F.col("old_id").alias("ib"))
+    band_dirs = _committed_dirs(root, "bands")
+    if not band_dirs:
+        return arr, bands, cand, arr
+    idx_b = spark.read.schema(_BAND_SCHEMA).parquet(*band_dirs)
+    cand_cross = (
+        bands.join(
+            idx_b.select("band_id", "sig", F.col("doc_id").alias("old_id")),
+            ["band_id", "sig"],
         )
-        cand = cand_self.unionByName(cand_cross)
-        all_grams = arr.unionByName(
-            spark.read.schema(_GRAM_SCHEMA).parquet(*gram_dirs)
+        # self-edge guard: a re-ingested doc_id lands in its own
+        # committed bucket (Jaccard 1.0) — batch pairs are a != b
+        .filter(F.col("doc_id") != F.col("old_id"))
+        .select(
+            F.col("doc_id").alias("later"),
+            F.col("old_id").alias("earlier"),
         )
-    else:
-        cand = cand_self
-        all_grams = arr
-    cand = cand.select(
-        F.least("ia", "ib").alias("doc_a"),
-        F.greatest("ia", "ib").alias("doc_b"),
-    ).distinct()
+    )
+    all_grams = arr.unionByName(
+        spark.read.schema(_GRAM_SCHEMA).parquet(*_committed_dirs(root, "grams"))
+    )
+    return arr, bands, cand.unionByName(cand_cross), all_grams
 
+
+def _jaccard_join(
+    cand: DataFrame, all_grams: DataFrame, a: str, b: str
+) -> tuple[DataFrame, F.Column]:
+    """``cand`` joined with both sides' gram arrays (keyed ``a`` and
+    ``b``), and the exact Jaccard column over them."""
     ga = all_grams.select(
-        F.col("doc_id").alias("doc_a"),
+        F.col("doc_id").alias(a),
         F.col("grams").alias("gra"),
         F.col("n").alias("na"),
     )
     gb = all_grams.select(
-        F.col("doc_id").alias("doc_b"),
+        F.col("doc_id").alias(b),
         F.col("grams").alias("grb"),
         F.col("n").alias("nb"),
     )
     inter = F.size(F.array_intersect("gra", "grb"))
     jac = inter / (F.col("na") + F.col("nb") - inter)
-    pairs = (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .filter(jac >= JACCARD_THRESHOLD)
-    )
-    return pairs, bands, arr
+    return cand.join(ga, a).join(gb, b), jac
 
 
 def stream_minhash_index_frame(
@@ -444,6 +462,29 @@ def stream_minhash_index_frame(
 
 _HASH_SCHEMA = "h string"
 _ACC_SCHEMA = "doc_id long, n_tokens long, quality_score double"
+
+
+def _near_dup_losers(
+    spark: SparkSession, batch_df: DataFrame, root: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One micro-batch's near-dup LOSERS against the committed MinHash
+    index at ``root``: the batch docs that Jaccard-verify against an
+    indexed doc or a smaller-id doc of the same batch — the batch
+    rule "the higher id of a verified pair" under id-ordered arrival.
+    Returns ``(arr, bands, losers)``; the caller persists ``arr`` and
+    ``bands`` inside its commit.  Shared by
+    :func:`stream_corpus_curation` and
+    :func:`stream_filter_attribution`."""
+    from ..operators.dedup import JACCARD_THRESHOLD
+
+    arr, bands, cand, all_grams = _band_candidates(spark, batch_df, root)
+    joined, jac = _jaccard_join(cand.distinct(), all_grams, "later", "earlier")
+    losers = (
+        joined.filter(jac >= JACCARD_THRESHOLD)
+        .select(F.col("later").alias("doc_id"))
+        .distinct()
+    )
+    return arr, bands, losers
 
 
 def stream_corpus_curation(
@@ -484,11 +525,6 @@ def stream_corpus_curation(
     asymmetry (historical text never re-shuffles, only (band, sig)
     rows and colliding partners' gram arrays move).
     """
-    from ..operators.dedup import (
-        JACCARD_THRESHOLD,
-        _doc_gram_arrays,
-        _lsh_bands,
-    )
     from ..operators.text_analysis import QUALITY_THRESHOLD, text_stats
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
@@ -518,61 +554,7 @@ def stream_corpus_curation(
             keepers = keepers.join(F.broadcast(idx_h), "h", "left_anti")
 
         # gate 3: near-dup losers — ALL batch docs feed the index
-        arr = _doc_gram_arrays(batch_df).localCheckpoint(eager=False)
-        bands = _lsh_bands(arr)
-        cand_self = (
-            bands.alias("x")
-            .join(
-                bands.select("band_id", "sig", "doc_id").alias("y"),
-                ["band_id", "sig"],
-            )
-            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("earlier"),
-                F.col("y.doc_id").alias("later"),
-            )
-        )
-        band_dirs = _committed_dirs(root, "bands")
-        if band_dirs:
-            idx_bands = spark.read.schema(_BAND_SCHEMA).parquet(*band_dirs)
-            cand_cross = bands.join(
-                idx_bands.select(
-                    "band_id", "sig", F.col("doc_id").alias("old_id")
-                ),
-                ["band_id", "sig"],
-            ).select(
-                F.col("old_id").alias("earlier"),
-                F.col("doc_id").alias("later"),
-            )
-            cand = cand_self.unionByName(cand_cross)
-            all_grams = arr.unionByName(
-                spark.read.schema(_GRAM_SCHEMA).parquet(
-                    *_committed_dirs(root, "grams")
-                )
-            )
-        else:
-            cand = cand_self
-            all_grams = arr
-        cand = cand.distinct()
-        ga = all_grams.select(
-            F.col("doc_id").alias("earlier"),
-            F.col("grams").alias("gra"),
-            F.col("n").alias("na"),
-        )
-        gb = all_grams.select(
-            F.col("doc_id").alias("later"),
-            F.col("grams").alias("grb"),
-            F.col("n").alias("nb"),
-        )
-        inter = F.size(F.array_intersect("gra", "grb"))
-        jac = inter / (F.col("na") + F.col("nb") - inter)
-        losers = (
-            cand.join(ga, "earlier")
-            .join(gb, "later")
-            .filter(jac >= JACCARD_THRESHOLD)
-            .select(F.col("later").alias("doc_id"))
-            .distinct()
-        )
+        arr, bands, losers = _near_dup_losers(spark, batch_df, root)
 
         accepted = keepers.join(
             F.broadcast(losers), "doc_id", "left_anti"
@@ -821,57 +803,23 @@ def stream_novelty_scoring(
     per-doc scores equal the one-shot ``novelty_scoring`` over the
     full corpus for ANY batch cut.  Returns the committed score table.
     """
-    from ..operators.dedup import _doc_gram_arrays
+    from ..operators.dedup import (
+        _first_digests,
+        _gram_digests,
+        _novelty_scores,
+    )
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
-        arr = _doc_gram_arrays(batch_df)
-        ex = arr.select(
-            "doc_id",
-            F.col("n").alias("n_grams"),
-            F.explode_outer("grams").alias("gram"),
-        ).withColumn(
-            "h",
-            F.when(
-                F.col("gram").isNotNull(),
-                F.conv(
-                    F.substring(F.md5("gram"), 1, 15), 16, 10
-                ).cast("long"),
-            ),
-        ).localCheckpoint(eager=False)
+        ex = _gram_digests(batch_df).localCheckpoint(eager=False)
         digest_dirs = _committed_dirs(root, "digests")
-        batch_first = (
-            ex.filter(F.col("h").isNotNull())
-            .groupBy("h")
-            .agg(F.min("doc_id").alias("first_doc"))
-        )
+        batch_first = _first_digests(ex)
         if digest_dirs:
             seen = spark.read.schema(_DIGEST_SCHEMA).parquet(*digest_dirs)
             fresh_first = batch_first.join(seen, "h", "left_anti")
         else:
             fresh_first = batch_first
         fresh_first = fresh_first.localCheckpoint(eager=False)
-        scores = (
-            ex.join(fresh_first, "h", "left")
-            .groupBy("doc_id", "n_grams")
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("first_doc") == F.col("doc_id"), 1
-                    ).otherwise(0)
-                ).alias("n_novel")
-            )
-            .select(
-                "doc_id",
-                F.col("n_grams").cast("long").alias("n_grams"),
-                F.col("n_novel").cast("long").alias("n_novel"),
-                F.when(
-                    F.col("n_grams") > 0,
-                    F.round(F.col("n_novel") / F.col("n_grams"), 4),
-                )
-                .otherwise(F.lit(1.0))
-                .alias("novelty"),
-            )
-        )
+        scores = _novelty_scores(ex, fresh_first)
         return {"scores": scores, "digests": fresh_first.select("h")}
 
     _fold_committed(
@@ -1375,25 +1323,16 @@ def stream_filter_attribution(
     Returns the latest committed snapshot (same schema as the batch
     operator).
     """
-    from ..operators.dedup import (
-        JACCARD_THRESHOLD,
-        _doc_gram_arrays,
-        _lsh_bands,
+    from ..operators.selection import (
+        GATE_COUNTS,
+        _gate_counts,
+        _gate_verdicts,
+        _row_gates,
     )
-    from ..operators.selection import gopher_rules
-    from ..operators.text_analysis import QUALITY_THRESHOLD, text_stats
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         batch_df = batch_df.localCheckpoint(eager=False)
-        t_b = {"documents": batch_df}
-
-        g = gopher_rules(t_b).select(
-            "doc_id", (~F.col("keep")).alias("r_gopher")
-        )
-        q = text_stats(t_b).select(
-            "doc_id",
-            (F.col("quality_score") < QUALITY_THRESHOLD).alias("r_quality"),
-        )
+        g, q = _row_gates({"documents": batch_df})
 
         # exact-dup: in the digest index, or a smaller batch id holds it
         hashed = batch_df.select(
@@ -1431,104 +1370,10 @@ def stream_filter_attribution(
             )
 
         # near-dup: verified against an earlier doc (index or batch)
-        arr = _doc_gram_arrays(batch_df).localCheckpoint(eager=False)
-        bands = _lsh_bands(arr)
-        cand_self = (
-            bands.alias("x")
-            .join(
-                bands.select("band_id", "sig", "doc_id").alias("y"),
-                ["band_id", "sig"],
-            )
-            .filter(F.col("y.doc_id") < F.col("x.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("later"),
-                F.col("y.doc_id").alias("earlier"),
-            )
-        )
-        band_dirs = _committed_dirs(root, "bands")
-        if band_dirs:
-            idx_b = spark.read.schema(_BAND_SCHEMA).parquet(*band_dirs)
-            cand_cross = (
-                bands.join(
-                    idx_b.select(
-                        "band_id", "sig", F.col("doc_id").alias("old_id")
-                    ),
-                    ["band_id", "sig"],
-                )
-                # self-edge guard: a re-ingested doc_id must not
-                # near-dup-flag itself against its own committed copy
-                .filter(F.col("doc_id") != F.col("old_id"))
-                .select(
-                    F.col("doc_id").alias("later"),
-                    F.col("old_id").alias("earlier"),
-                )
-            )
-            cand = cand_self.unionByName(cand_cross)
-            all_grams = arr.unionByName(
-                spark.read.schema(_GRAM_SCHEMA).parquet(
-                    *_committed_dirs(root, "grams")
-                )
-            )
-        else:
-            cand = cand_self
-            all_grams = arr
-        cand = cand.distinct()
-        ga = all_grams.select(
-            F.col("doc_id").alias("later"),
-            F.col("grams").alias("gra"),
-            F.col("n").alias("na"),
-        )
-        gb = all_grams.select(
-            F.col("doc_id").alias("earlier"),
-            F.col("grams").alias("grb"),
-            F.col("n").alias("nb"),
-        )
-        inter = F.size(F.array_intersect("gra", "grb"))
-        jac = inter / (F.col("na") + F.col("nb") - inter)
-        near = (
-            cand.join(ga, "later")
-            .join(gb, "earlier")
-            .filter(jac >= JACCARD_THRESHOLD)
-            .select(F.col("later").alias("doc_id"))
-            .distinct()
-            .withColumn("r_near", F.lit(True))
-        )
-
-        # no forced broadcast: the loser list is a large fraction of a
-        # dup-heavy corpus — AQE picks the join strategy (mirrors the
-        # batch _gate_flags)
-        flags = (
-            ex.join(g, "doc_id")
-            .join(q, "doc_id")
-            .join(near, "doc_id", "left")
-            .select(
-                "source",
-                "r_gopher",
-                "r_quality",
-                "r_exact",
-                F.coalesce(F.col("r_near"), F.lit(False)).alias("r_near"),
-            )
-            .withColumn(
-                "n_rej",
-                sum(
-                    F.col(c).cast("int")
-                    for c in ("r_gopher", "r_quality", "r_exact", "r_near")
-                ),
-            )
-        )
-        cnt = lambda c: F.sum(F.col(c).cast("int")).cast("long")  # noqa: E731
-        bc = flags.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            cnt("r_gopher").alias("n_gopher_rejected"),
-            cnt("r_quality").alias("n_quality_rejected"),
-            cnt("r_exact").alias("n_exact_dup"),
-            cnt("r_near").alias("n_near_dup"),
-            F.sum(F.when(F.col("n_rej") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias("n_rejected_any"),
-            F.sum(F.when(F.col("n_rej") >= 2, 1).otherwise(0))
-            .cast("long")
-            .alias("n_multi_rejected"),
+        arr, bands, losers = _near_dup_losers(spark, batch_df, root)
+        near = losers.withColumn("r_near", F.lit(True))
+        bc = _gate_verdicts(ex, g, q, near).groupBy("source").agg(
+            *_gate_counts()
         )
         latest = _latest_committed_dir(root, "counters")
         if latest is not None:
@@ -1536,20 +1381,7 @@ def stream_filter_attribution(
             cum = (
                 prev.unionByName(bc)
                 .groupBy("source")
-                .agg(
-                    *[
-                        F.sum(c).cast("long").alias(c)
-                        for c in (
-                            "n_docs",
-                            "n_gopher_rejected",
-                            "n_quality_rejected",
-                            "n_exact_dup",
-                            "n_near_dup",
-                            "n_rejected_any",
-                            "n_multi_rejected",
-                        )
-                    ]
-                )
+                .agg(*[F.sum(c).cast("long").alias(c) for c in GATE_COUNTS])
             )
         else:
             cum = bc
@@ -1762,6 +1594,8 @@ def stream_crossmodal_clusters(
     (``streams/.../Streams.java``'s KTable aggregations); here the
     state is the union-find label table.
     """
+    from ..operators.dedup import _crossmodal_table, _pair_members
+
     n_planes = _index_planes(root, planes)
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
@@ -1783,17 +1617,9 @@ def stream_crossmodal_clusters(
         labels = _fold_labels(spark, root, new_pairs)
 
         # --- family-membership flags, folded per doc
-        def members(pairs: DataFrame, flag: str) -> DataFrame:
-            return (
-                pairs.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-                .distinct()
-                .withColumn(flag, F.lit(True))
-            )
-
         batch_flags = (
-            members(tp, "text_dup")
-            .join(members(ep, "embed_dup"), "doc_id", "full_outer")
+            _pair_members(tp, "text_dup")
+            .join(_pair_members(ep, "embed_dup"), "doc_id", "full_outer")
             .select(
                 "doc_id",
                 F.coalesce("text_dup", F.lit(False)).alias("text_dup"),
@@ -1817,20 +1643,7 @@ def stream_crossmodal_clusters(
         flags = flags.localCheckpoint(eager=False)
 
         # --- snapshot: the full decision table from the folded state
-        m = labels.join(flags, "doc_id")
-        cstats = m.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).cast("long").alias("cluster_size"),
-            F.max("text_dup").alias("has_text"),
-            F.max("embed_dup").alias("has_embed"),
-        )
-        snap = m.join(cstats, "cluster_id").select(
-            "doc_id",
-            "cluster_id",
-            "text_dup",
-            "embed_dup",
-            "cluster_size",
-            (F.col("has_text") & F.col("has_embed")).alias("cross_modal"),
-        )
+        snap = _crossmodal_table(labels.join(flags, "doc_id"))
 
         return {
             "clusters": _with_batch(snap, batch_id),
@@ -1896,6 +1709,7 @@ def stream_quality_aware(
     over exactly the documents ingested so far.  Returns the latest
     committed snapshot.
     """
+    from ..operators.dedup import _quality_keepers
     from ..operators.text_analysis import text_stats
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
@@ -1925,26 +1739,7 @@ def stream_quality_aware(
         )
 
         m = labels.join(all_scores, "doc_id").localCheckpoint(eager=False)
-        best = (
-            m.groupBy("cluster_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("quality_score"), (-F.col("doc_id")).alias("neg_id")
-                    )
-                ).alias("b")
-            )
-            .select(
-                "cluster_id", (-F.col("b.neg_id")).cast("long").alias("keeper_id")
-            )
-        )
-        snap = m.join(best, "cluster_id").select(
-            "doc_id",
-            "cluster_id",
-            "quality_score",
-            "keeper_id",
-            (F.col("doc_id") == F.col("keeper_id")).alias("kept"),
-        )
+        snap = _quality_keepers(m)
 
         return {
             "clusters": _with_batch(snap, batch_id),
@@ -2006,19 +1801,12 @@ def stream_leakage_split(
     ``leakage_split`` over exactly the documents ingested so far.
     Returns the latest committed audit row.
     """
-    from ..operators.dedup import VAL_PCT, _hash_bucket
+    from ..operators.dedup import _is_val, _leakage_audit, _split_counts
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         pairs, bands, arr = _minhash_batch_pairs(spark, batch_df, root)
-        bc = batch_df.select(
-            (_hash_bucket(F.col("doc_id")) < VAL_PCT).alias("is_val")
-        ).agg(
-            F.sum(F.when(~F.col("is_val"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_train"),
-            F.sum(F.when(F.col("is_val"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_val"),
+        bc = _split_counts(
+            batch_df.select(_is_val(F.col("doc_id")).alias("is_val"))
         )
         cnt_dir = _latest_committed_dir(root, "counts")
         if cnt_dir is not None:
@@ -2044,44 +1832,10 @@ def stream_leakage_split(
         tagged = allp.select(
             "doc_a",
             "doc_b",
-            (_hash_bucket(F.col("doc_a")) < VAL_PCT).alias("va"),
-            (_hash_bucket(F.col("doc_b")) < VAL_PCT).alias("vb"),
+            _is_val(F.col("doc_a")).alias("va"),
+            _is_val(F.col("doc_b")).alias("vb"),
         ).localCheckpoint(eager=False)
-        pair_counts = tagged.agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum(F.when(F.col("va") != F.col("vb"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_straddle"),
-        )
-        evict = tagged.filter(F.col("va") != F.col("vb")).select(
-            F.when(F.col("va"), F.col("doc_b"))
-            .otherwise(F.col("doc_a"))
-            .alias("train_doc"),
-            F.when(F.col("va"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("val_doc"),
-        ).agg(
-            F.count_distinct("train_doc").cast("long").alias("n_train_evicted"),
-            F.count_distinct("val_doc").cast("long").alias("n_val_contaminated"),
-        )
-        snap = (
-            cum.crossJoin(F.broadcast(pair_counts))
-            .crossJoin(F.broadcast(evict))
-            .select(
-                "n_train",
-                "n_val",
-                "n_pairs",
-                "n_straddle",
-                "n_train_evicted",
-                "n_val_contaminated",
-                F.when(
-                    F.col("n_pairs") > 0,
-                    F.round(F.col("n_straddle") / F.col("n_pairs"), 4),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("straddle_frac"),
-            )
-        )
+        snap = _leakage_audit(cum, tagged)
         return {
             "audit": _with_batch(snap, batch_id),
             "counts": cum,
@@ -2458,29 +2212,11 @@ def stream_hard_negatives(
     """
     from ..operators.similarity import (
         DIM,
-        QUERY_MOD,
-        TOP_K,
+        _hard_neg_queries,
+        _hard_neg_scores,
+        _top_negatives,
         derived_mrl_query_cap,
     )
-
-    def score(cands: DataFrame, q: DataFrame) -> DataFrame:
-        cos = F.round(
-            dot_unrolled(F.col("qv"), F.col("v"), DIM)
-            / (F.col("qn") * F.col("nrm")),
-            6,
-        ).alias("cosine")
-        return (
-            cands.crossJoin(F.broadcast(q))
-            .filter(F.col("label") != F.col("q_label"))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("cand_id"),
-                "q_label",
-                F.col("label").alias("neg_label"),
-                cos,
-            )
-        )
 
     held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
 
@@ -2506,25 +2242,14 @@ def stream_hard_negatives(
         # shrinking cap displaces committed anchors exactly like cap
         # displacement below (their rows drop in the same commit)
         qcap = derived_mrl_query_cap(all_vecs.count())
-        q = (
-            all_vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-            .orderBy("vec_id")
-            .limit(qcap)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("q_label"),
-                F.col("v").alias("qv"),
-                F.col("nrm").alias("qn"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        q = _hard_neg_queries(all_vecs, qcap).localCheckpoint(eager=False)
         prev_qids = _read_committed(
             spark, root, "qids", _HN_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
-        legs = [score(new, q)]
+        legs = [_hard_neg_scores(new, q)]
         if old is not None:
-            legs.append(score(old, new_q))
+            legs.append(_hard_neg_scores(old, new_q))
         negs_dir = _latest_committed_dir(root, "negs")
         if negs_dir is not None:
             prev = spark.read.schema(_HN_NEG_SCHEMA).parquet(negs_dir)
@@ -2539,21 +2264,7 @@ def stream_hard_negatives(
         merged = legs[0]
         for leg in legs[1:]:
             merged = merged.unionByName(leg)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("cand_id")
-        )
-        snap = (
-            merged.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select(
-                "query_id",
-                F.col("rank").cast("long").alias("rank"),
-                "cand_id",
-                "q_label",
-                "neg_label",
-                "cosine",
-            )
-        )
+        snap = _top_negatives(merged)
         held[:] = [new, q]
         return {
             "negs": snap,
@@ -2624,47 +2335,10 @@ def stream_hamming_neighbors(
     from ..operators.dedup import (
         HAMMING_CHUNKS,
         HAMMING_QUERY_CAP,
-        HAMMING_RADIUS,
         QUERY_MOD,
+        _mih_radius_pairs,
         _simhash64_codes,
     )
-
-    ccols = [f"c{c}" for c in range(HAMMING_CHUNKS)]
-
-    def score(cands: DataFrame, qcodes: DataFrame) -> DataFrame:
-        # the batch operator's MIH shape: both sides explode to
-        # (chunk, value) rows carrying their full code, the bucket
-        # equi-join both finds and scores candidates in place, and
-        # multi-chunk collisions dedupe on the pair key alone
-        corpus_long = cands.select(
-            "doc_id",
-            *ccols,
-            F.posexplode(F.array(*[F.col(c) for c in ccols])).alias(
-                "chunk", "cval"
-            ),
-        )
-        qlong = qcodes.select(
-            "query_id",
-            *[F.col(f"q{c}") for c in range(HAMMING_CHUNKS)],
-            F.posexplode(
-                F.array(*[F.col(f"q{c}") for c in range(HAMMING_CHUNKS)])
-            ).alias("chunk", "cval"),
-        )
-        ham = None
-        for c in range(HAMMING_CHUNKS):
-            term = F.bit_count(F.col(f"c{c}").bitwiseXOR(F.col(f"q{c}")))
-            ham = term if ham is None else ham + term
-        return (
-            corpus_long.join(F.broadcast(qlong), ["chunk", "cval"])
-            .filter(F.col("doc_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("doc_id").alias("cand_id"),
-                ham.cast("long").alias("hamming"),
-            )
-            .filter(F.col("hamming") <= HAMMING_RADIUS)
-            .distinct()
-        )
 
     held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
 
@@ -2694,9 +2368,9 @@ def stream_hamming_neighbors(
             spark, root, "qids", _HM_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
-        legs = [score(new, q)]
+        legs = [_mih_radius_pairs(new, q)]
         if old is not None:
-            legs.append(score(old, new_q))
+            legs.append(_mih_radius_pairs(old, new_q))
         pairs_dir = _latest_committed_dir(root, "pairs")
         if pairs_dir is not None:
             prev = spark.read.schema(_HM_PAIR_SCHEMA).parquet(pairs_dir)
@@ -2761,19 +2435,12 @@ def stream_dedup_inflation(
     documents ingested so far, under arbitrary arrival order including
     re-ingested ids.  Returns the latest committed snapshot.
     """
-    from ..functions.text import words
+    from ..operators.dedup import _doc_hash_tokens, _inflation_ratios
 
     held: list[DataFrame] = []  # this batch's checkpoint, released post-commit
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
-        new = (
-            batch_df.select(
-                "doc_id",
-                F.md5("text").alias("h"),
-                F.size(words(F.col("text"))).cast("long").alias("n_tok"),
-            )
-            .dropDuplicates(["doc_id"])
-        )
+        new = _doc_hash_tokens(batch_df).dropDuplicates(["doc_id"])
         id_dirs = _committed_dirs(root, "ids")
         if id_dirs:
             old_ids = spark.read.schema(_DI_ID_SCHEMA).parquet(*id_dirs)
@@ -2802,38 +2469,17 @@ def stream_dedup_inflation(
                 F.sum("sum_tok").alias("tok"),
             )
         )
-        snap = folded.agg(
-            F.sum("n").cast("long").alias("n_docs"),
-            (F.sum("n") - F.count(F.lit(1))).cast("long").alias("n_dup_docs"),
-            F.sum("tok").cast("long").alias("tokens_total"),
-            # per group: dup tokens = tok - tok/n (tok/n is exact: every
-            # member's token count is identical)
-            F.sum(F.col("tok") - (F.col("tok") / F.col("n")).cast("long"))
-            .cast("long")
-            .alias("tokens_dup"),
-        ).select(
-            "n_docs",
-            "n_dup_docs",
-            # NULL-by-contract on non-positive denominators, matching
-            # the batch face (dedup_inflation) guard exactly
-            F.when(
-                F.col("n_docs") > 0,
-                F.round(F.col("n_dup_docs") / F.col("n_docs"), 6),
-            ).alias("dup_doc_frac"),
-            "tokens_total",
-            "tokens_dup",
-            F.when(
-                F.col("tokens_total") > 0,
-                F.round(F.col("tokens_dup") / F.col("tokens_total"), 6),
-            ).alias("dup_token_frac"),
-            F.when(
-                (F.col("tokens_total") - F.col("tokens_dup")) > 0,
-                F.round(
-                    F.col("tokens_total")
-                    / (F.col("tokens_total") - F.col("tokens_dup")),
-                    6,
-                ),
-            ).alias("inflation"),
+        snap = _inflation_ratios(
+            folded.agg(
+                F.sum("n").cast("long").alias("n_docs"),
+                (F.sum("n") - F.count(F.lit(1))).cast("long").alias("n_dup_docs"),
+                F.sum("tok").cast("long").alias("tokens_total"),
+                # per group: dup tokens = tok - tok/n (tok/n is exact:
+                # every member's token count is identical)
+                F.sum(F.col("tok") - (F.col("tok") / F.col("n")).cast("long"))
+                .cast("long")
+                .alias("tokens_dup"),
+            )
         )
         held[:] = [new]
         return {"snap": snap}

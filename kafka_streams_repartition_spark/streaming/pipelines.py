@@ -23,6 +23,7 @@ per-key state needs the same caveat the reference demonstrates:
 
 from __future__ import annotations
 
+import inspect
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -282,6 +283,23 @@ def stream_interval_join(
     side keyed on ``key`` — co-partitioned state store join, same shape
     as the reference's co-partitioning contract.
     """
+    return _interval_join(
+        left, right, key, left_ts, right_ts, within, watermark, "inner"
+    )
+
+
+def _interval_join(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_ts: str,
+    right_ts: str,
+    within: str,
+    watermark: str,
+    how: str,
+) -> DataFrame:
+    """The watermarked interval join both public forms run, ``how``
+    being ``"inner"`` or ``"leftOuter"``."""
     l = left.withWatermark(left_ts, watermark)
     r = right.withWatermark(right_ts, watermark)
     cond = (
@@ -289,22 +307,14 @@ def stream_interval_join(
         & (r[right_ts] >= l[left_ts])
         & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {within}"))
     )
-    return l.join(r, cond).drop(r[key])
+    return l.join(r, cond, how).drop(r[key])
 
 
-def stream_interval_join_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    within: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """LEFT OUTER form of :func:`stream_interval_join` — Kafka Streams'
-    ``KStream.leftJoin(KStream, JoinWindows)``: every left row emits;
-    unmatched ones emit null-padded ONCE THE WATERMARK PASSES its join
-    window's end (only then can "no match" be final — the same
+def stream_interval_join_outer(*args, **kwargs) -> DataFrame:
+    """LEFT OUTER form of :func:`stream_interval_join` (same arguments)
+    — Kafka Streams' ``KStream.leftJoin(KStream, JoinWindows)``: every
+    left row emits; unmatched ones emit null-padded ONCE THE WATERMARK
+    PASSES its join window's end (only then can "no match" be final — the same
     window-close reasoning Kafka Streams applies via its spurious-
     left-join fix, KIP-633's grace period).
 
@@ -320,14 +330,9 @@ def stream_interval_join_outer(
     eviction.  Inner-join rows stream out immediately; null-padded rows
     trail by up to (watermark + within).
     """
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    cond = (
-        (l[key] == r[key])
-        & (r[right_ts] >= l[left_ts])
-        & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {within}"))
-    )
-    return l.join(r, cond, "leftOuter").drop(r[key])
+    bound = inspect.signature(stream_interval_join).bind(*args, **kwargs)
+    bound.apply_defaults()
+    return _interval_join(*bound.args, "leftOuter")
 
 
 def stream_hll_registers(events: DataFrame) -> DataFrame:

@@ -647,6 +647,76 @@ def test_persisted_faces_share_one_commit_loop():
     assert [fn for _, fn in loops] == ["_fold_committed"], loops
 
 
+# distinct code windows allowed to occur in two or more places in the
+# package: lower it when a copy folds into a shared helper, never raise it
+COPIED_WINDOW_BOUND = 60
+
+
+def _package_code_lines(src: str) -> list[tuple[int, str]]:
+    """(line number, stripped text) of every code line: non-blank,
+    not a comment, not inside a multi-line string literal."""
+    import ast
+
+    in_string = set()
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.JoinedStr)
+            or (isinstance(node, ast.Constant) and isinstance(node.value, (str, bytes)))
+        ) and node.end_lineno > node.lineno:
+            in_string.update(range(node.lineno, node.end_lineno + 1))
+    return [
+        (i, line.strip())
+        for i, line in enumerate(src.splitlines(), 1)
+        if line.strip() and not line.strip().startswith("#") and i not in in_string
+    ]
+
+
+def test_no_copied_kernels():
+    """Each computation has one body: the package holds at most
+    ``COPIED_WINDOW_BOUND`` distinct windows of 7 consecutive code
+    lines (≥ 84 characters in total) that occur in two or more places.
+    A streaming face calls its batch operator's function; two batch
+    operators that share a kernel call one helper."""
+    import ast
+    import pathlib
+    from collections import defaultdict
+
+    import kafka_streams_repartition_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    places = defaultdict(list)  # window -> [(file, line, function)]
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        owner = {}  # line -> innermost enclosing function
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for fn in sorted(funcs, key=lambda n: n.lineno - n.end_lineno):
+            for ln in range(fn.lineno, fn.end_lineno + 1):
+                owner[ln] = fn.name
+        lines = _package_code_lines(src)
+        for k in range(len(lines) - 6):
+            window = tuple(text for _, text in lines[k : k + 7])
+            if sum(map(len, window)) >= 84:
+                ln = lines[k][0]
+                places[window].append(
+                    (str(path.relative_to(root)), ln, owner.get(ln, "<module>"))
+                )
+    copied = {w: p for w, p in places.items() if len(p) >= 2}
+    groups = sorted(
+        {
+            " | ".join(sorted({f"{f}:{fn}" for f, _, fn in p}))
+            for p in copied.values()
+        }
+    )
+    assert len(copied) <= COPIED_WINDOW_BOUND, (
+        f"{len(copied)} copied code windows (bound {COPIED_WINDOW_BOUND}) "
+        "between:\n" + "\n".join(groups)
+    )
+
+
 def test_kmeans_producer_has_no_package_callers():
     """``similarity.kmeans_cells`` is the registry's producer query: it
     always trains fresh, so a package caller would re-run Lloyd per
@@ -1840,6 +1910,22 @@ def test_tokenizer_fertility_consistent_with_bpe_encode(t):
         "n_ws_tokens"
     ].sum()
     assert abs(wmean - 1.0) < 1e-3
+
+
+def test_sales_cube_contains_sales_rollup(t):
+    """ROLLUP's three grouping-set levels (gid 0: nation × status, 1:
+    nation, 3: grand total) are exactly the CUBE rows with the same
+    gid; CUBE adds only the status-only slice (gid 2)."""
+    key = ["gid", "nation", "status"]
+    rollup = an.sales_rollup(t).toPandas().sort_values(key, ignore_index=True)
+    cube = an.sales_cube(t).toPandas().sort_values(key, ignore_index=True)
+    assert set(rollup["gid"]) == {0, 1, 3}
+    assert set(cube["gid"]) == {0, 1, 2, 3}
+    same_levels = cube[cube["gid"] != 2].reset_index(drop=True)
+    assert same_levels[list(rollup.columns)].equals(rollup)
+    # every level partitions the same orders
+    per_gid = cube.groupby("gid")["n_orders"].sum()
+    assert (per_gid == per_gid[3]).all()
 
 
 def test_cluster_purity_accounts_every_vector(t):
