@@ -125,9 +125,7 @@ def restore_merge(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-from .product_stats import _ORACLE_BODY  # noqa: E402
-
-RESTORE_MERGE_ORACLE = _ORACLE_BODY.format(extra_filter="")
+from .product_stats import _ORACLE as RESTORE_MERGE_ORACLE  # noqa: E402
 
 
 def changelog_restore_job(

@@ -50,9 +50,14 @@ holds by construction, not by keeping two copies equal.
 Every face in this module is a ``step(batch_df, batch_id) -> {sub:
 frame}`` handed to the one commit loop, ``snapshot._fold_committed``:
 it owns the run-identity guard and replay skip, the ``batch=<id>/<sub>``
-writes, the ``_CURRENT`` commit, the prune of superseded cumulative
-tables, the ``on_batch`` hook and the ``availableNow`` drain, and
-``snapshot._read_committed`` reads the committed tables back.
+writes (a step writes nothing itself), the ``_CURRENT`` commit, the
+prune of superseded cumulative tables, the ``on_batch`` hook and the
+``availableNow`` drain.  A face reads committed state only through
+``snapshot._read_committed`` (``latest=True`` for a cumulative rollup).
+Before the first commit that read is an empty relation Catalyst folds
+away, so each step is one code path: batch 0 runs the same unions,
+joins and re-aggregations as every later batch, and the only ``if`` on
+state left is a data-dependent ``isEmpty()`` skip.
 """
 
 from __future__ import annotations
@@ -68,13 +73,7 @@ from ..operators.dedup import (
     EMBED_DIM,
     _embdup_sigs,
 )
-from .snapshot import (  # noqa: F401  (_prune_superseded is imported from here)
-    _committed_dirs,
-    _fold_committed,
-    _latest_committed_dir,
-    _prune_superseded,
-    _read_committed,
-)
+from .snapshot import _fold_committed, _read_committed, _write_atomic
 
 _SIG_SCHEMA = "vec_id long, band int, sig string"
 _VEC_SCHEMA = "vec_id long, v array<double>"
@@ -117,23 +116,19 @@ def _index_planes(root: str, requested: int | None = None) -> int:
     except FileNotFoundError:
         pass
     p = requested if requested is not None else EMBDUP_PLANE_MIN
-    tmp = os.path.join(root, f".{_PLANES_FILE}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(p))
-    os.rename(tmp, path)
+    _write_atomic(path, str(p))
     return p
 
 
 def _rows_hook(spark: SparkSession, root: str, sub: str, schema: str, on_batch):
     """``on_batch(batch_id, rows)`` fed with the batch's committed
-    ``sub`` table, or None without a hook."""
+    ``sub`` table (the hook runs right after the commit, so the latest
+    committed copy is this batch's), or None without a hook."""
     if on_batch is None:
         return None
     return lambda batch_id: on_batch(
         batch_id,
-        spark.read.schema(schema)
-        .parquet(os.path.join(root, f"batch={batch_id}", sub))
-        .collect(),
+        _read_committed(spark, root, sub, schema, latest=True).collect(),
     )
 
 
@@ -212,8 +207,6 @@ def _embedding_batch_pairs(
     :func:`stream_embedding_index_frame` and
     :func:`stream_crossmodal_clusters`."""
     new_sigs = _embdup_sigs(new_vecs, planes)
-    sig_dirs = _committed_dirs(root, "sigs")
-    vec_dirs = _committed_dirs(root, "vecs")
     cand_self = (
         new_sigs.alias("x")
         .join(new_sigs.select("band", "sig", "vec_id").alias("y"),
@@ -223,29 +216,22 @@ def _embedding_batch_pairs(
             F.col("x.vec_id").alias("ia"), F.col("y.vec_id").alias("ib")
         )
     )
-    if sig_dirs:
-        idx_sigs = spark.read.schema(_SIG_SCHEMA).parquet(*sig_dirs)
-        cand_cross = (
-            new_sigs.join(
-                idx_sigs.select(
-                    "band", "sig", F.col("vec_id").alias("old_id")
-                ),
-                ["band", "sig"],
-            )
-            # a re-ingested vec_id collides with its own committed copy
-            # (cosine 1.0); the self-edge must not reach the pair table
-            # — the batch operator only ever pairs a != b
-            .filter(F.col("vec_id") != F.col("old_id"))
-            .select(F.col("vec_id").alias("ia"), F.col("old_id").alias("ib"))
+    idx_sigs = _read_committed(spark, root, "sigs", _SIG_SCHEMA)
+    cand_cross = (
+        new_sigs.join(
+            idx_sigs.select("band", "sig", F.col("vec_id").alias("old_id")),
+            ["band", "sig"],
         )
-        cand = cand_self.unionByName(cand_cross)
-        all_vecs = new_vecs.unionByName(
-            spark.read.schema(_VEC_SCHEMA).parquet(*vec_dirs)
-        )
-    else:
-        cand = cand_self
-        all_vecs = new_vecs
-    cand = cand.select(
+        # a re-ingested vec_id collides with its own committed copy
+        # (cosine 1.0); the self-edge must not reach the pair table
+        # — the batch operator only ever pairs a != b
+        .filter(F.col("vec_id") != F.col("old_id"))
+        .select(F.col("vec_id").alias("ia"), F.col("old_id").alias("ib"))
+    )
+    all_vecs = new_vecs.unionByName(
+        _read_committed(spark, root, "vecs", _VEC_SCHEMA)
+    )
+    cand = cand_self.unionByName(cand_cross).select(
         F.least("ia", "ib").alias("doc_a"),
         F.greatest("ia", "ib").alias("doc_b"),
     ).distinct()
@@ -392,10 +378,7 @@ def _band_candidates(
             F.col("y.doc_id").alias("earlier"),
         )
     )
-    band_dirs = _committed_dirs(root, "bands")
-    if not band_dirs:
-        return arr, bands, cand, arr
-    idx_b = spark.read.schema(_BAND_SCHEMA).parquet(*band_dirs)
+    idx_b = _read_committed(spark, root, "bands", _BAND_SCHEMA)
     cand_cross = (
         bands.join(
             idx_b.select("band_id", "sig", F.col("doc_id").alias("old_id")),
@@ -410,7 +393,7 @@ def _band_candidates(
         )
     )
     all_grams = arr.unionByName(
-        spark.read.schema(_GRAM_SCHEMA).parquet(*_committed_dirs(root, "grams"))
+        _read_committed(spark, root, "grams", _GRAM_SCHEMA)
     )
     return arr, bands, cand.unionByName(cand_cross), all_grams
 
@@ -548,10 +531,8 @@ def stream_corpus_curation(
             hashed.groupBy("h").agg(F.min("doc_id").alias("doc_id")),
             ["h", "doc_id"],
         )
-        hash_dirs = _committed_dirs(root, "hashes")
-        if hash_dirs:
-            idx_h = spark.read.schema(_HASH_SCHEMA).parquet(*hash_dirs)
-            keepers = keepers.join(F.broadcast(idx_h), "h", "left_anti")
+        idx_h = _read_committed(spark, root, "hashes", _HASH_SCHEMA)
+        keepers = keepers.join(F.broadcast(idx_h), "h", "left_anti")
 
         # gate 3: near-dup losers — ALL batch docs feed the index
         arr, bands, losers = _near_dup_losers(spark, batch_df, root)
@@ -672,13 +653,8 @@ def stream_semdedup(
             ).alias("cent_cos"),
         ).localCheckpoint(eager=False)
 
-        vec_dirs = _committed_dirs(root, "vecs")
-        idx = (
-            spark.read.schema(_SD_VEC_SCHEMA).parquet(*vec_dirs)
-            if vec_dirs
-            else None
-        )
-        pool = new if idx is None else new.unionByName(idx)
+        idx = _read_committed(spark, root, "vecs", _SD_VEC_SCHEMA)
+        pool = new.unionByName(idx)
 
         # per-cell chunk count k = ceil(|cell|/cap) — ≤ n_cells rows
         # (the frozen quantizer bounds the cell count), broadcast into
@@ -738,23 +714,22 @@ def stream_semdedup(
         dominated_new = dominated_ids(
             side(new, "a", "explode"), side(pool, "b", "chunk")
         ).localCheckpoint(eager=False)
-        batch_verdicts = new.join(
-            dominated_new, "vec_id", "left_semi"
-        ).select(
-            "vec_id", "cell", "cent_cos", F.lit(True).alias("removed")
-        ).unionByName(
-            new.join(dominated_new, "vec_id", "left_anti").select(
-                "vec_id", "cell", "cent_cos", F.lit(False).alias("removed")
-            )
+        dominated_hist = dominated_ids(
+            side(idx, "a", "chunk"), side(new, "b", "explode")
         )
-        if idx is not None:
-            dominated_hist = dominated_ids(
-                side(idx, "a", "chunk"), side(new, "b", "explode")
+        flips = idx.join(dominated_hist, "vec_id", "left_semi").select(
+            "vec_id", "cell", "cent_cos", F.lit(True).alias("removed")
+        )
+        batch_verdicts = (
+            new.join(dominated_new, "vec_id", "left_semi")
+            .select("vec_id", "cell", "cent_cos", F.lit(True).alias("removed"))
+            .unionByName(
+                new.join(dominated_new, "vec_id", "left_anti").select(
+                    "vec_id", "cell", "cent_cos", F.lit(False).alias("removed")
+                )
             )
-            flips = idx.join(dominated_hist, "vec_id", "left_semi").select(
-                "vec_id", "cell", "cent_cos", F.lit(True).alias("removed")
-            )
-            batch_verdicts = batch_verdicts.unionByName(flips)
+            .unionByName(flips)
+        )
 
         return {"verdicts": batch_verdicts, "vecs": new}
 
@@ -811,14 +786,12 @@ def stream_novelty_scoring(
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
         ex = _gram_digests(batch_df).localCheckpoint(eager=False)
-        digest_dirs = _committed_dirs(root, "digests")
-        batch_first = _first_digests(ex)
-        if digest_dirs:
-            seen = spark.read.schema(_DIGEST_SCHEMA).parquet(*digest_dirs)
-            fresh_first = batch_first.join(seen, "h", "left_anti")
-        else:
-            fresh_first = batch_first
-        fresh_first = fresh_first.localCheckpoint(eager=False)
+        seen = _read_committed(spark, root, "digests", _DIGEST_SCHEMA)
+        fresh_first = (
+            _first_digests(ex)
+            .join(seen, "h", "left_anti")
+            .localCheckpoint(eager=False)
+        )
         scores = _novelty_scores(ex, fresh_first)
         return {"scores": scores, "digests": fresh_first.select("h")}
 
@@ -882,36 +855,26 @@ def stream_line_dedup(
             .agg(F.count_distinct("doc_id").cast("long").alias("n_docs"))
             .localCheckpoint(eager=False)
         )
-        df_dirs = _committed_dirs(root, "dfs")
-        line_dirs = _committed_dirs(root, "lines")
-        if df_dirs:
-            # history df totals for the BATCH's digests only (keyed
-            # semi-join before the aggregate — never a corpus-vocab
-            # rollup per batch)
-            hist_tot = (
-                spark.read.schema(_LN_DF_SCHEMA)
-                .parquet(*df_dirs)
-                .join(bdf.select("h"), "h", "left_semi")
-                .groupBy("h")
-                .agg(F.sum("n_docs").alias("hist_docs"))
+        hist_df = _read_committed(spark, root, "dfs", _LN_DF_SCHEMA)
+        # history df totals for the BATCH's digests only (keyed
+        # semi-join before the aggregate — never a corpus-vocab
+        # rollup per batch)
+        hist_tot = (
+            hist_df.join(bdf.select("h"), "h", "left_semi")
+            .groupBy("h")
+            .agg(F.sum("n_docs").alias("hist_docs"))
+        )
+        tot = (
+            bdf.join(hist_tot, "h", "left")
+            .select(
+                "h",
+                F.coalesce(F.col("hist_docs"), F.lit(0)).alias("df_hist"),
+                (
+                    F.col("n_docs") + F.coalesce(F.col("hist_docs"), F.lit(0))
+                ).alias("df"),
             )
-            tot = (
-                bdf.join(hist_tot, "h", "left")
-                .select(
-                    "h",
-                    F.coalesce(F.col("hist_docs"), F.lit(0)).alias("df_hist"),
-                    (
-                        F.col("n_docs")
-                        + F.coalesce(F.col("hist_docs"), F.lit(0))
-                    ).alias("df"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            tot = bdf.select(
-                "h", F.lit(0).cast("long").alias("df_hist"),
-                F.col("n_docs").alias("df"),
-            ).localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)
+        )
         rows = _line_rollup(ln.join(tot.select("h", "df"), "h"))
         # digests flipping to boilerplate THIS batch re-score the
         # history documents that contain them; the guard makes the
@@ -923,8 +886,8 @@ def stream_line_dedup(
             & (F.col("df") >= LINE_DF_MIN)
             & (F.col("df_hist") > 0)
         ).select("h")
-        if line_dirs and not crossed.isEmpty():
-            hist_ln = spark.read.schema(_LN_SCHEMA).parquet(*line_dirs)
+        if not crossed.isEmpty():
+            hist_ln = _read_committed(spark, root, "lines", _LN_SCHEMA)
             aff_ids = (
                 hist_ln.join(crossed, "h", "left_semi")
                 .select("doc_id")
@@ -933,9 +896,7 @@ def stream_line_dedup(
             aff_ln = hist_ln.join(aff_ids, "doc_id", "left_semi")
             need_h = aff_ln.select("h").distinct()
             need_tot = (
-                spark.read.schema(_LN_DF_SCHEMA)
-                .parquet(*df_dirs)
-                .join(need_h, "h", "left_semi")
+                hist_df.join(need_h, "h", "left_semi")
                 .unionByName(bdf.join(need_h, "h", "left_semi"))
                 .groupBy("h")
                 .agg(F.sum("n_docs").alias("df"))
@@ -982,18 +943,13 @@ def _source_term_rollup(
         .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
         .localCheckpoint(eager=False)
     )
-    latest = _latest_committed_dir(root, "counts")
-    if latest is not None:
-        cum = (
-            spark.read.schema(_KL_CNT_SCHEMA)
-            .parquet(latest)
-            .unionByName(bc)
-            .groupBy("source", "term")
-            .agg(F.sum("c_st").alias("c_st"))
-        )
-    else:
-        cum = bc
-    return cum.localCheckpoint(eager=False)
+    return (
+        _read_committed(spark, root, "counts", _KL_CNT_SCHEMA, latest=True)
+        .unionByName(bc)
+        .groupBy("source", "term")
+        .agg(F.sum("c_st").alias("c_st"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def stream_domain_kl(
@@ -1193,18 +1149,13 @@ def stream_zipf_fit(
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .localCheckpoint(eager=False)
         )
-        latest = _latest_committed_dir(root, "counts")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_ZIPF_CNT_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("term")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+        cum = (
+            _read_committed(spark, root, "counts", _ZIPF_CNT_SCHEMA, latest=True)
+            .unionByName(bc)
+            .groupBy("term")
+            .agg(F.sum("c").cast("long").alias("c"))
+            .localCheckpoint(eager=False)
+        )
         snap = _zipf_from_counts(cum)
         return {"zipf": _with_batch(snap, batch_id), "counts": cum}
 
@@ -1345,29 +1296,21 @@ def stream_filter_attribution(
             (F.col("doc_id") != F.col("first_id")).alias("later_copy"),
             "h",
         )
-        hash_dirs = _committed_dirs(root, "hashes")
-        if hash_dirs:
-            # distinct BEFORE the flag join: the index holds one row per
-            # historical DOC, so a twice-seen digest would otherwise fan
-            # the probe join out and inflate the counters
-            idx_h = (
-                spark.read.schema(_HASH_SCHEMA)
-                .parquet(*hash_dirs)
-                .distinct()
-                .withColumn("seen", F.lit(True))
-            )
-            ex = ex.join(F.broadcast(idx_h), "h", "left").select(
-                "doc_id",
-                "source",
-                (
-                    F.col("later_copy")
-                    | F.coalesce(F.col("seen"), F.lit(False))
-                ).alias("r_exact"),
-            )
-        else:
-            ex = ex.select(
-                "doc_id", "source", F.col("later_copy").alias("r_exact")
-            )
+        # distinct BEFORE the flag join: the index holds one row per
+        # historical DOC, so a twice-seen digest would otherwise fan
+        # the probe join out and inflate the counters
+        idx_h = (
+            _read_committed(spark, root, "hashes", _HASH_SCHEMA)
+            .distinct()
+            .withColumn("seen", F.lit(True))
+        )
+        ex = ex.join(F.broadcast(idx_h), "h", "left").select(
+            "doc_id",
+            "source",
+            (
+                F.col("later_copy") | F.coalesce(F.col("seen"), F.lit(False))
+            ).alias("r_exact"),
+        )
 
         # near-dup: verified against an earlier doc (index or batch)
         arr, bands, losers = _near_dup_losers(spark, batch_df, root)
@@ -1375,17 +1318,13 @@ def stream_filter_attribution(
         bc = _gate_verdicts(ex, g, q, near).groupBy("source").agg(
             *_gate_counts()
         )
-        latest = _latest_committed_dir(root, "counters")
-        if latest is not None:
-            prev = spark.read.schema(_FA_CNT_SCHEMA).parquet(latest)
-            cum = (
-                prev.unionByName(bc)
-                .groupBy("source")
-                .agg(*[F.sum(c).cast("long").alias(c) for c in GATE_COUNTS])
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+        cum = (
+            _read_committed(spark, root, "counters", _FA_CNT_SCHEMA, latest=True)
+            .unionByName(bc)
+            .groupBy("source")
+            .agg(*[F.sum(c).cast("long").alias(c) for c in GATE_COUNTS])
+            .localCheckpoint(eager=False)
+        )
         return {
             "counters": cum,
             "hashes": hashed.select("h"),
@@ -1456,18 +1395,13 @@ def stream_token_budget(
             .agg(F.sum("n").alias("avail"))
             .localCheckpoint(eager=False)
         )
-        latest = _latest_committed_dir(root, "avail")
-        if latest is not None:
-            cum = (
-                spark.read.schema(_TB_AVAIL_SCHEMA)
-                .parquet(latest)
-                .unionByName(bc)
-                .groupBy("source")
-                .agg(F.sum("avail").alias("avail"))
-            )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+        cum = (
+            _read_committed(spark, root, "avail", _TB_AVAIL_SCHEMA, latest=True)
+            .unionByName(bc)
+            .groupBy("source")
+            .agg(F.sum("avail").alias("avail"))
+            .localCheckpoint(eager=False)
+        )
         return {"alloc": _with_batch(_unimax_fill(cum), batch_id), "avail": cum}
 
     _fold_committed(
@@ -1626,21 +1560,16 @@ def stream_crossmodal_clusters(
                 F.coalesce("embed_dup", F.lit(False)).alias("embed_dup"),
             )
         )
-        flag_dir = _latest_committed_dir(root, "flags")
-        if flag_dir is not None:
-            flags = (
-                spark.read.schema(_CM_FLAG_SCHEMA)
-                .parquet(flag_dir)
-                .unionByName(batch_flags)
-                .groupBy("doc_id")
-                .agg(
-                    F.max("text_dup").alias("text_dup"),
-                    F.max("embed_dup").alias("embed_dup"),
-                )
+        flags = (
+            _read_committed(spark, root, "flags", _CM_FLAG_SCHEMA, latest=True)
+            .unionByName(batch_flags)
+            .groupBy("doc_id")
+            .agg(
+                F.max("text_dup").alias("text_dup"),
+                F.max("embed_dup").alias("embed_dup"),
             )
-        else:
-            flags = batch_flags
-        flags = flags.localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)
+        )
 
         # --- snapshot: the full decision table from the folded state
         snap = _crossmodal_table(labels.join(flags, "doc_id"))
@@ -1722,20 +1651,16 @@ def stream_quality_aware(
         batch_scores = text_stats({"documents": batch_df}).select(
             "doc_id", "quality_score"
         )
-        score_dirs = _committed_dirs(root, "scores")
-        all_scores = (
-            batch_scores.unionByName(
-                spark.read.schema(_QA_SCORE_SCHEMA).parquet(*score_dirs)
-            )
-            if score_dirs
-            else batch_scores
-        )
         # one score row per doc even if an id is re-ingested in a later
         # micro-batch (its committed copy already holds the row): max is
         # deterministic, order-independent, and a no-op for the
         # in-contract case (same text ⇒ identical score)
-        all_scores = all_scores.groupBy("doc_id").agg(
-            F.max("quality_score").alias("quality_score")
+        all_scores = (
+            batch_scores.unionByName(
+                _read_committed(spark, root, "scores", _QA_SCORE_SCHEMA)
+            )
+            .groupBy("doc_id")
+            .agg(F.max("quality_score").alias("quality_score"))
         )
 
         m = labels.join(all_scores, "doc_id").localCheckpoint(eager=False)
@@ -1761,6 +1686,7 @@ def stream_quality_aware(
 # --- streaming train/val leakage audit ----------------------------------------
 
 _LK_CNT_SCHEMA = "n_train long, n_val long"
+_LK_PAIR_SCHEMA = "doc_a long, doc_b long"
 _LK_SNAP_SCHEMA = (
     "n_train long, n_val long, n_pairs long, n_straddle long, "
     "n_train_evicted long, n_val_contaminated long, straddle_frac double, "
@@ -1808,26 +1734,22 @@ def stream_leakage_split(
         bc = _split_counts(
             batch_df.select(_is_val(F.col("doc_id")).alias("is_val"))
         )
-        cnt_dir = _latest_committed_dir(root, "counts")
-        if cnt_dir is not None:
-            prev = spark.read.schema(_LK_CNT_SCHEMA).parquet(cnt_dir)
-            cum = prev.unionByName(bc).agg(
+        cum = (
+            _read_committed(spark, root, "counts", _LK_CNT_SCHEMA, latest=True)
+            .unionByName(bc)
+            .agg(
                 F.sum("n_train").cast("long").alias("n_train"),
                 F.sum("n_val").cast("long").alias("n_val"),
             )
-        else:
-            cum = bc
-        cum = cum.localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)
+        )
 
-        # the batch's pairs land first (a write of this step's own, ahead
-        # of the returned tables), so the audit reads them back with
-        # ALL committed pairs: the split side re-derives from the id,
-        # map-side
-        own = os.path.join(root, f"batch={batch_id}", "pairs")
-        pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(own)
-        pair_dirs = _committed_dirs(root, "pairs") + [own]
-        allp = spark.read.schema("doc_a long, doc_b long").parquet(
-            *pair_dirs
+        # the audit reads the batch's pairs with ALL committed pairs
+        # (the split side re-derives from the id, map-side); the
+        # checkpoint serves both the audit and the batch's own table
+        pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
+        allp = pairs.unionByName(
+            _read_committed(spark, root, "pairs", _LK_PAIR_SCHEMA)
         )
         tagged = allp.select(
             "doc_a",
@@ -1837,6 +1759,7 @@ def stream_leakage_split(
         ).localCheckpoint(eager=False)
         snap = _leakage_audit(cum, tagged)
         return {
+            "pairs": pairs,
             "audit": _with_batch(snap, batch_id),
             "counts": cum,
             "bands": bands.select("doc_id", "band_id", "sig"),
@@ -1923,17 +1846,11 @@ def stream_decontaminate(
             .filter(F.col("gram").isNotNull())
             .distinct()
         )
-        eg_dirs = _committed_dirs(root, "egrams")
-        if eg_dirs:
-            prev_eg = spark.read.schema(_DC_EGRAM_SCHEMA).parquet(*eg_dirs)
-            new_eg = ev_batch.join(prev_eg, "gram", "left_anti")
-        else:
-            prev_eg = None
-            new_eg = ev_batch
-        new_eg = new_eg.localCheckpoint(eager=False)
-        full_eg = (
-            prev_eg.unionByName(new_eg) if prev_eg is not None else new_eg
+        prev_eg = _read_committed(spark, root, "egrams", _DC_EGRAM_SCHEMA)
+        new_eg = ev_batch.join(prev_eg, "gram", "left_anti").localCheckpoint(
+            eager=False
         )
+        full_eg = prev_eg.unionByName(new_eg)
 
         tr = ga.filter(F.col("bucket") >= DECON_EVAL_PCT).select(
             "doc_id", "grams", F.size("grams").cast("int").alias("n")
@@ -1950,9 +1867,8 @@ def stream_decontaminate(
             .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         )
         deltas = fwd
-        tg_dirs = _committed_dirs(root, "tgrams")
-        if tg_dirs and not new_eg.isEmpty():
-            idx = spark.read.schema(_DC_TGRAM_SCHEMA).parquet(*tg_dirs)
+        if not new_eg.isEmpty():
+            idx = _read_committed(spark, root, "tgrams", _DC_TGRAM_SCHEMA)
             retro = (
                 idx.select(
                     "doc_id",
@@ -1966,21 +1882,16 @@ def stream_decontaminate(
             )
             deltas = deltas.unionByName(retro)
 
-        cnt_dir = _latest_committed_dir(root, "counts")
-        if cnt_dir is not None:
-            cum = (
-                spark.read.schema(_DC_CNT_SCHEMA)
-                .parquet(cnt_dir)
-                .unionByName(deltas)
-                .groupBy("doc_id")
-                .agg(
-                    F.max("n_grams").alias("n_grams"),
-                    F.sum("n_shared").cast("long").alias("n_shared"),
-                )
+        cum = (
+            _read_committed(spark, root, "counts", _DC_CNT_SCHEMA, latest=True)
+            .unionByName(deltas)
+            .groupBy("doc_id")
+            .agg(
+                F.max("n_grams").alias("n_grams"),
+                F.sum("n_shared").cast("long").alias("n_shared"),
             )
-        else:
-            cum = deltas
-        cum = cum.localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)
+        )
 
         snap = cum.filter(F.col("n_shared") > 0).select(
             "doc_id",
@@ -2093,35 +2004,24 @@ def stream_span_dedup(
             .agg(F.min("doc_id").alias("first_doc"))
             .localCheckpoint(eager=False)
         )
-        own_dirs = _committed_dirs(root, "owners")
-        inst_dirs = _committed_dirs(root, "spans")
-        if own_dirs:
-            hist_min = (
-                spark.read.schema(_SP_MIN_SCHEMA)
-                .parquet(*own_dirs)
-                .join(bmin.select("h"), "h", "left_semi")
-                .groupBy("h")
-                .agg(F.min("first_doc").alias("prev_doc"))
-            )
-            own = (
-                bmin.join(hist_min, "h", "left")
-                .select(
-                    "h",
-                    F.col("first_doc").alias("bdoc"),
-                    "prev_doc",
-                    F.least(
-                        "first_doc", F.coalesce("prev_doc", "first_doc")
-                    ).alias("first_doc"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            own = bmin.select(
+        hist_own = _read_committed(spark, root, "owners", _SP_MIN_SCHEMA)
+        hist_min = (
+            hist_own.join(bmin.select("h"), "h", "left_semi")
+            .groupBy("h")
+            .agg(F.min("first_doc").alias("prev_doc"))
+        )
+        own = (
+            bmin.join(hist_min, "h", "left")
+            .select(
                 "h",
                 F.col("first_doc").alias("bdoc"),
-                F.lit(None).cast("long").alias("prev_doc"),
-                "first_doc",
-            ).localCheckpoint(eager=False)
+                "prev_doc",
+                F.least(
+                    "first_doc", F.coalesce("prev_doc", "first_doc")
+                ).alias("first_doc"),
+            )
+            .localCheckpoint(eager=False)
+        )
         rows = doc_rows(inst, own.select("h", "first_doc"))
 
         # dethroned owners: smaller batch id undercut a committed owner
@@ -2133,17 +2033,13 @@ def stream_span_dedup(
             .select(F.col("prev_doc").alias("doc_id"))
             .distinct()
         )
-        if inst_dirs and not dethroned.isEmpty():
-            hist_inst = (
-                spark.read.schema(_SP_INST_SCHEMA)
-                .parquet(*inst_dirs)
-                .join(dethroned, "doc_id", "left_semi")
-            )
+        if not dethroned.isEmpty():
+            hist_inst = _read_committed(
+                spark, root, "spans", _SP_INST_SCHEMA
+            ).join(dethroned, "doc_id", "left_semi")
             need_h = hist_inst.select("h").distinct()
             need_min = (
-                spark.read.schema(_SP_MIN_SCHEMA)
-                .parquet(*own_dirs)
-                .join(need_h, "h", "left_semi")
+                hist_own.join(need_h, "h", "left_semi")
                 .unionByName(bmin.join(need_h, "h", "left_semi"))
                 .groupBy("h")
                 .agg(F.min("first_doc").alias("first_doc"))
@@ -2230,13 +2126,8 @@ def stream_hard_negatives(
             .withColumn("nrm", norm_unrolled(F.col("v"), DIM))
             .localCheckpoint(eager=False)
         )
-        vec_dirs = _committed_dirs(root, "vecs")
-        old = (
-            spark.read.schema(_HN_VEC_SCHEMA).parquet(*vec_dirs)
-            if vec_dirs
-            else None
-        )
-        all_vecs = new.unionByName(old) if old is not None else new
+        old = _read_committed(spark, root, "vecs", _HN_VEC_SCHEMA)
+        all_vecs = new.unionByName(old)
         # the anchor batch derives from the CUMULATIVE corpus size,
         # recomputed per commit — the batch operator's contract; a
         # shrinking cap displaces committed anchors exactly like cap
@@ -2247,23 +2138,17 @@ def stream_hard_negatives(
             spark, root, "qids", _HN_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
-        legs = [_hard_neg_scores(new, q)]
-        if old is not None:
-            legs.append(_hard_neg_scores(old, new_q))
-        negs_dir = _latest_committed_dir(root, "negs")
-        if negs_dir is not None:
-            prev = spark.read.schema(_HN_NEG_SCHEMA).parquet(negs_dir)
+        prev = _read_committed(spark, root, "negs", _HN_NEG_SCHEMA, latest=True)
+        merged = (
+            _hard_neg_scores(new, q)
+            .unionByName(_hard_neg_scores(old, new_q))
             # cap displacement: only rows whose query survives merge
-            legs.append(
-                prev.join(
-                    q.select("query_id"), "query_id", "left_semi"
-                ).select(
+            .unionByName(
+                prev.join(q.select("query_id"), "query_id", "left_semi").select(
                     "query_id", "cand_id", "q_label", "neg_label", "cosine"
                 )
             )
-        merged = legs[0]
-        for leg in legs[1:]:
-            merged = merged.unionByName(leg)
+        )
         snap = _top_negatives(merged)
         held[:] = [new, q]
         return {
@@ -2343,17 +2228,14 @@ def stream_hamming_neighbors(
     held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
-        code_dirs = _committed_dirs(root, "codes")
-        old = (
-            spark.read.schema(_HM_CODE_SCHEMA).parquet(*code_dirs)
-            if code_dirs
-            else None
+        old = _read_committed(spark, root, "codes", _HM_CODE_SCHEMA)
+        new = (
+            _simhash64_codes(batch_df)
+            .dropDuplicates(["doc_id"])
+            .join(old, "doc_id", "left_anti")  # re-ingested ids: first wins
+            .localCheckpoint(eager=False)
         )
-        new = _simhash64_codes(batch_df).dropDuplicates(["doc_id"])
-        if old is not None:  # re-ingested ids: first arrival wins
-            new = new.join(old, "doc_id", "left_anti")
-        new = new.localCheckpoint(eager=False)
-        all_codes = new.unionByName(old) if old is not None else new
+        all_codes = new.unionByName(old)
         q = (
             all_codes.filter(F.col("doc_id") % QUERY_MOD == 0)
             .orderBy("doc_id")
@@ -2368,19 +2250,13 @@ def stream_hamming_neighbors(
             spark, root, "qids", _HM_QID_SCHEMA, latest=True
         )
         new_q = q.join(prev_qids, "query_id", "left_anti")
-        legs = [_mih_radius_pairs(new, q)]
-        if old is not None:
-            legs.append(_mih_radius_pairs(old, new_q))
-        pairs_dir = _latest_committed_dir(root, "pairs")
-        if pairs_dir is not None:
-            prev = spark.read.schema(_HM_PAIR_SCHEMA).parquet(pairs_dir)
+        prev = _read_committed(spark, root, "pairs", _HM_PAIR_SCHEMA, latest=True)
+        merged = (
+            _mih_radius_pairs(new, q)
+            .unionByName(_mih_radius_pairs(old, new_q))
             # cap displacement: only rows whose query survives merge
-            legs.append(
-                prev.join(q.select("query_id"), "query_id", "left_semi")
-            )
-        merged = legs[0]
-        for leg in legs[1:]:
-            merged = merged.unionByName(leg)
+            .unionByName(prev.join(q.select("query_id"), "query_id", "left_semi"))
+        )
         held[:] = [new, q]
         return {
             "pairs": merged.distinct(),
@@ -2437,32 +2313,33 @@ def stream_dedup_inflation(
     """
     from ..operators.dedup import _doc_hash_tokens, _inflation_ratios
 
-    held: list[DataFrame] = []  # this batch's checkpoint, released post-commit
+    held: list[DataFrame] = []  # this batch's checkpoints, released post-commit
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
-        new = _doc_hash_tokens(batch_df).dropDuplicates(["doc_id"])
-        id_dirs = _committed_dirs(root, "ids")
-        if id_dirs:
-            old_ids = spark.read.schema(_DI_ID_SCHEMA).parquet(*id_dirs)
-            new = new.join(old_ids, "doc_id", "left_anti")
-        new = new.localCheckpoint(eager=False)
-        contrib = new.groupBy("h").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("sum_tok"),
+        new = (
+            _doc_hash_tokens(batch_df)
+            .dropDuplicates(["doc_id"])
+            .join(
+                _read_committed(spark, root, "ids", _DI_ID_SCHEMA),
+                "doc_id",
+                "left_anti",
+            )
+            .localCheckpoint(eager=False)
         )
-        # the batch's contributions land first (writes of this step's
-        # own), so the fold reads them back with every committed batch
-        out = os.path.join(root, f"batch={batch_id}")
-        contrib.write.mode("overwrite").parquet(os.path.join(out, "hstats"))
-        new.select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out, "ids")
+        # the checkpoint serves both the batch's own ``hstats`` table and
+        # the fold over it and every committed batch's
+        contrib = (
+            new.groupBy("h")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("n_tok").cast("long").alias("sum_tok"),
+            )
+            .localCheckpoint(eager=False)
         )
-        hs_dirs = _committed_dirs(root, "hstats") + [
-            os.path.join(out, "hstats")
-        ]
         folded = (
-            spark.read.schema(_DI_HSTAT_SCHEMA)
-            .parquet(*hs_dirs)
+            contrib.unionByName(
+                _read_committed(spark, root, "hstats", _DI_HSTAT_SCHEMA)
+            )
             .groupBy("h")
             .agg(
                 F.sum("n_docs").alias("n"),
@@ -2481,8 +2358,8 @@ def stream_dedup_inflation(
                 .alias("tokens_dup"),
             )
         )
-        held[:] = [new]
-        return {"snap": snap}
+        held[:] = [new, contrib]
+        return {"hstats": contrib, "ids": new.select("doc_id"), "snap": snap}
 
     _fold_committed(
         doc_stream, root, checkpoint_dir, "inflation fold", step,

@@ -33,6 +33,13 @@ the ``on_batch`` hook, and the ``foreachBatch`` → ``availableNow``
 drain.  A face supplies only ``step(batch_df, batch_id) -> {sub: frame}``
 (``maintain_snapshot``'s step returns ``{"": snapshot}``, so the
 snapshot lands in ``version=<id>/`` itself).
+
+A face reads committed state only through :func:`_read_committed`.
+Committed state is never absent: before the first commit the read is
+an empty relation that Catalyst folds, so a union with it is the other
+side, a left or anti join against it is the left side, and an inner or
+semi join against it is empty.  Batch 0 therefore runs the same step
+code as every later batch, with no first-batch branch.
 """
 
 from __future__ import annotations
@@ -42,6 +49,8 @@ import shutil
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.relational import apply_changelog
 
@@ -82,20 +91,30 @@ def read_snapshot(spark: SparkSession, root: str) -> DataFrame | None:
 
 def prune_versions(root: str, keep: int = 2) -> list[int]:
     """Drop all but the newest ``keep`` version dirs (never the
-    committed one); returns the pruned ids."""
+    committed one, so ``keep=0`` leaves only it); returns the pruned
+    ids."""
     current = snapshot_version(root)
     versions = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(root)
         if d.startswith("version=")
     )
-    victims = [v for v in versions[:-keep] if v != current]
+    victims = [v for v in versions[: max(len(versions) - keep, 0)] if v != current]
     for v in victims:
         shutil.rmtree(os.path.join(root, f"version={v}"))
     return victims
 
 
-def _committed_dirs(root: str, sub: str) -> list[str]:
+def _write_atomic(path: str, text: str) -> None:
+    """``text`` into ``path`` tmp-then-rename: a reader sees the old
+    content or the new, never a torn file."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.rename(tmp, path)
+
+
+def _committed_dirs(root: str, sub: str, prefix: str = "batch") -> list[str]:
     """Paths of every committed batch's ``sub`` table (≤ _CURRENT):
     orphan dirs past the pointer (crash between write and commit) are
     excluded and will be overwritten by the replayed batch."""
@@ -104,48 +123,50 @@ def _committed_dirs(root: str, sub: str) -> list[str]:
         return []
     out = []
     for d in os.listdir(root):
-        if d.startswith("batch="):
+        if d.startswith(f"{prefix}="):
             bid = int(d.split("=", 1)[1])
             if bid <= cur:
                 out.append(os.path.join(root, d, sub))
     return sorted(out)
 
 
-def _latest_committed_dir(root: str, sub: str) -> str | None:
-    """The highest-numbered committed batch's ``sub`` table (numeric
-    order — lexicographic sorting would put batch=10 before batch=2),
-    for state kept as a cumulative rollup rather than per-batch
-    contributions.  The batch id is parsed from each entry's own
-    directory NAME, never by splitting the full path on "batch=" —
-    a root path that itself contains a "batch=" substring must not
-    silently select a stale rollup."""
+def _latest_committed_dir(
+    root: str, sub: str, prefix: str = "batch"
+) -> str | None:
+    """The committed batch's ``sub`` table, for state kept as a
+    cumulative rollup rather than per-batch contributions.  The batch
+    that ``_CURRENT`` names wrote every table of its step before the
+    pointer moved, and no prune ever removes it, so its dir IS the
+    latest committed copy: an orphan dir past the pointer is never
+    chosen, and the id never comes from parsing a path (a root that
+    itself contains "batch=" cannot select a stale rollup)."""
     cur = snapshot_version(root)
     if cur is None:
         return None
-    best = None
-    for d in os.listdir(root):
-        if d.startswith("batch="):
-            bid = int(d.split("=", 1)[1])
-            if bid <= cur and (best is None or bid > best):
-                best = bid
-    if best is None:
-        return None
-    return os.path.join(root, f"batch={best}", sub)
+    return os.path.join(root, f"{prefix}={cur}", sub)
 
 
 def _read_committed(
-    spark: SparkSession, root: str, sub: str, schema: str, latest: bool = False
+    spark: SparkSession,
+    root: str,
+    sub: str,
+    schema: str | StructType,
+    latest: bool = False,
+    prefix: str = "batch",
 ) -> DataFrame:
     """Every committed batch's ``sub`` table (only the latest one with
-    ``latest``, for cumulative rollups), else an empty frame of
-    ``schema``."""
+    ``latest``, for cumulative rollups).  Before the first commit it is
+    an empty relation of ``schema`` that Catalyst folds away — the
+    ``where(False)`` turns the unfoldable ``LogicalRDD`` of
+    ``createDataFrame([])`` into an empty ``LocalRelation`` — so a
+    face's unions and joins with it need no first-batch branch."""
     if latest:
-        d = _latest_committed_dir(root, sub)
+        d = _latest_committed_dir(root, sub, prefix)
         dirs = [] if d is None else [d]
     else:
-        dirs = _committed_dirs(root, sub)
+        dirs = _committed_dirs(root, sub, prefix)
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema).where(F.lit(False))
     return spark.read.schema(schema).parquet(*dirs)
 
 
@@ -202,18 +223,12 @@ def _begin_batch(
     if (stored is None or current is None) and qid is not None:
         # adopt this checkpoint's identity: first fold ever, or a root
         # with no committed batch yet (nothing to protect)
-        tmp = os.path.join(root, f".{_RUN}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(qid)
-        os.rename(tmp, run_path)
+        _write_atomic(run_path, qid)
     return not (current is not None and current >= batch_id)
 
 
 def _commit_batch(root: str, batch_id: int) -> None:
-    tmp = os.path.join(root, f".{_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(batch_id))
-    os.rename(tmp, os.path.join(root, _POINTER))  # atomic commit
+    _write_atomic(os.path.join(root, _POINTER), str(batch_id))
 
 
 def _fold_committed(
@@ -273,11 +288,10 @@ def maintain_snapshot(
     commit/replay contract."""
 
     def step(batch_df: DataFrame, batch_id: int) -> dict[str, DataFrame]:
-        prev = read_snapshot(spark, root)
-        if prev is None:
-            prev = spark.createDataFrame(
-                [], batch_df.select(key, "value").schema
-            )
+        prev = _read_committed(
+            spark, root, "", batch_df.select(key, "value").schema,
+            latest=True, prefix="version",
+        )
         return {"": apply_changelog(prev, batch_df, key=key).select(key, "value")}
 
     _fold_committed(

@@ -612,7 +612,11 @@ def test_persisted_faces_share_one_commit_loop():
     the replay guard (``_begin_batch``) or the ``_CURRENT`` commit
     (``_commit_batch``), and ``embindex.py`` + ``snapshot.py`` hold one
     ``.foreachBatch(`` call between them, inside that helper, so a new
-    face cannot grow a loop of its own."""
+    face cannot grow a loop of its own.  ``embindex.py`` neither names
+    ``_committed_dirs`` / ``_latest_committed_dir`` nor touches a
+    ``.write``: a face reads committed state only through
+    ``_read_committed`` and hands every table to the loop, which is the
+    one code that lists committed dirs and the one writer."""
     import ast
     import pathlib
 
@@ -645,6 +649,22 @@ def test_persisted_faces_share_one_commit_loop():
                 loops.append((where, owner.get(node)))
     assert not guard_calls, f"commit discipline outside snapshot.py: {guard_calls}"
     assert [fn for _, fn in loops] == ["_fold_committed"], loops
+
+    listing, writes = [], []
+    for node in ast.walk(ast.parse((stream_dir / "embindex.py").read_text())):
+        names = []
+        if isinstance(node, ast.Name):
+            names = [node.id]
+        elif isinstance(node, ast.Attribute):
+            names = [node.attr]
+            if node.attr == "write":
+                writes.append(node.lineno)
+        elif isinstance(node, ast.ImportFrom):
+            names = [a.name for a in node.names]
+        if {"_committed_dirs", "_latest_committed_dir"} & set(names):
+            listing.append(node.lineno)
+    assert not listing, f"embindex.py lists committed dirs itself: lines {listing}"
+    assert not writes, f"embindex.py writes outside the commit loop: lines {writes}"
 
 
 # distinct code windows allowed to occur in two or more places in the

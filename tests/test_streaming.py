@@ -2809,7 +2809,7 @@ def test_latest_committed_dir_numeric_order(tmp_path):
     uncommitted dirs past the pointer are ignored."""
     import os
 
-    from kafka_streams_repartition_spark.streaming.embindex import (
+    from kafka_streams_repartition_spark.streaming.snapshot import (
         _latest_committed_dir,
     )
 
@@ -2841,7 +2841,7 @@ def test_prune_superseded_keeps_pointer_batch(tmp_path):
     and the call is idempotent."""
     import os
 
-    from kafka_streams_repartition_spark.streaming.embindex import (
+    from kafka_streams_repartition_spark.streaming.snapshot import (
         _latest_committed_dir,
         _prune_superseded,
     )
@@ -2863,6 +2863,65 @@ def test_prune_superseded_keeps_pointer_batch(tmp_path):
     assert _latest_committed_dir(root, "counts") == os.path.join(
         root, "batch=2", "counts"
     )
+
+
+def test_read_committed_before_first_commit_folds_away(spark, tmp_path):
+    """Before any commit ``_read_committed`` is an empty relation that
+    Catalyst folds: a left join or left-anti join against it, and a
+    union with it, optimize to the other side alone (no ``LogicalRDD``
+    left in the plan) with the rows unchanged — which is what lets a
+    face's step run one code path on batch 0."""
+    from kafka_streams_repartition_spark.streaming.snapshot import (
+        _read_committed,
+    )
+
+    root = str(tmp_path / "idx")
+    for latest in (False, True):
+        hist = _read_committed(
+            spark, root, "counts", "k long, c long", latest=latest
+        )
+        small = spark.range(4).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+        cases = {
+            "left": (
+                small.join(hist, "k", "left"),
+                {(k, 10 * k, None) for k in range(4)},
+            ),
+            "left_anti": (
+                small.join(hist, "k", "left_anti"),
+                {(k, 10 * k) for k in range(4)},
+            ),
+            "union": (
+                small.select("k", F.col("v").alias("c")).unionByName(hist),
+                {(k, 10 * k) for k in range(4)},
+            ),
+        }
+        for how, (df, want) in cases.items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan, (how, plan)
+            assert {tuple(r) for r in df.collect()} == want, how
+
+
+def test_prune_versions_keep_zero_leaves_only_committed(tmp_path):
+    """``prune_versions(root, keep=0)`` drops every version dir but the
+    committed one (``versions[:-0]`` is empty, so a bare negative slice
+    would prune nothing); a ``keep`` past the version count prunes
+    nothing."""
+    import os
+
+    from kafka_streams_repartition_spark.streaming.snapshot import (
+        prune_versions,
+    )
+
+    root = str(tmp_path / "snap")
+    for v in (0, 1, 2, 3):  # 3 is an orphan past the pointer
+        os.makedirs(os.path.join(root, f"version={v}"))
+    with open(os.path.join(root, "_CURRENT"), "w") as fh:
+        fh.write("2")
+    assert prune_versions(root, keep=9) == []
+    assert prune_versions(root, keep=0) == [0, 1, 3]
+    assert sorted(os.listdir(root)) == ["_CURRENT", "version=2"]
 
 
 def test_stream_crossmodal_reingested_id_snapshot_equals_batch(
