@@ -44,17 +44,14 @@ def _sql_of(c: Column) -> str:
     unrolling silently moved whole queries' cost into plan
     construction — ann_topk_lsh spent 5–11 s per build), the parsed
     form 3.7 ms — 200×.  The string is wrapped in parens at use sites;
-    a rendering the parser rejects falls back to the op-chain."""
+    a rendering the parser rejects raises when the plan is built."""
     return c._jc.toString()
 
 
-def _unrolled_expr(build_sql, build_chain) -> Column:
-    try:
-        return F.expr(build_sql())
-    except Exception:
-        # unparseable rendering (exotic caller expression): the slow
-        # but always-correct op-chain
-        return build_chain()
+def _unrolled_sum(terms) -> Column:
+    """``0.0D + t1 + t2 + …`` over the SQL ``terms``, parsed once —
+    left-associated in term order."""
+    return F.expr("0.0D" + "".join(f" + {t}" for t in terms))
 
 
 def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
@@ -67,21 +64,10 @@ def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     order (SQL ``+`` is left-associative) — bit-identical to the
     sequential ``aggregate`` fold and to the oracles' ordered SUM.
     """
-
-    def sql() -> str:
-        sa, sb = f"({_sql_of(a)})", f"({_sql_of(b)})"
-        return "0.0D" + "".join(
-            f" + (element_at({sa}, {i}) * element_at({sb}, {i}))"
-            for i in range(1, dim + 1)
-        )
-
-    def chain() -> Column:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(a, i) * F.element_at(b, i)
-        return acc
-
-    return _unrolled_expr(sql, chain)
+    sa, sb = f"({_sql_of(a)})", f"({_sql_of(b)})"
+    return _unrolled_sum(
+        f"(element_at({sa}, {i}) * element_at({sb}, {i}))" for i in range(1, dim + 1)
+    )
 
 
 def dot_literal(a: Column, vals: list[float]) -> Column:
@@ -97,21 +83,11 @@ def dot_literal(a: Column, vals: list[float]) -> Column:
     left-associated addition from 0.0 and identical IEEE doubles
     (``repr`` round-trips exactly), so results are bit-identical to
     ``dot_unrolled`` against the same literal vector."""
-
-    def sql() -> str:
-        sa = f"({_sql_of(a)})"
-        return "0.0D" + "".join(
-            f" + (element_at({sa}, {i + 1}) * CAST('{float(v)!r}' AS DOUBLE))"
-            for i, v in enumerate(vals)
-        )
-
-    def chain() -> Column:
-        acc = F.lit(0.0)
-        for i, v in enumerate(vals):
-            acc = acc + F.element_at(a, i + 1) * F.lit(float(v))
-        return acc
-
-    return _unrolled_expr(sql, chain)
+    sa = f"({_sql_of(a)})"
+    return _unrolled_sum(
+        f"(element_at({sa}, {i + 1}) * CAST('{float(v)!r}' AS DOUBLE))"
+        for i, v in enumerate(vals)
+    )
 
 
 def norm_unrolled(a: Column, dim: int) -> Column:
@@ -120,20 +96,9 @@ def norm_unrolled(a: Column, dim: int) -> Column:
 
 def sqdist_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Squared euclidean distance, unrolled (see ``dot_unrolled``)."""
-
-    def sql() -> str:
-        sa, sb = f"({_sql_of(a)})", f"({_sql_of(b)})"
-        return "0.0D" + "".join(
-            f" + ((element_at({sa}, {i}) - element_at({sb}, {i}))"
-            f" * (element_at({sa}, {i}) - element_at({sb}, {i})))"
-            for i in range(1, dim + 1)
-        )
-
-    def chain() -> Column:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            d = F.element_at(a, i) - F.element_at(b, i)
-            acc = acc + d * d
-        return acc
-
-    return _unrolled_expr(sql, chain)
+    sa, sb = f"({_sql_of(a)})", f"({_sql_of(b)})"
+    return _unrolled_sum(
+        f"((element_at({sa}, {i}) - element_at({sb}, {i}))"
+        f" * (element_at({sa}, {i}) - element_at({sb}, {i})))"
+        for i in range(1, dim + 1)
+    )

@@ -254,14 +254,11 @@ def _query_gram_overlaps(
     lowest ``% QUERY_MOD`` ids — with every other doc it shares a gram
     with, and each doc's gram count (doc_id, n).  The pairing of
     :func:`dedup_ngram_jaccard` and :func:`dedup_containment`."""
+    from .similarity import _queries
+
     arr = _doc_gram_arrays_cached(t["documents"])
     grams = arr.select("doc_id", F.explode("grams").alias("gram"))
-    q_ids = (
-        arr.filter(F.col("doc_id") % QUERY_MOD == 0)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(JACCARD_QUERY_CAP)
-    )
+    q_ids = _queries(arr, JACCARD_QUERY_CAP, "doc_id", key="doc_id", mod=QUERY_MOD)
     # the bounded query side broadcasts: the shared-shingle pairing
     # becomes a map-side join over the corpus scan, no gram shuffle
     q_grams = F.broadcast(grams.join(F.broadcast(q_ids), "doc_id"))
@@ -1059,12 +1056,21 @@ def minhash_band_tuning(t: dict[str, DataFrame]) -> DataFrame:
         "L.s_curve_threshold",
         "n_pairs",
         "L.expected_caught",
+        _expected_recall(),
+    )
+
+
+def _expected_recall() -> F.Column:
+    """``expected_caught / n_pairs`` (0 without pairs) of a banding
+    design-table row — :func:`minhash_band_tuning` and
+    :func:`embdup_plane_tuning`."""
+    return (
         F.when(
             F.col("n_pairs") > 0,
             F.round(F.col("L.expected_caught") / F.col("n_pairs"), 4),
         )
         .otherwise(F.lit(0.0))
-        .alias("expected_recall"),
+        .alias("expected_recall")
     )
 
 
@@ -1699,12 +1705,9 @@ def hamming_neighbors(t: dict[str, DataFrame]) -> DataFrame:
 def _hamming_query_codes(codes: DataFrame) -> DataFrame:
     """(query_id, q0..q3): the capped query set — the
     ``HAMMING_QUERY_CAP`` lowest ``% QUERY_MOD`` ids — with its codes."""
-    qids = (
-        codes.filter(F.col("doc_id") % QUERY_MOD == 0)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(HAMMING_QUERY_CAP)
-    )
+    from .similarity import _queries
+
+    qids = _queries(codes, HAMMING_QUERY_CAP, "doc_id", key="doc_id", mod=QUERY_MOD)
     return codes.join(F.broadcast(qids), "doc_id").select(
         F.col("doc_id").alias("query_id"),
         *[F.col(f"c{c}").alias(f"q{c}") for c in range(HAMMING_CHUNKS)],
@@ -1904,20 +1907,13 @@ def dedup_embedding(t: dict[str, DataFrame]) -> DataFrame:
     (:func:`dedup_embedding_recall`, :func:`semdedup_recall`) inherits
     the same bound on both engines.
     """
+    from .similarity import _queries
+
     emb = fan_out(t["embeddings"]).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
     emb = emb.withColumn("nrm", norm_unrolled(F.col("v"), EMBED_DIM))
-    q = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(EMBDUP_QUERY_CAP)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-    )
+    q = _queries(emb, EMBDUP_QUERY_CAP, mod=QUERY_MOD)
     cos = dot_unrolled(F.col("qv"), F.col("v"), EMBED_DIM) / (
         F.col("qn") * F.col("nrm")
     )
@@ -2426,12 +2422,7 @@ def embdup_plane_tuning(t: dict[str, DataFrame]) -> DataFrame:
         "L.s_curve_cosine",
         "n_pairs",
         "L.expected_caught",
-        F.when(
-            F.col("n_pairs") > 0,
-            F.round(F.col("L.expected_caught") / F.col("n_pairs"), 4),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("expected_recall"),
+        _expected_recall(),
     )
 
 
@@ -2481,14 +2472,19 @@ def dedup_embedding_recall(t: dict[str, DataFrame]) -> DataFrame:
     makes the measured trade-off above a monitored contract rather
     than a hope (mirrors ``dedup_recall_eval`` / ``ann_recall_eval``).
     """
-    truth = _embdup_truth_pairs(t)
-    # The measured side is THE ACTUAL index output restricted to pairs
-    # touching the query subset — same computation the production path
-    # runs (including its BLAS rounding), so the gate measures the real
-    # artifact, not a lookalike.
+    return _banding_recall(_embdup_truth_pairs(t), _emblsh_pairs(t))
+
+
+def _banding_recall(truth: DataFrame, index_pairs: DataFrame) -> DataFrame:
+    """``(n_truth_pairs, n_lsh_found, recall)``: how many canonical
+    ``(lo, hi)`` truth pairs the banded index's ``(doc_a, doc_b)``
+    output finds.  The measured side is THE ACTUAL index output
+    restricted to pairs touching the query subset — same computation
+    the production path runs (including its BLAS rounding), so the gate
+    measures the real artifact, not a lookalike.  The reduction of
+    :func:`dedup_recall_eval` and :func:`dedup_embedding_recall`."""
     lsh_in_scope = (
-        _emblsh_pairs(t)
-        .select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
+        index_pairs.select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
         .filter(
             ((F.col("lo") % QUERY_MOD) == 0) | ((F.col("hi") % QUERY_MOD) == 0)
         )
@@ -2767,29 +2763,7 @@ def dedup_recall_eval(t: dict[str, DataFrame]) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)  # feeds the count AND the semi-join
     )
-    lsh_in_scope = (
-        _minhash_pairs(t)
-        .select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
-        .filter(
-            ((F.col("lo") % QUERY_MOD) == 0) | ((F.col("hi") % QUERY_MOD) == 0)
-        )
-    )
-    n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth_pairs"))
-    n_hit = (
-        truth.join(lsh_in_scope, ["lo", "hi"], "left_semi")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_lsh_found"))
-    )
-    return (
-        n_truth.crossJoin(F.broadcast(n_hit))
-        .select(
-            "n_truth_pairs",
-            "n_lsh_found",
-            F.when(
-                F.col("n_truth_pairs") > 0,
-                F.round(F.col("n_lsh_found") / F.col("n_truth_pairs"), 4),
-            ).alias("recall"),
-        )
-    )
+    return _banding_recall(truth, _minhash_pairs(t))
 
 
 DEDUP_RECALL_EVAL_ORACLE = f"""
@@ -3210,6 +3184,23 @@ FROM documents d LEFT JOIN counts c ON d.doc_id = c.doc_id
 """
 
 
+def _co_cell(truth: DataFrame, cells: DataFrame) -> DataFrame:
+    """The ``(lo, hi)`` truth pairs whose two members share a quantizer
+    cell of ``cells`` (vec_id, cell) — the pairs semantic-dedup
+    blocking can find."""
+    return (
+        truth.join(
+            cells.select(F.col("vec_id").alias("lo"), F.col("cell").alias("ca")),
+            "lo",
+        )
+        .join(
+            cells.select(F.col("vec_id").alias("hi"), F.col("cell").alias("cb")),
+            "hi",
+        )
+        .filter(F.col("ca") == F.col("cb"))
+    )
+
+
 def semdedup_recall(t: dict[str, DataFrame]) -> DataFrame:
     """Cell-blocking recall gate for :func:`semdedup` — the honest
     number for its known structural miss: a ≥-threshold pair whose
@@ -3229,18 +3220,7 @@ def semdedup_recall(t: dict[str, DataFrame]) -> DataFrame:
     from .similarity import kmeans_model
 
     truth = _embdup_truth_pairs(t)
-    cells = kmeans_model(t)[0].localCheckpoint(eager=False)
-    co = (
-        truth.join(
-            cells.select(F.col("vec_id").alias("lo"), F.col("cell").alias("ca")),
-            "lo",
-        )
-        .join(
-            cells.select(F.col("vec_id").alias("hi"), F.col("cell").alias("cb")),
-            "hi",
-        )
-        .filter(F.col("ca") == F.col("cb"))
-    )
+    co = _co_cell(truth, kmeans_model(t)[0].localCheckpoint(eager=False))
     n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth_pairs"))
     n_co = co.agg(F.count(F.lit(1)).cast("long").alias("n_co_cell"))
     return n_truth.crossJoin(F.broadcast(n_co)).select(
@@ -3437,19 +3417,7 @@ def dedup_stacked_recall(t: dict[str, DataFrame]) -> DataFrame:
         "left_semi",
     ).localCheckpoint(eager=False)
     cells = kmeans_model(t)[0].localCheckpoint(eager=False)
-    cell_hit = (
-        truth.join(
-            cells.select(F.col("vec_id").alias("lo"), F.col("cell").alias("ca")),
-            "lo",
-        )
-        .join(
-            cells.select(F.col("vec_id").alias("hi"), F.col("cell").alias("cb")),
-            "hi",
-        )
-        .filter(F.col("ca") == F.col("cb"))
-        .select("lo", "hi")
-        .localCheckpoint(eager=False)
-    )
+    cell_hit = _co_cell(truth, cells).select("lo", "hi").localCheckpoint(eager=False)
     stacked = lsh_hit.unionByName(cell_hit).distinct()
 
     def n(df: DataFrame, name: str) -> DataFrame:

@@ -26,22 +26,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _src(lineitem: DataFrame, skip_zero_qty: bool) -> DataFrame:
-    src = lineitem.select("l_partkey", "l_suppkey", "l_orderkey", "l_quantity")
-    if skip_zero_qty:
-        src = src.filter(F.col("l_quantity") > 0)
-    return src
+def _src(lineitem: DataFrame) -> DataFrame:
+    """The input records, 0-quantity ones skipped (the reference's guard)."""
+    return lineitem.select(
+        "l_partkey", "l_suppkey", "l_orderkey", "l_quantity"
+    ).filter(F.col("l_quantity") > 0)
 
 
-def _per_store(lineitem: DataFrame, skip_zero_qty: bool) -> DataFrame:
-    """Partial aggregate per (sku, store): map-side combinable."""
-    return _src(lineitem, skip_zero_qty).groupBy("l_partkey", "l_suppkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("l_quantity").alias("qty"),
-    )
-
-
-def _order_ids(lineitem: DataFrame, skip_zero_qty: bool) -> DataFrame:
+def _order_ids(lineitem: DataFrame) -> DataFrame:
     """The reference's unbounded orderIds list as its OWN aggregation
     path: distinct (sku, order) pairs — map-side pre-deduped — then one
     list-collect per sku, joined back on sku.
@@ -54,7 +46,7 @@ def _order_ids(lineitem: DataFrame, skip_zero_qty: bool) -> DataFrame:
     one set-dragging shuffle.
     """
     return (
-        _src(lineitem, skip_zero_qty)
+        _src(lineitem)
         .select("l_partkey", "l_orderkey")
         .distinct()
         .groupBy("l_partkey")
@@ -62,55 +54,48 @@ def _order_ids(lineitem: DataFrame, skip_zero_qty: bool) -> DataFrame:
     )
 
 
-def product_stats_v1_typed(lineitem: DataFrame) -> DataFrame:
-    """Reference-shaped V1 stats: array<struct> per-store quantities."""
+def _store_entries(store_id: Column) -> Column:
+    """Sorted ``array<struct<store_id, quantity>>`` of a sku's per-store
+    rollup rows."""
+    return F.array_sort(
+        F.collect_list(
+            F.struct(store_id.alias("store_id"), F.col("qty").alias("quantity"))
+        )
+    )
+
+
+def _typed(lineitem: DataFrame, quantity_by_store: Column) -> DataFrame:
+    """Per-sku stats with ``quantity_by_store`` as given: a partial
+    aggregate per (sku, store) — map-side combinable — then the per-sku
+    final aggregate, joined to :func:`_order_ids`."""
     stores = (
-        _per_store(lineitem, skip_zero_qty=True)
+        _src(lineitem)
+        .groupBy("l_partkey", "l_suppkey")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("qty"))
         .groupBy("l_partkey")
         .agg(
             F.sum("n").alias("orders"),
             F.sum("qty").alias("quantity"),
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("l_suppkey").alias("store_id"),
-                        F.col("qty").alias("quantity"),
-                    )
-                )
-            ).alias("quantity_by_store"),
+            quantity_by_store.alias("quantity_by_store"),
         )
     )
     return (
-        stores.join(_order_ids(lineitem, skip_zero_qty=True), "l_partkey")
+        stores.join(_order_ids(lineitem), "l_partkey")
         .withColumnRenamed("l_partkey", "sku")
         .select("sku", "orders", "quantity", "quantity_by_store", "order_ids")
     )
+
+
+def product_stats_v1_typed(lineitem: DataFrame) -> DataFrame:
+    """Reference-shaped V1 stats: array<struct> per-store quantities."""
+    return _typed(lineitem, _store_entries(F.col("l_suppkey")))
 
 
 def product_stats_v2_typed(lineitem: DataFrame) -> DataFrame:
     """Reference-shaped V2 stats: map<string,long>-style per-store."""
-    stores = (
-        _per_store(lineitem, skip_zero_qty=True)
-        .groupBy("l_partkey")
-        .agg(
-            F.sum("n").alias("orders"),
-            F.sum("qty").alias("quantity"),
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("l_suppkey").cast("string").alias("store_id"),
-                            F.col("qty").alias("quantity"),
-                        )
-                    )
-                )
-            ).alias("quantity_by_store"),
-        )
-    )
-    return (
-        stores.join(_order_ids(lineitem, skip_zero_qty=True), "l_partkey")
-        .withColumnRenamed("l_partkey", "sku")
-        .select("sku", "orders", "quantity", "quantity_by_store", "order_ids")
+    return _typed(
+        lineitem,
+        F.map_from_entries(_store_entries(F.col("l_suppkey").cast("string"))),
     )
 
 

@@ -16,6 +16,16 @@ Two paths, same contract (top-k neighbors for a bounded query set):
 
 Ranking is on ``(round(cosine, 6) DESC, cand_id)`` so ties and
 last-ulp float noise can't reorder results between engines.
+
+Every query-vs-corpus operator (here, in ``dedup`` and in the streaming
+faces) shares three pieces, so only its candidate join differs:
+
+- :func:`_queries` — the bounded query set, the ``qcap`` lowest ids of
+  the ``% QUERY_MOD`` subset (the oracle side is ``_QCAP_SQL``);
+- :func:`_score` / :func:`_cosine` — self-pairs dropped, then
+  ``round(qv·v / (qn·nrm), 6)``;
+- :func:`_top_k` — the per-query ``row_number`` rank-and-cut
+  (:func:`_cosine_topk` and :func:`_rpq_rank` add the output contract).
 """
 
 from __future__ import annotations
@@ -134,39 +144,80 @@ def _corpus(t: dict[str, DataFrame]) -> DataFrame:
     return emb.withColumn("nrm", norm_unrolled(F.col("v"), DIM))
 
 
-def _queries(emb: DataFrame, qcap: int) -> DataFrame:
-    """The bounded query set every query-vs-corpus op in this module
-    broadcasts: the ``qcap`` lowest vec_ids of the ``% QUERY_MOD``
-    subset, ``qcap`` derived from corpus size by the caller
-    (:func:`_ann_qcap`).  The ``%``-filter alone grows as N/100 with
-    the corpus (the broadcast would stop being broadcastable at 100×);
-    the cap keeps the frame ≤ cap × DIM doubles at any corpus size.
-    Every oracle mirrors the identical lowest-vec_id cut
-    (``_QCAP_SQL``), so the capped list is the operator family's
-    contract, not an approximation."""
+def _qside(*extra: F.Column) -> tuple[F.Column, ...]:
+    """The cosine scorer's query side of a ``(vec_id, v, nrm)`` frame —
+    ``(query_id, qv, qn)`` — followed by ``extra``."""
     return (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(qcap)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        *extra,
     )
 
 
-def _qcap_ids(emb: DataFrame, qcap: int) -> DataFrame:
-    """The capped query-id frame (one ``vec_id`` column) for ops whose
-    query side is derived from an exploded/sub-vector frame rather than
-    the embedding rows themselves (PQ/IVF-PQ ADC tables): semi-joining
-    against this ≤ cap-row broadcast bounds the query side the same way
-    :func:`_queries` bounds the vector form."""
-    return (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select("vec_id")
-        .orderBy("vec_id")
-        .limit(qcap)
+def _queries(
+    frame: DataFrame,
+    qcap: int,
+    *cols: F.Column | str,
+    key: str = "vec_id",
+    mod: int | None = None,
+) -> DataFrame:
+    """The bounded query set of every query-vs-corpus operator: the
+    ``qcap`` lowest ``key`` values of the ``% mod`` subset of
+    ``frame`` (``mod`` defaults to this module's ``QUERY_MOD``),
+    projected onto ``cols`` (by default :func:`_qside`).
+    ``qcap`` is derived from corpus size by the caller
+    (:func:`_ann_qcap`, :func:`derived_mrl_query_cap`) or fixed by a
+    dedup operator.  The ``%``-filter alone grows as N/``mod`` with the
+    corpus (the broadcast would stop being broadcastable at 100×); the
+    cap keeps the frame ≤ cap rows at any corpus size.  Every oracle
+    mirrors the identical lowest-id cut (``_QCAP_SQL`` here, the
+    ``ORDER BY … LIMIT`` subqueries in ``dedup``), so the capped list
+    is the operator family's contract, not an approximation."""
+    cut = frame.filter(F.col(key) % (mod or QUERY_MOD) == 0).orderBy(key).limit(qcap)
+    return cut.select(*(cols or _qside()))
+
+
+def _cosine(d: int | None = None) -> F.Column:
+    """``round(qv·v / (qn·nrm), 6)``: the rounded cosine of a query row
+    ``(qv, qn)`` against a corpus row ``(v, nrm)`` over the first ``d``
+    dimensions (default ``DIM``) — rounding collapses the last-ulp noise
+    of the two engines' summation orders, so ranks and bins agree
+    bit-exactly."""
+    d = d or DIM
+    return F.round(
+        dot_unrolled(F.col("qv"), F.col("v"), d) / (F.col("qn") * F.col("nrm")), 6
+    )
+
+
+def _score(
+    pairs: DataFrame, d: int | None = None, name: str = "cosine"
+) -> DataFrame:
+    """``(query_id, cand_id, <name>)`` of candidate pairs — a corpus
+    frame ``(vec_id, v, nrm)`` joined to a :func:`_qside` query frame —
+    with each query's self-pair dropped.  The one scorer of the
+    operators whose only difference is the candidate join (brute force,
+    LSH bucket, IVF cell, truncated prefix)."""
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", F.col("vec_id").alias("cand_id"), _cosine(d).alias(name)
+    )
+
+
+def _top_k(
+    frame: DataFrame, k: int, *order: F.Column, rank: str = "rank"
+) -> DataFrame:
+    """The rows of ``frame`` ranked ``1..k`` per ``query_id`` by
+    ``order`` (a ``row_number`` in column ``rank``) — the per-query
+    rank-and-cut of every query-vs-corpus operator."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return frame.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k output contract ``(query_id, rank, cand_id, cosine)``
+    of a :func:`_score` frame, ranked ``(cosine DESC, cand_id)``."""
+    return _top_k(scored, k, F.col("cosine").desc(), F.col("cand_id")).select(
+        "query_id", F.col("rank").cast("long").alias("rank"), "cand_id", "cosine"
     )
 
 
@@ -202,22 +253,7 @@ def render_oracle(sql: str) -> str:
 def ann_topk_bruteforce(t: dict[str, DataFrame]) -> DataFrame:
     emb = _corpus(t)
     q = _queries(emb, _ann_qcap(t))
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    ).alias("cosine")
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "cand_id", "cosine")
-    )
+    return _cosine_topk(_score(emb.crossJoin(F.broadcast(q))), TOP_K)
 
 
 ANN_TOPK_BRUTEFORCE_ORACLE = f"""
@@ -270,35 +306,9 @@ def _signature(vec_col) -> F.Column:
 def ann_topk_lsh(t: dict[str, DataFrame]) -> DataFrame:
     """Top-k within the query's hyperplane-signature bucket."""
     emb = _corpus(t).withColumn("sig", _signature(F.col("v")))
-    # bounded-query contract (the _queries discipline): cap the
-    # broadcast side to the corpus-derived lowest-id query set
-    q = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_ann_qcap(t))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.col("sig").alias("qsig"),
-        )
-    )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    ).alias("cosine")
-    scored = (
-        emb.join(F.broadcast(q), emb["sig"] == q["qsig"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "cand_id", "cosine")
-    )
+    q = _queries(emb, _ann_qcap(t), *_qside(F.col("sig").alias("qsig")))
+    scored = _score(emb.join(F.broadcast(q), emb["sig"] == q["qsig"]))
+    return _cosine_topk(scored, TOP_K)
 
 
 def _lsh_oracle() -> str:
@@ -761,12 +771,7 @@ def ann_topk_vectorized(t: dict[str, DataFrame]) -> DataFrame:
 
     emb = fan_out(t["embeddings"]).select("vec_id", "embedding")
     qcap = _ann_qcap(t)
-    q_rows = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(qcap)
-        .collect()
-    )
+    q_rows = _queries(emb, qcap, "vec_id", "embedding").collect()
     assert len(q_rows) <= qcap
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
@@ -804,13 +809,7 @@ def ann_topk_vectorized(t: dict[str, DataFrame]) -> DataFrame:
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    scored = emb.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "cand_id", "cosine")
-    )
+    return _cosine_topk(emb.mapInPandas(score, schema=out_schema), TOP_K)
 
 
 # identical contract: the brute-force oracle itself now carries the
@@ -876,34 +875,9 @@ def ann_topk_ivf(t: dict[str, DataFrame]) -> DataFrame:
     emb = emb_raw.select("vec_id", to_double_array("embedding").alias("v"))
     cells = _assign_cells(emb, cent).withColumn("nrm", norm_unrolled(F.col("v"), DIM))
 
-    # bounded-query contract: cap the broadcast side to the
-    # corpus-derived lowest-id query set (oracle mirrors the cut)
-    q = (
-        cells.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_ann_qcap(t))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.col("cell").alias("qcell"),
-        )
-    )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    ).alias("cosine")
-    scored = (
-        cells.join(F.broadcast(q), cells["cell"] == q["qcell"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= N_PROBE_K)
-        .select(
-            "query_id", F.col("rank").cast("long").alias("rank"), "cand_id", "cosine"
-        )
+    q = _queries(cells, _ann_qcap(t), *_qside(F.col("cell").alias("qcell")))
+    return _cosine_topk(
+        _score(cells.join(F.broadcast(q), cells["cell"] == q["qcell"])), N_PROBE_K
     )
 
 
@@ -1118,18 +1092,11 @@ def ann_topk_ivfpq(t: dict[str, DataFrame]) -> DataFrame:
     # probe list: each query's N_PROBE nearest coarse centroids (same
     # rounded euclidean + label tie-break as assignment, so probe
     # rank 1 IS the query's own cell)
-    cdist = F.round(
-        F.aggregate(
-            F.zip_with("v", "cv", lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    cdist = _cell_dist()
     # bounded-query contract: one capped id list bounds BOTH
     # query-derived broadcasts below (the probe list and the ADC
     # tables); oracle mirrors the cut in its probe and qtab CTEs
-    qids = _qcap_ids(emb, _ann_qcap(t))
+    qids = _queries(emb, _ann_qcap(t), "vec_id")
     qd = (
         emb.join(F.broadcast(qids), "vec_id")
         .crossJoin(F.broadcast(cent.select(F.col("label").alias("cell"), "cv")))
@@ -1137,11 +1104,8 @@ def ann_topk_ivfpq(t: dict[str, DataFrame]) -> DataFrame:
             F.col("vec_id").alias("query_id"), "cell", cdist.alias("cdist")
         )
     )
-    wp = Window.partitionBy("query_id").orderBy(F.col("cdist"), F.col("cell"))
-    probed = (
-        qd.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= N_PROBE)
-        .select("query_id", "cell")
+    probed = _top_k(qd, N_PROBE, F.col("cdist"), F.col("cell"), rank="rn").select(
+        "query_id", "cell"
     )
     cand = (
         cells.join(F.broadcast(probed), "cell")
@@ -1192,17 +1156,7 @@ def ann_topk_ivfpq(t: dict[str, DataFrame]) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.round(F.sqrt(F.sum("qdist").cast("double")), 6).alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("vec_id").alias("cand_id"),
-            "adc",
-        )
-    )
+    return _rpq_rank(adc)
 
 
 ANN_TOPK_IVFPQ_ORACLE = f"""
@@ -1393,15 +1347,8 @@ def _rpq_adc(
     other cells were probed): :func:`ivfpq_design_table` scores the
     max-probe superset once per codebook and derives every smaller
     probe budget by the filter instead of re-running this chain."""
-    qids = _qcap_ids(emb, qcap)
-    cdist = F.round(
-        F.aggregate(
-            F.zip_with("v", "cv", lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    qids = _queries(emb, qcap, "vec_id")
+    cdist = _cell_dist()
     qd = (
         emb.join(F.broadcast(qids), "vec_id")
         .crossJoin(F.broadcast(cent))
@@ -1412,11 +1359,8 @@ def _rpq_adc(
             F.zip_with("v", "cv", lambda x, c: x - c).alias("qr"),
         )
     )
-    wp = Window.partitionBy("query_id").orderBy(F.col("cdist"), F.col("cell"))
-    probed = (
-        qd.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "cell", "qr", "rn")
+    probed = _top_k(qd, n_probe, F.col("cdist"), F.col("cell"), rank="rn").select(
+        "query_id", "cell", "qr", "rn"
     )
     qrsub = probed.select(
         "query_id",
@@ -1459,33 +1403,30 @@ def _rpq_adc(
     )
 
 
-def _rpq_rank(adc: DataFrame) -> DataFrame:
-    """Rank an ADC candidate frame to the top-k output contract."""
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("vec_id").alias("cand_id"),
-            "adc",
-        )
+def _cell_dist() -> F.Column:
+    """``round(Σ (v − cv)², 6)``: a query row's squared euclidean
+    distance to a coarse centroid ``cv`` — the probe order of IVF-PQ
+    and residual IVF-PQ."""
+    return F.round(
+        F.aggregate(
+            F.zip_with("v", "cv", lambda x, c: (x - c) * (x - c)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
     )
 
 
-def _rpq_topk(
-    emb: DataFrame,
-    cent: DataFrame,
-    cells: DataFrame,
-    cb1: DataFrame,
-    codes: DataFrame,
-    n_probe: int,
-    qcap: int,
-) -> DataFrame:
-    """Query side of the residual pipeline: probe ``n_probe`` coarse
-    cells, score their codes (:func:`_rpq_adc`), rank top-k."""
-    return _rpq_rank(_rpq_adc(emb, cent, cells, cb1, codes, n_probe, qcap))
+def _rpq_rank(adc: DataFrame) -> DataFrame:
+    """The top-k output contract ``(query_id, rank, cand_id, adc)`` of
+    an ADC candidate frame ``(query_id, vec_id, adc)``, ranked
+    ``(adc ASC, vec_id)`` — shared by PQ, IVF-PQ and residual IVF-PQ."""
+    return _top_k(adc, TOP_K, F.col("adc").asc(), F.col("vec_id")).select(
+        "query_id",
+        F.col("rank").cast("long").alias("rank"),
+        F.col("vec_id").alias("cand_id"),
+        "adc",
+    )
 
 
 def ann_topk_ivfpq_residual(
@@ -1523,7 +1464,7 @@ def ann_topk_ivfpq_residual(
     ``n_probe`` / ``rpq_k`` parameterize the probe budget and residual
     codebook size (defaults: module constants); the body is three
     composable stages (:func:`_rpq_shared` → :func:`_rpq_codebook` →
-    :func:`_rpq_topk`) so :func:`ivfpq_design_table` can measure the
+    :func:`_rpq_adc` + :func:`_rpq_rank`) so :func:`ivfpq_design_table` can measure the
     deploy grid sharing the grid-independent stages, with the
     production pipeline itself — never a reimplementation.
     """
@@ -1531,7 +1472,7 @@ def ann_topk_ivfpq_residual(
     rpq_k = rpq_k or RPQ_K
     emb, cent, cells, rsub = _rpq_shared(t)
     cb1, codes = _rpq_codebook(rsub, rpq_k)
-    return _rpq_topk(emb, cent, cells, cb1, codes, n_probe, _ann_qcap(t))
+    return _rpq_rank(_rpq_adc(emb, cent, cells, cb1, codes, n_probe, _ann_qcap(t)))
 
 
 def _ivfpq_residual_oracle(n_probe: int, rpq_k: int) -> str:
@@ -1783,7 +1724,7 @@ def ivfpq_design_table(t: dict[str, DataFrame]) -> DataFrame:
     compute ONCE (localCheckpoint) and every leg reuses them; each
     codebook size trains once (:func:`_rpq_codebook`) and its probe
     legs share the codes; every leg is the PRODUCTION pipeline's own
-    query stage (:func:`_rpq_topk`) — never a reimplementation — and
+    query stage (:func:`_rpq_adc` + :func:`_rpq_rank`) — never a reimplementation — and
     reduces to one recall row, so the output is |grid| rows regardless
     of corpus size.  Recall is monotone nondecreasing in n_probe at
     fixed codebook size (more probed cells only ADD candidates), an
@@ -1965,15 +1906,12 @@ def jl_project(t: dict[str, DataFrame]) -> DataFrame:
         .select("vec_id", F.transform("s", lambda s: s["y"]).alias("p"))
     )
     base = emb.join(parr, "vec_id")
-    q = (
-        base.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_ann_qcap(t))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("p").alias("qp"),
-        )
+    q = _queries(
+        base,
+        _ann_qcap(t),
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("p").alias("qp"),
     )
 
     def sqdist(a, b):
@@ -2426,7 +2364,7 @@ def ann_topk_pq(t: dict[str, DataFrame]) -> DataFrame:
     # query's (subspace, codeword) → distance table pivots into ONE
     # map column, M·K entries
     qmaps = (
-        scored.join(F.broadcast(_qcap_ids(emb, _ann_qcap(t))), "vec_id")
+        scored.join(F.broadcast(_queries(emb, _ann_qcap(t), "vec_id")), "vec_id")
         .groupBy(F.col("vec_id").alias("query_id"))
         .agg(
             F.map_from_entries(
@@ -2490,17 +2428,7 @@ def ann_topk_pq(t: dict[str, DataFrame]) -> DataFrame:
         .select("query_id", "adc", F.explode("vids").alias("vec_id"))
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("vec_id").alias("cand_id"),
-            "adc",
-        )
-    )
+    return _rpq_rank(cand)
 
 
 ANN_TOPK_PQ_ORACLE = f"""
@@ -2663,12 +2591,9 @@ def cosine_sim_histogram(t: dict[str, DataFrame]) -> DataFrame:
     """
     emb = _corpus(t)
     q = _queries(emb, _ann_qcap(t))
-    # round(6) BEFORE binning: the two engines sum the dot product in
-    # different orders, and the rounding collapses that last-ulp noise
-    # so a boundary-adjacent cosine can't land in different bins.
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    )
+    # round(6) BEFORE binning (_cosine): a boundary-adjacent cosine
+    # can't land in different bins on the two engines
+    cos = _cosine()
     binned = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -2756,22 +2681,13 @@ def hybrid_search(t: dict[str, DataFrame]) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    ).alias("cosine")
-    sem_scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w_sem = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    sem = (
-        sem_scored.withColumn("sem_rank", F.row_number().over(w_sem))
-        .filter(F.col("sem_rank") <= BM25_TOP_K)
-        .select("query_id", "cand_id", "sem_rank")
-    )
+    sem = _top_k(
+        _score(emb.crossJoin(F.broadcast(q))),
+        BM25_TOP_K,
+        F.col("cosine").desc(),
+        F.col("cand_id"),
+        rank="sem_rank",
+    ).select("query_id", "cand_id", "sem_rank")
     fused = lex.join(sem, ["query_id", "cand_id"], "full_outer").select(
         "query_id",
         "cand_id",
@@ -2784,12 +2700,8 @@ def hybrid_search(t: dict[str, DataFrame]) -> DataFrame:
             )
         ).alias("rrf"),
     )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.col("rrf").desc(), F.col("cand_id")
-    )
     return (
-        fused.withColumn("rank", F.row_number().over(w_f))
-        .filter(F.col("rank") <= HYBRID_TOP_K)
+        _top_k(fused, HYBRID_TOP_K, F.col("rrf").desc(), F.col("cand_id"))
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -3041,22 +2953,12 @@ def sq_recall(t: dict[str, DataFrame]) -> DataFrame:
         _queries(_corpus(t), _ann_qcap(t))  # bounded: ≤ cap × DIM doubles
         .localCheckpoint(eager=False)  # feeds approx AND the truth cut
     )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")), 6
-    ).alias("cosine")
-    scored = (
-        recon.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    approx = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id")
-    )
+    approx = _top_k(
+        _score(recon.crossJoin(F.broadcast(q))),
+        TOP_K,
+        F.col("cosine").desc(),
+        F.col("cand_id"),
+    ).select("query_id", "cand_id")
     truth = (
         _bf_truth(t)
         .join(F.broadcast(q.select("query_id")), "query_id", "left_semi")
@@ -3243,33 +3145,13 @@ def _truncated_topk(t: dict[str, DataFrame], d: int, qcap: int) -> DataFrame:
         "vec_id", F.slice(to_double_array("embedding"), 1, d).alias("v")
     )
     emb = emb.withColumn("nrm", norm_unrolled(F.col("v"), d))
-    q = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(qcap)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), d) / (F.col("qn") * F.col("nrm")),
-        6,
-    ).alias("cosine")
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id")
-    )
+    q = _queries(emb, qcap)
+    return _top_k(
+        _score(emb.crossJoin(F.broadcast(q)), d),
+        TOP_K,
+        F.col("cosine").desc(),
+        F.col("cand_id"),
+    ).select("query_id", "cand_id")
 
 
 def mrl_recall_curve(t: dict[str, DataFrame]) -> DataFrame:
@@ -3342,15 +3224,12 @@ def mrl_recall_curve(t: dict[str, DataFrame]) -> DataFrame:
             for d in red
         ],
     )
-    q = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(qcap)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            *[F.col(f"nrm{d}").alias(f"qn{d}") for d in red],
-        )
+    q = _queries(
+        emb,
+        qcap,
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        *[F.col(f"nrm{d}").alias(f"qn{d}") for d in red],
     )
     scored = (
         emb.crossJoin(F.broadcast(q))
@@ -3550,34 +3429,24 @@ def ann_topk_mrl(t: dict[str, DataFrame]) -> DataFrame:
     emb = _corpus(t).withColumn(
         "pv", F.slice(F.col("v"), 1, d)
     ).withColumn("pn", norm_unrolled(F.col("pv"), d))
-    q = (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_ann_qcap(t))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.col("pv").alias("qpv"),
-            F.col("pn").alias("qpn"),
-        )
-        .localCheckpoint(eager=False)  # feeds shortlist AND rerank
-    )
+    q = _queries(
+        emb,
+        _ann_qcap(t),
+        *_qside(F.col("pv").alias("qpv"), F.col("pn").alias("qpn")),
+    ).localCheckpoint(eager=False)  # feeds shortlist AND rerank
     p_cos = F.round(
         dot_unrolled(F.col("qpv"), F.col("pv"), d) / (F.col("qpn") * F.col("pn")),
         6,
     ).alias("p_cos")
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("p_cos").desc(), F.col("cand_id")
-    )
-    short = (
+    short = _top_k(
         emb.crossJoin(F.broadcast(q.select("query_id", "qpv", "qpn")))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), p_cos)
-        .withColumn("prank", F.row_number().over(pw))
-        .filter(F.col("prank") <= MRL_SHORTLIST_N)
-        .select("query_id", "cand_id")
-    )
+        .select("query_id", F.col("vec_id").alias("cand_id"), p_cos),
+        MRL_SHORTLIST_N,
+        F.col("p_cos").desc(),
+        F.col("cand_id"),
+        rank="prank",
+    ).select("query_id", "cand_id")
     # full-dimension rerank AFTER the shortlist cut: SHORTLIST_N rows
     # per query, constant in corpus size — vectors join back HERE
     cand_v = _corpus(t).select(
@@ -3585,25 +3454,11 @@ def ann_topk_mrl(t: dict[str, DataFrame]) -> DataFrame:
         F.col("v"),
         F.col("nrm"),
     )
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")),
-        6,
-    ).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
+    return _cosine_topk(
         short.join(cand_v, "cand_id")
         .join(F.broadcast(q.select("query_id", "qv", "qn")), "query_id")
-        .select("query_id", "cand_id", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cand_id",
-            "cosine",
-        )
+        .select("query_id", "cand_id", _cosine().alias("cosine")),
+        TOP_K,
     )
 
 
@@ -3894,28 +3749,21 @@ def hard_negative_mining(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def _hard_neg_queries(emb: DataFrame, qcap: int) -> DataFrame:
-    """(query_id, q_label, qv, qn): the ``qcap`` lowest ``% QUERY_MOD``
-    anchors of ``emb`` (vec_id, label, v, nrm)."""
-    return (
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(qcap)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("q_label"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
+    """(query_id, q_label, qv, qn): the :func:`_queries` anchors of
+    ``emb`` (vec_id, label, v, nrm)."""
+    return _queries(
+        emb,
+        qcap,
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("q_label"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
     )
 
 
 def _hard_neg_scores(cands: DataFrame, q: DataFrame) -> DataFrame:
     """Cosine of every cross-label (anchor, candidate) pair: ``cands``
     (vec_id, label, v, nrm) against the broadcast anchors ``q``."""
-    cos = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")),
-        6,
-    ).alias("cosine")
     return (
         cands.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("q_label"))
@@ -3924,7 +3772,7 @@ def _hard_neg_scores(cands: DataFrame, q: DataFrame) -> DataFrame:
             "q_label",
             F.col("vec_id").alias("cand_id"),
             F.col("label").alias("neg_label"),
-            cos,
+            _cosine().alias("cosine"),
         )
     )
 
@@ -3933,12 +3781,8 @@ def _top_negatives(scored: DataFrame) -> DataFrame:
     """The ``TOP_K`` highest-cosine negatives per anchor — the finish of
     :func:`hard_negative_mining` and of each ``stream_hard_negatives``
     snapshot."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _top_k(scored, TOP_K, F.col("cosine").desc(), F.col("cand_id"))
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -4105,19 +3949,14 @@ def _mmr_pool_pairs_uncached(
 ) -> tuple[DataFrame, DataFrame]:
     emb = _corpus(t)
     q = _queries(emb, _ann_qcap(t))
-    rel_c = F.round(
-        dot_unrolled(F.col("qv"), F.col("v"), DIM) / (F.col("qn") * F.col("nrm")),
-        6,
-    ).alias("rel")
-    w_rel = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("cand_id")
-    )
     pool = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"), rel_c)
-        .withColumn("rn", F.row_number().over(w_rel))
-        .filter(F.col("rn") <= MMR_POOL)
+        _top_k(
+            _score(emb.crossJoin(F.broadcast(q)), name="rel"),
+            MMR_POOL,
+            F.col("rel").desc(),
+            F.col("cand_id"),
+            rank="rn",
+        )
         .select("query_id", "cand_id", "rel")
         .localCheckpoint(eager=False)
     )
@@ -4472,15 +4311,11 @@ def mmr_diversity_gain(t: dict[str, DataFrame]) -> DataFrame:
     gate itself aggregates |Q|·K pick rows and |Q|·K² pair rows.
     """
     pool, pairs = _mmr_pool_pairs(t)
-    w_rel = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("cand_id")
-    )
     # both pick frames are referenced twice (rel mean + pairsim) and
     # mmr's plan is the whole MMR_K-round greedy loop — checkpoint the
     # ≤ |Q|·K rows once instead of re-running the loop per reference
     top = (
-        pool.withColumn("rn", F.row_number().over(w_rel))
-        .filter(F.col("rn") <= MMR_K)
+        _top_k(pool, MMR_K, F.col("rel").desc(), F.col("cand_id"), rank="rn")
         .select("query_id", "cand_id", "rel")
         .localCheckpoint(eager=False)
     )

@@ -2218,9 +2218,7 @@ def stream_hamming_neighbors(
     including re-ingested ids.  Returns the latest committed snapshot.
     """
     from ..operators.dedup import (
-        HAMMING_CHUNKS,
-        HAMMING_QUERY_CAP,
-        QUERY_MOD,
+        _hamming_query_codes,
         _mih_radius_pairs,
         _simhash64_codes,
     )
@@ -2236,16 +2234,7 @@ def stream_hamming_neighbors(
             .localCheckpoint(eager=False)
         )
         all_codes = new.unionByName(old)
-        q = (
-            all_codes.filter(F.col("doc_id") % QUERY_MOD == 0)
-            .orderBy("doc_id")
-            .limit(HAMMING_QUERY_CAP)
-            .select(
-                F.col("doc_id").alias("query_id"),
-                *[F.col(f"c{c}").alias(f"q{c}") for c in range(HAMMING_CHUNKS)],
-            )
-            .localCheckpoint(eager=False)
-        )
+        q = _hamming_query_codes(all_codes).localCheckpoint(eager=False)
         prev_qids = _read_committed(
             spark, root, "qids", _HM_QID_SCHEMA, latest=True
         )

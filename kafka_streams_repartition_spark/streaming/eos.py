@@ -17,26 +17,37 @@ commit** — rather than imitating broker transactions:
    batch either sees its own completed commit and skips, or redoes the
    whole effect from scratch.
 
+Both sinks commit through the same protocol as every persisted
+streaming face (``streaming/snapshot.py``): ``_CURRENT`` names the last
+committed batch id and is written tmp-then-rename, and ``_RUN_ID``
+records the streaming query that the committed batches came from; a
+sink reads that id from the batch's own Spark context.  A batch at or
+below ``_CURRENT`` is a replay and is skipped.  A recreated checkpoint
+restarts batch ids at 0, and skipping those would silently drop its
+data, so when the running query's id differs from ``_RUN_ID`` the sink
+RAISES instead.
+
 Two deployable sinks:
 
 - :func:`transactional_dir_sink` — files: stage to a hidden temp dir,
-  ``rename`` to ``batch=<id>`` as the single commit point.  A crash at
-  ANY point (mid-write, post-write-pre-rename, post-rename-pre-ack)
-  yields no duplicate and no torn output on restart.  This is the same
-  idea as Spark's own file-sink manifest, generalized to any directory
-  layout.
-- :func:`exactly_once_kafka_sink` — Kafka: per-batch produce prefixed
-  by a ledger check.  A fully-committed batch is never re-produced
-  (skip on replay); a partially-produced batch IS re-sent, so every
-  record carries a deterministic idempotence key
+  ``rename`` to ``batch=<id>``, then move ``_CURRENT``.  A crash at
+  ANY point (mid-write, post-write-pre-rename, post-rename-pre-commit,
+  post-commit-pre-ack) yields no duplicate and no torn output on
+  restart, and a glob reader of ``batch=*`` never sees a half-written
+  batch.  This is the same idea as Spark's own file-sink manifest,
+  generalized to any directory layout.
+- :func:`exactly_once_kafka_sink` — Kafka: per-batch produce gated by
+  the same commit pointer.  A fully-committed batch is never
+  re-produced (skip on replay); a partially-produced batch IS re-sent,
+  so every record carries a deterministic idempotence key
   (:func:`with_idempotence_key`) that lets compacted topics or
   consumer-side dedup collapse the rare replay — "effectively once",
   the strongest guarantee available without broker transactions, which
   the Spark Kafka sink does not expose.
 
-At 100 TB both sinks add ONE driver-side ledger probe per micro-batch
-(no per-row overhead, no shuffle); the idempotence key is a map-side
-column expression.
+At 100 TB both sinks add a few driver-side file reads and one pointer
+write per micro-batch (no per-row overhead, no shuffle); the
+idempotence key is a map-side column expression.
 """
 
 from __future__ import annotations
@@ -48,24 +59,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LEDGER_DIR = "_eos_ledger"
+from .snapshot import _apply_once, _batch_query_id, _stored_run
 
-
-def committed_batches(out_dir: str) -> set[int]:
-    """Batch ids whose effects are fully committed at ``out_dir``."""
-    ledger = os.path.join(out_dir, LEDGER_DIR)
-    if not os.path.isdir(ledger):
-        return set()
-    return {int(f) for f in os.listdir(ledger) if f.isdigit()}
-
-
-def _mark_committed(out_dir: str, batch_id: int) -> None:
-    ledger = os.path.join(out_dir, LEDGER_DIR)
-    os.makedirs(ledger, exist_ok=True)
-    tmp = os.path.join(ledger, f".{batch_id}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write("committed")
-    os.rename(tmp, os.path.join(ledger, str(batch_id)))  # atomic on POSIX
+_WHAT = "EOS sink output"
+_PAIRING = (
+    "the committed batches. checkpoint_dir and output dir must live and "
+    "die as a pair — restore the original checkpoint, or write the new "
+    "query to a fresh output dir."
+)
 
 
 def with_idempotence_key(batch_df: DataFrame, batch_id: int) -> DataFrame:
@@ -100,59 +101,49 @@ def transactional_dir_sink(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink with exactly-once file effects.
 
-    Protocol per micro-batch: (1) replayed-and-committed? skip;
-    (2) write to ``.staging-<id>`` (crash here leaves only garbage that
-    the next attempt overwrites); (3) ``rename`` staging →
-    ``batch=<id>`` — the atomic commit point; (4) write the ledger
-    marker (crash between 3 and 4 is healed by treating an existing
-    batch dir as committed).  Readers see either none or all of a
-    batch, never a torn write.
+    Protocol per micro-batch: (1) replayed-and-committed? skip — or
+    raise when the running query is not the one that committed the
+    batches; (2) write to ``.staging-<id>`` (crash here leaves only
+    garbage that the next attempt overwrites); (3) ``rename`` staging →
+    ``batch=<id>``; (4) move ``_CURRENT`` to ``<id>`` — the commit
+    point.  A ``batch=<id>`` past the pointer left by the same query (a
+    crash between (3) and (4)) is complete, since the rename is atomic,
+    and readers may already see it: the replay keeps it and only moves
+    the pointer.  Readers see either none or all of a batch, never a
+    torn write.
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        final = os.path.join(out_dir, f"batch={batch_id}")
-        if batch_id in committed_batches(out_dir) or os.path.isdir(final):
-            if not os.path.isfile(
-                os.path.join(out_dir, LEDGER_DIR, str(batch_id))
-            ):
-                _mark_committed(out_dir, batch_id)  # heal 3-before-4 crash
-            return
-        staging = os.path.join(out_dir, f".staging-{batch_id}")
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)  # debris from a mid-write crash
-        batch_df.write.mode("overwrite").format(fmt).save(staging)
-        os.rename(staging, final)
-        _mark_committed(out_dir, batch_id)
+        qid = _batch_query_id(batch_df)
+        renamed_by_this_query = _stored_run(out_dir) == qid
+
+        def publish() -> None:
+            final = os.path.join(out_dir, f"batch={batch_id}")
+            if os.path.isdir(final):
+                if renamed_by_this_query:
+                    return  # renamed, never committed: replayed rows
+                shutil.rmtree(final)  # another query's uncommitted batch
+            staging = os.path.join(out_dir, f".staging-{batch_id}")
+            if os.path.isdir(staging):
+                shutil.rmtree(staging)  # debris from a mid-write crash
+            batch_df.write.mode("overwrite").format(fmt).save(staging)
+            os.rename(staging, final)
+
+        _apply_once(out_dir, qid, batch_id, _WHAT, _PAIRING, publish)
 
     return sink
-
-
-def exactly_once_dir_query(
-    df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    mode: str = "append",
-    available_now: bool = True,
-):
-    """Wire ``df`` to :func:`transactional_dir_sink` and start it."""
-    writer = (
-        df.writeStream.foreachBatch(transactional_dir_sink(out_dir))
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def exactly_once_kafka_sink(
     bootstrap: str,
     topic: str,
     key_col: str,
-    ledger_dir: str,
+    commit_dir: str,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink producing to Kafka with ledger-skip + per-record
-    idempotence keys (carried as the Kafka header ``eos_key``).
+    """foreachBatch sink producing to Kafka, gated by the commit
+    pointer at ``commit_dir`` (``snapshot.snapshot_version`` reads it), with
+    per-record idempotence keys (carried as the Kafka header
+    ``eos_key``).
 
     Guarantee ladder, honestly stated: fully-committed batches are never
     re-produced; a batch that crashed mid-produce is re-sent whole, and
@@ -162,27 +153,28 @@ def exactly_once_kafka_sink(
     (``Producer.java:110-127``), which Spark's sink cannot open.
     """
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batches(ledger_dir):
-            return
-        keyed = with_idempotence_key(batch_df, batch_id)
-        payload = [c for c in batch_df.columns if c != key_col]
-        records = keyed.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.to_json(F.struct(*payload)).alias("value"),
-            F.array(
-                F.struct(
-                    F.lit("eos_key").alias("key"),
-                    F.col("eos_key").cast("binary").alias("value"),
-                )
-            ).alias("headers"),
-        )
-        (
-            records.write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", topic)
-            .option("includeHeaders", "true")
-            .save()
-        )
-        _mark_committed(ledger_dir, batch_id)
+        def produce() -> None:
+            keyed = with_idempotence_key(batch_df, batch_id)
+            payload = [c for c in batch_df.columns if c != key_col]
+            records = keyed.select(
+                F.col(key_col).cast("string").alias("key"),
+                F.to_json(F.struct(*payload)).alias("value"),
+                F.array(
+                    F.struct(
+                        F.lit("eos_key").alias("key"),
+                        F.col("eos_key").cast("binary").alias("value"),
+                    )
+                ).alias("headers"),
+            )
+            (
+                records.write.format("kafka")
+                .option("kafka.bootstrap.servers", bootstrap)
+                .option("topic", topic)
+                .option("includeHeaders", "true")
+                .save()
+            )
+
+        qid = _batch_query_id(batch_df)
+        _apply_once(commit_dir, qid, batch_id, _WHAT, _PAIRING, produce)
 
     return sink

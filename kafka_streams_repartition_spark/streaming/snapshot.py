@@ -5,7 +5,7 @@ loop, and the streaming face of ``operators.relational.cdc_apply``).
 Layout: ``root/version=<batch_id>/`` parquet per applied batch, plus a
 ``_CURRENT`` pointer file whose CONTENT names the committed version.
 The pointer is written tmp-then-rename — the single atomic commit
-point (same discipline as ``streaming/eos.py``):
+point (the ``streaming/eos.py`` sinks commit the same way):
 
 - crash mid-write → ``_CURRENT`` still names the old version; readers
   never see a torn table; the replayed batch overwrites the orphan dir.
@@ -32,7 +32,8 @@ the ``_CURRENT`` commit, the prune of superseded cumulative tables,
 the ``on_batch`` hook, and the ``foreachBatch`` → ``availableNow``
 drain.  A face supplies only ``step(batch_df, batch_id) -> {sub: frame}``
 (``maintain_snapshot``'s step returns ``{"": snapshot}``, so the
-snapshot lands in ``version=<id>/`` itself).
+snapshot lands in ``version=<id>/`` itself).  Guard, effect and commit
+are :func:`_apply_once`, which the ``streaming/eos.py`` sinks call too.
 
 A face reads committed state only through :func:`_read_committed`.
 Committed state is never absent: before the first commit the read is
@@ -189,9 +190,28 @@ def _prune_superseded(root: str, sub: str) -> None:
                 shutil.rmtree(p)
 
 
+def _batch_query_id(batch_df: DataFrame) -> str | None:
+    """The id of the streaming query running a ``foreachBatch`` call —
+    the same id :func:`_checkpoint_query_id` reads from the checkpoint,
+    which Spark sets as a local property on the thread that runs the
+    batch.  None outside a streaming query."""
+    return batch_df.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId"
+    )
+
+
+def _stored_run(root: str) -> str | None:
+    """The query id recorded beside ``_CURRENT``, or None."""
+    try:
+        with open(os.path.join(root, _RUN)) as fh:
+            return fh.read().strip() or None
+    except FileNotFoundError:
+        return None
+
+
 def _begin_batch(
     root: str,
-    checkpoint_dir: str,
+    qid: str | None,
     batch_id: int,
     what: str,
     pairing: str,
@@ -205,30 +225,45 @@ def _begin_batch(
     lost/recreated checkpoint restarts batch ids at 0, and silently
     skipping those would freeze the state forever.  The query id
     recorded beside _CURRENT is that lineage; mismatch fails LOUDLY."""
-    qid = _checkpoint_query_id(checkpoint_dir)
-    run_path = os.path.join(root, _RUN)
-    stored = None
-    try:
-        with open(run_path) as fh:
-            stored = fh.read().strip() or None
-    except FileNotFoundError:
-        pass
+    stored = _stored_run(root)
     current = snapshot_version(root)
     if current is not None and stored is not None and qid != stored:
         raise RuntimeError(
             f"{what} at {root} was built by streaming query {stored} but "
-            f"this checkpoint ({checkpoint_dir}) is query {qid}: its batch "
-            f"ids do not line up with {pairing}"
+            f"this batch comes from query {qid}: its batch ids do not "
+            f"line up with {pairing}"
         )
     if (stored is None or current is None) and qid is not None:
         # adopt this checkpoint's identity: first fold ever, or a root
         # with no committed batch yet (nothing to protect)
-        _write_atomic(run_path, qid)
+        _write_atomic(os.path.join(root, _RUN), qid)
     return not (current is not None and current >= batch_id)
 
 
 def _commit_batch(root: str, batch_id: int) -> None:
     _write_atomic(os.path.join(root, _POINTER), str(batch_id))
+
+
+def _apply_once(
+    root: str,
+    qid: str | None,
+    batch_id: int,
+    what: str,
+    pairing: str,
+    effect: Callable[[], None],
+) -> bool:
+    """Apply micro-batch ``batch_id`` of streaming query ``qid`` to
+    ``root`` exactly once: the run-identity guard and replay skip
+    (:func:`_begin_batch`), ``effect()``, then the atomic ``_CURRENT``
+    commit.  False when the batch is a replay that already committed.
+    The one commit protocol of :func:`_fold_committed` and the
+    ``streaming/eos.py`` sinks."""
+    os.makedirs(root, exist_ok=True)
+    if not _begin_batch(root, qid, batch_id, what, pairing):
+        return False
+    effect()
+    _commit_batch(root, batch_id)
+    return True
 
 
 def _fold_committed(
@@ -254,12 +289,14 @@ def _fold_committed(
     os.makedirs(root, exist_ok=True)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not _begin_batch(root, checkpoint_dir, batch_id, what, pairing):
+        def write() -> None:
+            out = os.path.join(root, f"{prefix}={batch_id}")
+            for sub, frame in step(batch_df, batch_id).items():
+                frame.write.mode("overwrite").parquet(os.path.join(out, sub))
+
+        qid = _checkpoint_query_id(checkpoint_dir)
+        if not _apply_once(root, qid, batch_id, what, pairing, write):
             return  # replayed batch: every table already committed
-        out = os.path.join(root, f"{prefix}={batch_id}")
-        for sub, frame in step(batch_df, batch_id).items():
-            frame.write.mode("overwrite").parquet(os.path.join(out, sub))
-        _commit_batch(root, batch_id)
         for sub in prune:
             _prune_superseded(root, sub)
         if on_batch is not None:

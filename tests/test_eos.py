@@ -11,11 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_repartition_spark.streaming.eos import (
-    committed_batches,
     exactly_once_kafka_sink,
     transactional_dir_sink,
     with_idempotence_key,
 )
+from kafka_streams_repartition_spark.streaming.snapshot import snapshot_version
 
 
 @pytest.fixture()
@@ -62,7 +62,7 @@ def test_restart_replay_no_duplicate_effects(spark, tmp_path, numbered_files):
 
     with pytest.raises(Exception, match="injected crash"):
         _run(spark, numbered_files, out_dir, ckpt, crashing_sink)
-    assert committed_batches(out_dir) >= {0, 1}
+    assert snapshot_version(out_dir) == 1
 
     # Restart from the same checkpoint: batch 1 is redelivered (its
     # crash prevented Spark's own commit), later batches run fresh.
@@ -72,7 +72,7 @@ def test_restart_replay_no_duplicate_effects(spark, tmp_path, numbered_files):
         r["id"] for r in spark.read.parquet(os.path.join(out_dir, "batch=*")).collect()
     )
     assert got == list(range(40))  # each input row exactly once
-    assert committed_batches(out_dir) == {0, 1, 2, 3}
+    assert snapshot_version(out_dir) == 3
 
 
 def test_crash_before_commit_point_redoes_batch(spark, tmp_path, numbered_files):
@@ -94,7 +94,7 @@ def test_crash_before_commit_point_redoes_batch(spark, tmp_path, numbered_files)
 
     with pytest.raises(Exception, match="injected crash"):
         _run(spark, numbered_files, out_dir, ckpt, crashing_sink)
-    assert 2 not in committed_batches(out_dir)  # effect NOT visible
+    assert snapshot_version(out_dir) == 1  # effect NOT visible
 
     _run(spark, numbered_files, out_dir, ckpt, real)
     got = sorted(
@@ -102,6 +102,70 @@ def test_crash_before_commit_point_redoes_batch(spark, tmp_path, numbered_files)
     )
     assert got == list(range(40))
     assert not any(f.startswith(".staging") for f in os.listdir(out_dir))
+
+
+def test_crash_between_rename_and_commit_keeps_published_batch(
+    spark, tmp_path, numbered_files, monkeypatch
+):
+    """Crash AFTER ``batch=2`` is renamed into place but BEFORE
+    ``_CURRENT`` moves: glob readers may already see that batch, so the
+    replay keeps the same files and only commits — no batch a reader
+    saw vanishes, and every row lands exactly once."""
+    from kafka_streams_repartition_spark.streaming import snapshot
+
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    commit = snapshot._commit_batch
+
+    def crashing_commit(root, batch_id):
+        if batch_id == 2:
+            raise RuntimeError("injected crash")
+        commit(root, batch_id)
+
+    monkeypatch.setattr(snapshot, "_commit_batch", crashing_commit)
+    with pytest.raises(Exception, match="injected crash"):
+        _run(spark, numbered_files, out_dir, ckpt, transactional_dir_sink(out_dir))
+    assert snapshot_version(out_dir) == 1
+    published = os.path.join(out_dir, "batch=2")
+    files = sorted(os.listdir(published))
+
+    monkeypatch.setattr(snapshot, "_commit_batch", commit)
+    _run(spark, numbered_files, out_dir, ckpt, transactional_dir_sink(out_dir))
+    assert sorted(os.listdir(published)) == files  # kept, not rewritten
+    got = sorted(
+        r["id"] for r in spark.read.parquet(os.path.join(out_dir, "batch=*")).collect()
+    )
+    assert got == list(range(40))
+    assert snapshot_version(out_dir) == 3
+
+
+def test_recreated_checkpoint_raises_instead_of_skipping(spark, tmp_path):
+    """A second query with a fresh checkpoint restarts batch ids at 0.
+    Writing it into an output dir that already holds committed batches
+    of another query must fail loudly: skipping its batch 0 as a
+    "replay" would silently lose its rows."""
+    out_dir = str(tmp_path / "out")
+    srcs = []
+    for name, lo in (("a", 0), ("b", 100)):
+        src = str(tmp_path / name)
+        spark.range(lo, lo + 10).select(
+            F.col("id"), (F.col("id") * 2).alias("doubled")
+        ).coalesce(1).write.parquet(src)
+        srcs.append(src)
+
+    def drain(src, ck):
+        ckpt = str(tmp_path / ck)
+        _run(spark, src, out_dir, ckpt, transactional_dir_sink(out_dir))
+
+    drain(srcs[0], "ck1")
+    assert snapshot_version(out_dir) == 0
+    with pytest.raises(Exception, match="built by streaming query"):
+        drain(srcs[1], "ck2")  # fresh checkpoint: batch ids restart at 0
+    got = sorted(
+        r["id"] for r in spark.read.parquet(os.path.join(out_dir, "batch=*")).collect()
+    )
+    assert got == list(range(10))  # source A intact, nothing half-written
+    assert snapshot_version(out_dir) == 0
 
 
 def test_idempotence_key_stable_and_lineage_preferring(spark):
@@ -146,7 +210,7 @@ def test_kafka_eos_sink_skips_committed_and_builds_headers(
     monkeypatch.setattr(DataFrameWriter, "save", fake_save, raising=True)
 
     sink(batch, 0)
-    assert committed_batches(ledger) == {0}
+    assert snapshot_version(ledger) == 0
     assert len(produced) == 1
 
     sink(batch, 0)  # replay of a committed batch: no produce

@@ -669,7 +669,7 @@ def test_persisted_faces_share_one_commit_loop():
 
 # distinct code windows allowed to occur in two or more places in the
 # package: lower it when a copy folds into a shared helper, never raise it
-COPIED_WINDOW_BOUND = 60
+COPIED_WINDOW_BOUND = 26
 
 
 def _package_code_lines(src: str) -> list[tuple[int, str]]:
@@ -735,6 +735,51 @@ def test_no_copied_kernels():
         f"{len(copied)} copied code windows (bound {COPIED_WINDOW_BOUND}) "
         "between:\n" + "\n".join(groups)
     )
+
+
+def test_query_set_cut_lives_in_one_function():
+    """The bounded query set of every query-vs-corpus operator — the
+    ``qcap`` lowest ids of the ``% QUERY_MOD`` subset — is built only by
+    ``similarity._queries``: no other package function chains a
+    ``filter(id % m == 0)`` into a ``limit``.  (``_qsubset_n`` counts
+    the uncapped subset and takes no ``limit``.)"""
+    import ast
+    import pathlib
+
+    import kafka_streams_repartition_spark as pkg
+
+    def mod_filter(call: ast.Call) -> bool:
+        return any(
+            isinstance(n, ast.BinOp) and isinstance(n.op, ast.Mod)
+            for a in call.args
+            for n in ast.walk(a)
+        )
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        owner = {}  # line -> innermost enclosing function
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for fn in sorted(funcs, key=lambda n: n.lineno - n.end_lineno):
+            for ln in range(fn.lineno, fn.end_lineno + 1):
+                owner[ln] = fn.name
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "limit"
+            ):
+                continue
+            recv = node.func.value
+            while isinstance(recv, ast.Call) and isinstance(recv.func, ast.Attribute):
+                if recv.func.attr == "filter" and mod_filter(recv):
+                    fn = owner.get(node.lineno, "<module>")
+                    if fn != "_queries":
+                        sites.append(f"{path.relative_to(root)}:{node.lineno} {fn}")
+                    break
+                recv = recv.func.value
+    assert not sites, "capped query set built outside _queries:\n" + "\n".join(sites)
 
 
 def test_kmeans_producer_has_no_package_callers():
@@ -2401,13 +2446,13 @@ def test_dot_literal_bit_equals_array_form(spark):
 def test_rpq_probe_superset_filter_equals_direct_topk(t):
     """ivfpq_design_table's probe-superset sharing is exact: ranking
     the max-probe ADC frame filtered to prn <= p equals running the
-    production pipeline (_rpq_topk) directly at n_probe = p."""
+    production pipeline (ann_topk_ivfpq_residual) directly at n_probe = p."""
     emb, cent, cells, rsub = sim._rpq_shared(t)
     cb1, codes = sim._rpq_codebook(rsub, 8)
     qcap = sim._ann_qcap(t)
     adc4 = sim._rpq_adc(emb, cent, cells, cb1, codes, 4, qcap)
     for p in (1, 2):
-        want = _rows(sim._rpq_topk(emb, cent, cells, cb1, codes, p, qcap))
+        want = _rows(sim.ann_topk_ivfpq_residual(t, n_probe=p, rpq_k=8))
         got = _rows(sim._rpq_rank(adc4.filter(F.col("prn") <= p)))
         assert got == want, f"n_probe={p} superset cut diverged"
 
